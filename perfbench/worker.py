@@ -7,12 +7,15 @@ the workload once, cold: ``registry.release_caches`` follows each key,
 so the next pass recomputes every persisted subtree.  The seed only
 permutes key order within each pass.
 
-Passes: the first (JVM, JIT and code caches cold), then timed passes
-until ``--seconds`` of them have elapsed (at least one).  A traced run
-wraps each call into the program in a span, sets a Spark job group per
-span, forces planning through ``queryExecution().executedPlan()``,
-reads each final plan's shape, and adds one untraced pass at the end
-to measure the tracing overhead.  Every collected result is checked
+Passes: the first (JVM, JIT and code caches cold), then warm passes
+while the passes so far have taken less than ``--seconds``.  Each pass
+records its wall time and its CPU time: the CPU the whole Spark process
+(this process, its JVM and the JVM's Python workers) spends on it, less
+this process's CPU for the oracle checks.  A traced run wraps each call
+into the program in a span, sets a Spark job group per span, forces
+planning through ``queryExecution().executedPlan()``, reads each final
+plan's shape, and ends with one untraced and one traced warm pass to
+measure the tracing overhead.  Every collected result is checked
 against its oracle digest outside the timed region.
 
 Writes one JSON record to ``--out``.
@@ -27,7 +30,6 @@ import json
 import os
 import random
 import re
-import statistics
 import sys
 import time
 
@@ -83,6 +85,26 @@ def _cpu_jiffies() -> tuple[int, int]:
     return vals[7], sum(vals[:8])
 
 
+def _session_cpu_s() -> float:
+    """CPU seconds (user + system) spent so far by this process's
+    session: this process, its JVM and the JVM's Python workers, live
+    or already reaped.  Time the host steals from the vCPUs is not
+    charged to a process, so this grows far less with CPU steal than
+    wall time does."""
+    sid, ticks = os.getsid(0), 0
+    for pid in os.listdir("/proc"):
+        if not pid.isdigit():
+            continue
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # exited meanwhile; its parent's cutime has it
+            continue
+        if int(fields[3]) == sid:
+            ticks += sum(int(v) for v in fields[11:15])  # utime stime cutime cstime
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 def _vm_hwm_mb(pid) -> float:
     with open(f"/proc/{pid}/status") as f:
         for line in f:
@@ -129,6 +151,7 @@ def run(args) -> dict:
 
     spark = get_spark("perfbench")
     t_ready = time.time()
+    setup_cpu_s = _session_cpu_s()
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
 
@@ -145,8 +168,9 @@ def run(args) -> dict:
     passes: list[dict] = []
     shapes: dict[tuple[int, str], dict] = {}
 
-    def execute(tr: Tracer, p: int, key: str, pass_span) -> float:
-        """One cold execution of ``key``; returns its wall time, checking excluded."""
+    def execute(tr: Tracer, p: int, key: str, pass_span) -> tuple[float, float]:
+        """One cold execution of ``key``; returns its wall time, checking
+        excluded, and this process's CPU time spent checking."""
         rec = {"pass": p, "key": key, "family": family(reg[key].build.__module__)}
         df = rows = err = None
         with tr.span("query", pass_span, key=key) as q:
@@ -166,6 +190,7 @@ def run(args) -> dict:
             with tr.span("release", q):
                 release_caches(spark)
             wall = time.perf_counter() - t0
+        check_cpu = time.process_time()
         if err is None:
             if tr.enabled:
                 shapes[(p, key)] = _plan_shape(df, audit)
@@ -175,15 +200,17 @@ def run(args) -> dict:
         if err is not None:
             rec["reason"] = err
         executions.append(rec)
-        return wall
+        return wall, time.process_time() - check_cpu
 
     def run_pass(kind: str, tr: Tracer) -> float:
         p = len(passes)
         order = list(w.keys)
         random.Random(f"{args.seed}:{p}").shuffle(order)
         steal0, total0 = _cpu_jiffies()
+        cpu0 = _session_cpu_s()
         with tr.span("pass", None, **{"pass": p}) as ps:
-            wall = sum(execute(tr, p, k, ps) for k in order)
+            wall, check_cpu = map(sum, zip(*(execute(tr, p, k, ps) for k in order)))
+        cpu = _session_cpu_s() - cpu0 - check_cpu
         steal1, total1 = _cpu_jiffies()
         passes.append(
             {
@@ -191,6 +218,7 @@ def run(args) -> dict:
                 "kind": kind,
                 "traced": tr.enabled,
                 "wall_s": wall,
+                "cpu_s": cpu,
                 "order": order,
                 "load1": os.getloadavg()[0],
                 "steal_pct": 100.0 * (steal1 - steal0) / max(1, total1 - total0),
@@ -198,12 +226,12 @@ def run(args) -> dict:
         )
         return wall
 
-    run_pass("first", tracer)
-    timed = run_pass("timed", tracer)
-    while timed < args.seconds:
-        timed += run_pass("timed", tracer)
+    measured = run_pass("first", tracer)
+    while measured < args.seconds:
+        measured += run_pass("warm", tracer)
     if args.trace:
         run_pass("untraced", untraced)
+        run_pass("traced", tracer)
 
     rss = {"python_mb": _vm_hwm_mb("self"), "jvm_mb": _vm_hwm_mb(sc._gateway.proc.pid)}
     host = {
@@ -219,6 +247,7 @@ def run(args) -> dict:
         "workload": w.name,
         "seed": args.seed,
         "setup_s": t_ready - args.t0,
+        "setup_cpu_s": setup_cpu_s,
         "registry.load_s": t_loaded - t_start,
         "session.start_s": t_ready - t_loaded,
         "passes": passes,
@@ -233,8 +262,8 @@ def run(args) -> dict:
 
 
 def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dict:
-    """Per-layer and per-key metrics: the median over timed traced
-    passes of each pass's sum.  Job/stage/task counts split by span
+    """Per-layer and per-key metrics of the first pass, the one the
+    end-to-end pass metrics measure.  Job/stage/task counts split by span
     kind (``build.*`` for build spans, ``exec.*`` for plan, collect and
     release); task time and byte counters cover every task the pass
     ran."""
@@ -242,7 +271,6 @@ def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dic
     counts, unclaimed = eventlog.attribute(log_path, leaves)
     zero = dict.fromkeys(eventlog.COUNTERS, 0)
     fam = {e["key"]: e["family"] for e in record["executions"]}
-    timed = [p["pass"] for p in record["passes"] if p["kind"] == "timed"]
     seconds = {"plan": "plan.s", "collect": "exec.s", "release": "registry.release_s"}
 
     def pass_layers(p: int) -> dict[str, float]:
@@ -273,13 +301,11 @@ def _layers(spans: list[dict], shapes: dict, log_path: str, record: dict) -> dic
         m["exec.result_rows"] = sum(e.get("rows", 0) for e in record["executions"] if e["pass"] == p)
         return m
 
-    per_pass = [pass_layers(p) for p in timed]
-    layers = {k: statistics.median(m[k] for m in per_pass) for k in per_pass[0]}
+    layers = pass_layers(0)
     for k in ("registry.load_s", "session.start_s", "peak_rss_mb"):
         layers[k] = record[k]
     walls = {p["kind"]: p["wall_s"] for p in record["passes"]}
-    traced_wall = statistics.median(p["wall_s"] for p in record["passes"] if p["kind"] == "timed")
-    layers["trace.overhead_s"] = traced_wall - walls["untraced"]
+    layers["trace.overhead_s"] = walls["traced"] - walls["untraced"]
 
     for s in spans:
         s["counters"] = counts.get(s["id"])
