@@ -61,8 +61,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``unix_micros`` math matches DuckDB's ``epoch_us`` of the same file.
 
     r16: the returned DataFrame is MEMOIZED per (session, sf_dir,
-    name) — a lazy PLAN handle, never data (every action still reads
-    the parquet files fresh; nothing materialized survives a rebuild).
+    name) — a lazy PLAN handle, never data: every action re-reads the
+    files' contents, but the handle freezes the file listing and the
+    schema resolved on the first call.  Files added, removed or
+    re-schema'd under ``sf_dir`` later are not seen by this session
+    (use a new session, or drop ``spark._etlcnc_tables``).
     ``spark.read.parquet`` costs a driver-side footer read + schema
     resolution on every call, and the bench keys reference 1–4 tables
     per build, so the uncached path re-paid ~20–50 ms of pure

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import REGISTRY, register
+from ..registry import REGISTRY, register, reuse
 from ..utils import q4, sql_q4, tmpdir
 
 HEX_HIGH = ["8", "9", "a", "b", "c", "d", "e", "f"]
@@ -321,11 +321,10 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to ids and persist() per the SCALE.md r13 rule (the similarity
     # module's _ivf_ranked_cells pattern; kept inline here to avoid a
     # circular import)
-    ranked_cells = (
+    ranked_cells = reuse(
         vec.crossJoin(F.broadcast(cent))
         .withColumn("cell_rank", F.row_number().over(wc))
         .select("vec_id", "cent_id", "cell_rank")
-        .persist()
     )
     assign = ranked_cells.where(F.col("cell_rank") == 1).select(
         F.col("vec_id").alias("aid"), F.col("cent_id").alias("cell")
@@ -710,14 +709,13 @@ def dedup_minhash_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sig = (
+    sig = reuse(
         sh.selectExpr("doc_id", "explode(sequence(1, 16)) AS h", "sh")
         .selectExpr(
             "doc_id", "h", "md5(concat(CAST(h AS STRING), '|', sh)) AS hv"
         )
         .groupBy("doc_id", "h")
         .agg(F.expr("min(hv) AS mh"))
-        .persist()
     )
     a = sig.selectExpr("doc_id AS doc_a", "h AS ha", "mh AS mha")
     b = sig.selectExpr("doc_id AS doc_b", "h AS hb", "mh AS mhb")
@@ -934,7 +932,7 @@ def pipeline_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     words = F.size(F.split("text", " ")).cast("long")
-    base = d.select(
+    base = reuse(d.select(
         "doc_id",
         "lang",
         "source",
@@ -942,16 +940,16 @@ def pipeline_curate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         words.alias("words"),
         (F.col("n_chars").between(50, 2000) & (words >= 8)).alias("q"),
         (F.col("doc_id") % _EVAL_MOD == _EVAL_REM).alias("is_eval"),
-    ).persist()
+    ))
     train = base.where(~F.col("is_eval"))
     w_best = Window.partitionBy(F.md5("text")).orderBy(
         F.col("words").desc(), "doc_id"
     )
-    uniq = (
+    uniq = reuse(
         train.where("q")
         .withColumn("rn", F.row_number().over(w_best))
         .where(F.col("rn") == 1)
-        .select("doc_id").persist()
+        .select("doc_id")
     )
     grams = (
         base.select("doc_id", F.split("text", " ").alias("w"))
@@ -1315,8 +1313,16 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computes the identical per-digest min/max in a single shuffle
     # of the positional frame, with ONE consumer — so the join, the
     # second shuffle AND the data-scaled cache are all gone.  Each
-    # window group is one digest's occurrence list (collision-sized,
-    # bounded in practice), never a data-proportional partition.
+    # window group is one digest's occurrence list.  Skew bound: the
+    # largest group, and so the largest window task, holds every
+    # occurrence of the hottest shingle.  That is at most |docs| ×
+    # occurrences per doc, and boilerplate shared corpus-wide reaches
+    # it.  The window buffer spills past
+    # spark.sql.windowExec.buffer.spill.threshold, so a hot shingle
+    # costs one slow task, never a failure.  The fixtures' hottest
+    # digest has 3 occurrences at sf0.01 and 4 at sf0.1; a corpus with
+    # heavy boilerplate would need the digest salted, with a second
+    # min/max fold per digest.
     wsh = Window.partitionBy("sh")
     dpos = (
         sh.select(
@@ -1395,12 +1401,10 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scans before r13).  Composition stacks cache entries (the inner
     # builds persist their own intermediates — ranked cells,
     # centroids); that stacking is bounded to THIS key's lifetime:
-    # the registry's top-level cache release (registry.py
-    # _with_cache_release, ADVICE r13) drops every entry at the next
-    # build, and the depth counter keeps the inner builds from
-    # clearing mid-composition.
-    exact = REGISTRY["dedup_embedding_exact"].build(spark, sf_dir).persist()
-    ivf = REGISTRY["dedup_embedding"].build(spark, sf_dir).persist()
+    # the registry build scope releases every entry at the next
+    # top-level build, and never mid-composition.
+    exact = reuse(REGISTRY["dedup_embedding_exact"].build(spark, sf_dir))
+    ivf = reuse(REGISTRY["dedup_embedding"].build(spark, sf_dir))
     m = exact.select("vec_a", "vec_b").join(
         ivf.select("vec_a", "vec_b"), ["vec_a", "vec_b"]
     ).agg(F.count(F.lit(1)).cast("long").alias("n_matched"))
@@ -1564,7 +1568,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a range join against metadata, NOT five scans). At 100 TB the
     sweep costs the same one candidate pass the chosen-threshold
     run costs."""
-    mh = REGISTRY["dedup_minhash_relational"].build(spark, sf_dir).persist()
+    mh = REGISTRY["dedup_minhash_relational"].build(spark, sf_dir)
     taus = spark.range(0).sparkSession.createDataFrame(
         [(t,) for t in SWEEP_TAUS], "tau_bp long"
     )

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import q4, spread_scan
 
 
@@ -1002,7 +1002,7 @@ def multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated-digest set for the exact distinct-asset count. Only
     32-byte digests ever shuffle — never payload bytes."""
     p = _payloads(spark, sf_dir).select("doc_id", "payload")
-    f = p.select(
+    f = reuse(p.select(
         "doc_id",
         "payload",
         F.explode(
@@ -1021,7 +1021,7 @@ def multimodal_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fd"),
         # DATA-SCALED (one digest row per frame): persist() keeps
         # lineage so executor loss recomputes (SCALE.md r13 rule)
-    ).persist()
+    ))
     dup = (
         f.groupBy("fd")
         .agg(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import q4, sql_q4
 from .dedup import _SQL_NORM2
 from .similarity import _dot64, _norm2
@@ -164,20 +164,17 @@ def _bm25_scores(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     # lineage is kept so an executor loss RECOMPUTES the partitions
     # instead of failing the job (SCALE.md round-13 checkpoint rule);
     # reuse across the four consumers is identical.
-    base = d.selectExpr(
+    base = reuse(d.selectExpr(
         "doc_id",
         "CAST(size(ws) AS BIGINT) AS dl",
         f"array({_PER_TERM_STRUCTS}) AS terms",
-    ).persist()
+    ))
     stats = base.agg(
         F.expr("CAST(count(1) AS BIGINT) AS n_docs"),
         F.expr("CAST(sum(dl) AS DOUBLE) AS n_words"),
     ).selectExpr("n_docs", "n_words / n_docs AS avgdl")
-    tf = (
-        base.selectExpr("doc_id", "dl", "inline(terms)")
-        .where("tf > 0")
-        .persist()  # doc x matched-terms — data-scaled, same rule
-    )
+    # doc x matched-terms — data-scaled, same rule
+    tf = reuse(base.selectExpr("doc_id", "dl", "inline(terms)").where("tf > 0"))
     dfx = tf.groupBy("term").agg(F.expr("CAST(count(1) AS BIGINT) AS df"))
     scored = (
         tf.join(F.broadcast(dfx), "term")
@@ -500,7 +497,7 @@ def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm2(F.col("embedding")).alias("bn2"),
     )
     cos = _dot64(F.col("ae"), F.col("be")) / F.sqrt(F.col("an2") * F.col("bn2"))
-    scored = (
+    scored = reuse(
         F.broadcast(a)
         .join(b, F.col("anchor") != F.col("cid"))
         .select(
@@ -508,7 +505,7 @@ def embed_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cid",
             (F.col("alabel") == F.col("blabel")).alias("same"),
             cos.alias("cos"),
-        ).persist()
+        )
     )
     w = Window.partitionBy("anchor").orderBy(F.col("cos").desc(), "cid")
     pos = (

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import q4, spread_scan, sql_q4
 from .dedup import _SQL_CENT_STEP, _SQL_DOT, _SQL_NORM2, _dot64, _norm2, capped_centroids
 
@@ -103,11 +103,10 @@ def _ivf_ranked_cells(e: "DataFrame") -> "DataFrame":
     cent = capped_centroids(e)
     d2 = F.col("n2") + F.col("cn2") - 2 * _dot64(F.col("embedding"), F.col("ce"))
     wc = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
-    return (
+    return reuse(
         vec.crossJoin(F.broadcast(cent))
         .withColumn("cell_rank", F.row_number().over(wc))
         .select("vec_id", "cent_id", "cell_rank")
-        .persist()
     )
 
 
@@ -1998,7 +1997,7 @@ def embed_gram_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the fixture corpus is near-isotropic, so full separation needs
     more rounds — the loop, not the step, is the variable part)."""
     e = table(spark, sf_dir, "embeddings")
-    el = e.select(
+    el = reuse(e.select(
         "vec_id",
         F.posexplode("embedding").alias("pos", "x"),
     ).select(
@@ -2007,7 +2006,7 @@ def embed_gram_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("x").cast("double") * GPI_Q + 0.5)
         .cast("long")
         .alias("q"),
-    ).persist()
+    ))
     ea = el.select(
         "vec_id", F.col("i").alias("ai"), F.col("q").alias("aq")
     )
@@ -2405,7 +2404,7 @@ def sim_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
     # corpus norms feed round-1 scoring AND the round-2 exploded side
     # — DATA-SCALED, persist() per the SCALE.md r13 rule
-    cn = c.withColumn("cnorm", F.sqrt(_norm2(F.col("ce")))).persist()
+    cn = reuse(c.withColumn("cnorm", F.sqrt(_norm2(F.col("ce")))))
     pairs1 = F.broadcast(q).join(cn, F.col("qid") != F.col("cid"))
     score1 = (
         F.zip_with(
@@ -2773,7 +2772,7 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qn2") * F.col("cn2")
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "cid")
-    knn = (
+    knn = reuse(
         F.broadcast(q)
         .join(c, F.col("qid") != F.col("cid"))
         .select("qid", "cid", cos.alias("cos"))
@@ -2781,7 +2780,7 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persist, not checkpoint: reuse across both reciprocal sides
         # is identical, and the plan pin asserting the broadcast
         # scoring stage stays visible in the cached plan
-        .where(F.col("rn") <= RNN_K).persist()
+        .where(F.col("rn") <= RNN_K)
     )
     x, y = knn.alias("x"), knn.alias("y")
     return (
@@ -3015,14 +3014,14 @@ def ml_brier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     are x1e9-quantized so every sum is an exact BIGINT."""
     e = table(spark, sf_dir, "embeddings")
     p = _prob_col()
-    rows_q = e.select(
+    rows_q = reuse(e.select(
         (F.col("label") % 2).alias("y"),
         F.floor(p * _PROB_Q + 0.5).cast("long").alias("pq"),
         F.floor(F.pow(p - (F.col("label") % 2), 2) * _PROB_Q + 0.5)
         .cast("long")
         .alias("bq"),
         F.least(F.lit(9), F.floor(p * 10).cast("long")).alias("bin"),
-    ).persist()
+    ))
     bins = rows_q.groupBy("bin").agg(
         F.count(F.lit(1)).cast("long").alias("nk"),
         F.sum("pq").cast("long").alias("spq"),
@@ -4082,7 +4081,7 @@ def embed_mmd_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the paired frame feeds BOTH join sides (X half and Y half) —
     # DATA-SCALED, persist() per the SCALE.md r13 rule
-    g = (
+    g = reuse(
         r.groupBy("label", "bkt", "p")
         .agg(
             F.first(
@@ -4093,7 +4092,6 @@ def embed_mmd_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("b"),
         )
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .persist()
     )
     x = g.where(F.col("label") == 0).select(
         "bkt", "p", F.col("a").alias("xa"), F.col("b").alias("xb")
@@ -5098,14 +5096,14 @@ def embed_cka_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape at 100 TB: one fan-out pass, one 1024-row aggregate,
     two broadcast 1-row frames — independent of corpus size."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.select(
+    q = reuse(e.select(
         F.transform(
             F.col("embedding"),
             lambda x: F.floor(x.cast("double") * _CKA_Q + F.lit(0.5)).cast(
                 "long"
             ),
         ).alias("eq")
-    ).persist()
+    ))
     means = (
         q.select(F.posexplode("eq").alias("i0", "x"))
         .groupBy((F.col("i0") + 1).alias("i"))
@@ -5142,7 +5140,7 @@ def embed_cka_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("syy"),
-    ).localCheckpoint(eager=False)
+    )
     mi = means.select(
         F.col("i").alias("mi_i"), F.col("s").alias("mi_s"), F.col("n")
     )

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import pairwise_set_overlap, q4, sql_pairwise_set_overlap, sql_q4
 
 # A tiny function-word list for the language-ID heuristic. The
@@ -528,12 +528,12 @@ def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     language rollup is |langs| rows; totals broadcast back. Three
     shuffles total, each strictly smaller than the last."""
     d = table(spark, sf_dir, "documents")
-    kept = d.select(
+    kept = reuse(d.select(
         "doc_id",
         "lang",
         F.size(F.split("text", " ")).cast("long").alias("toks"),
         F.md5("text").alias("h"),
-    ).where(F.col("toks") >= MIN_TOKENS).persist()
+    ).where(F.col("toks") >= MIN_TOKENS))
     winners = kept.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
     final = kept.join(winners.select("doc_id"), "doc_id")
     per_lang = final.groupBy("lang").agg(
@@ -793,10 +793,10 @@ def pipeline_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the same algebra as a plain SQL window."""
     from ..operators.prefix import global_ordered
 
-    d = table(spark, sf_dir, "documents").select(
+    d = reuse(table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("tokens"),
-    ).persist()
+    ))
     run = global_ordered(
         d,
         [F.col("doc_id")],
@@ -963,7 +963,7 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents")
     words = F.size(F.split("text", " ")).cast("long")
-    scored = d.select(
+    scored = reuse(d.select(
         "doc_id",
         words.alias("words"),
         F.expr("CAST(n_chars AS BIGINT) * 1000").alias("_c1000"),
@@ -971,7 +971,7 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "words",
         F.expr("_c1000 DIV words").alias("difficulty"),
-    ).persist()
+    ))
     ranked = global_ordered(
         scored,
         [F.col("difficulty"), F.col("doc_id")],
@@ -1800,9 +1800,9 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = d.select(
         "source", F.explode(F.split("text", " ")).alias("word")
     )
-    wf = w.groupBy("source", "word").agg(
+    wf = reuse(w.groupBy("source", "word").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).persist()
+    ))
     tot = wf.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
     a = wf.select(
         F.col("source").alias("sa"), "word", F.col("c").alias("ca")
@@ -1922,7 +1922,7 @@ def text_kn_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus bigrams feed the count table AND the scoring join;
     # the bigram-vocab counts feed four consumers — both DATA-SCALED,
     # persist() per the SCALE.md r13 rule (5 documents scans pre-r13)
-    doc_bg = toks.where(F.size("w") >= 2).select(
+    doc_bg = reuse(toks.where(F.size("w") >= 2).select(
         "doc_id",
         F.explode(
             F.expr(
@@ -1930,10 +1930,10 @@ def text_kn_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " i -> concat(element_at(w, i), ' ', element_at(w, i + 1)))"
             )
         ).alias("bg"),
-    ).persist()
-    bg_cnt = doc_bg.groupBy("bg").agg(
+    ))
+    bg_cnt = reuse(doc_bg.groupBy("bg").agg(
         F.count(F.lit(1)).cast("long").alias("bc")
-    ).persist()
+    ))
     w1c = F.split(F.col("bg"), " ").getItem(0)
     w2c = F.split(F.col("bg"), " ").getItem(1)
     w1_stats = bg_cnt.groupBy(w1c.alias("w1")).agg(
@@ -2232,10 +2232,10 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.prefix import global_ordered
 
     d = table(spark, sf_dir, "documents")
-    freq = (
+    freq = reuse(
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("f")).persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("f"))
     )
     ranked = global_ordered(
         freq,
@@ -2251,7 +2251,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.log(F.col("f").cast("double")) * _ZIPF_Q + 0.5)
         .cast("long")
         .alias("y"),
-    ).localCheckpoint(eager=False)
+    )
     sums = pts.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -2394,10 +2394,10 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is an exact integer; the z expression itself is shared
     text over exact integer sums (sample std, ddof=1)."""
     d = table(spark, sf_dir, "documents")
-    cnt = (
+    cnt = reuse(
         d.select("source", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("source", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")).persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     toks = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("t"))
     top = (
@@ -2591,7 +2591,7 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eval and train branches read cached shingle rows, not the
     # corpus scan — at 100 TB this materialization IS the inverted
     # index build
-    sh = docs.select(
+    sh = reuse(docs.select(
         "doc_id",
         "b",
         F.explode(
@@ -2600,7 +2600,7 @@ def text_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" i -> array_join(slice(w, i, {CONTAM_N}), ' '))"
             )
         ).alias("s"),
-    ).persist()
+    ))
     es = sh.where(F.col("b") == 9).select("doc_id", "s").distinct()
     ts = sh.where(F.col("b") != 9).select("s").distinct()
     counts = es.groupBy("doc_id").agg(
@@ -4353,18 +4353,18 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the corpus) and two 1-row broadcast totals. Nothing pairwise,
     nothing data×data."""
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("ws")).persist()
-    uni = (
+    toks = reuse(d.select("doc_id", F.split("text", " ").alias("ws")))
+    uni = reuse(
         toks.select(F.explode("ws").alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")).persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     n1 = uni.agg(F.sum("c").cast("long").alias("n1"))
     bi = (
         # size(ws) >= 2 guard: sequence(1, 0) would step DOWN to [1, 0]
         # and element_at(ws, 0) throws — single-token docs have no
         # bigrams, exactly like the oracle's empty range(1, len(ws)).
-        toks.where(F.size("ws") >= 2)
+        reuse(toks.where(F.size("ws") >= 2)
         .select(
             F.explode(
                 F.expr(
@@ -4376,7 +4376,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")).persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c")))
     )
     n2 = bi.agg(F.sum("c").cast("long").alias("n2"))
     ua = uni.select(F.col("w").alias("w1"), F.col("c").alias("c_w1"))
@@ -4625,13 +4625,13 @@ def text_self_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the paired-doc frame feeds the uni/bi clipped-count branches and
     # the length totals (~5 consumers; 10 documents scans before r13)
     # — DATA-SCALED, persist() per the SCALE.md r13 rule
-    p = c.join(r, c["cid"] + 1 == r["rid"]).select(
+    p = reuse(c.join(r, c["cid"] + 1 == r["rid"]).select(
         "pair_id",
         "a",
         "b",
         F.size("a").cast("long").alias("la"),
         F.size("b").cast("long").alias("lb"),
-    ).persist()
+    ))
 
     def grams(col: str, n: int) -> F.Column:
         if n == 1:
@@ -4742,10 +4742,10 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.prefix import global_ordered
 
     d = table(spark, sf_dir, "documents")
-    uni = (
+    uni = reuse(
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")).persist()
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
     ranked = global_ordered(
         uni,

@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import register_views, table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import (
     avg_money,
     cents,
@@ -976,15 +976,15 @@ def agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     users = e.groupBy("user_id").agg(
         F.max((F.col("event_type") == "click").cast("int")).alias("in_a"),
         F.max((F.col("event_type") == "purchase").cast("int")).alias("in_b"),
-    ).persist()
-    h = users.select(
+    )
+    h = reuse(users.select(
         "user_id",
         "in_a",
         "in_b",
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10)
         .cast("long")
         .alias("h"),
-    ).persist()
+    ))
     sku = (
         h.orderBy("h", "user_id")
         .limit(KMV_K)

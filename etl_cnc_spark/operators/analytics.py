@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import (
     cents,
     pairwise_set_overlap,
@@ -61,17 +61,17 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     event log + two user-key joins — no window over raw events, so
     state is |users|, not |events|."""
     e = table(spark, sf_dir, "events")
-    v = (
+    v = reuse(
         e.where(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view")).persist()
+        .agg(F.min("ts").alias("t_view"))
     )
-    c = (
+    c = reuse(
         e.where(F.col("event_type") == "click")
         .join(v, "user_id")
         .where(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click")).persist()
+        .agg(F.min("ts").alias("t_click"))
     )
     p = (
         e.where(F.col("event_type") == "purchase")
@@ -394,7 +394,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2x|events| boundary rows feeding global_ordered's three passes
     # — DATA-SCALED, persist() per the SCALE.md r13 rule (8 events
     # scans before r13)
-    bounds = e.select(
+    bounds = reuse(e.select(
         F.col("ts").alias("t"), F.lit(1).alias("delta"), "event_id"
     ).unionAll(
         e.select(
@@ -402,7 +402,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).alias("delta"),
             "event_id",
         )
-    ).persist()
+    ))
     running = global_ordered(
         bounds,
         [F.col("t"), F.col("delta"), F.col("event_id")],
@@ -514,11 +514,11 @@ def events_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
-    per_user = e.groupBy("user_id").agg(
+    per_user = reuse(e.groupBy("user_id").agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("cents")
-    ).persist()
+    ))
     total = per_user.agg(
         F.sum("cents").cast("long").alias("total_cents")
     )
@@ -630,11 +630,10 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count, brand marginals, both self-join sides) — DATA-SCALED,
     # persist() per the SCALE.md r13 rule (5 lineitem + 5 part scans
     # before r13)
-    ob = (
+    ob = reuse(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("brand"))
         .distinct()
-        .persist()
     )
     n = ob.select(F.countDistinct("ok").alias("baskets"))
     brand_n = ob.groupBy("brand").agg(F.count(F.lit(1)).alias("cnt"))
@@ -757,7 +756,7 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # loss on a real cluster recomputes instead of failing the query;
     # the rollup is |users| rows — tiny, and cache() itself is lazy
     # so no job runs at build.
-    base = base.cache()
+    base = reuse(base)
     # Bounded metadata as a broadcast 1-row frame (2 scalars + 3
     # per-metric (lo, hi) ranges — metadata, never data): joins into
     # the plan lazily instead of a driver-side .first() at build.
@@ -1083,7 +1082,7 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel prefix ranks over the |users| rollup — no
     single-partition window), same discipline as events_pareto."""
     e = table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
+    per_user = reuse(e.groupBy("user_id").agg(
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
@@ -1092,7 +1091,7 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("cents")
-    ).persist()
+    ))
     ranked = global_ordered(
         per_user, [F.col("cents"), F.col("user_id")], bucket_key="cents"
     ).select("cents", "rk")
@@ -3383,10 +3382,10 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     + aggregate rounds; counts and rates from exact integers. Scale:
     two shuffles on event_type — at 100 TB swap the exact median for
     approx_percentile and keep the identical shape."""
-    base = table(spark, sf_dir, "events").select(
+    base = reuse(table(spark, sf_dir, "events").select(
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("vc"),
-    ).persist()
+    ))
     wv = Window.partitionBy("event_type").orderBy("vc")
     wn = Window.partitionBy("event_type")
     med = base.select(
@@ -3403,12 +3402,12 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("med"),
     )
-    dev = base.join(m1, "event_type").select(
+    dev = reuse(base.join(m1, "event_type").select(
         "event_type",
         F.abs(F.col("vc") - F.col("med")).alias("d"),
         "med",
         "n",
-    ).persist()
+    ))
     wd = Window.partitionBy("event_type").orderBy("d")
     dmed = dev.select(
         "event_type",
@@ -3633,12 +3632,12 @@ def events_funnel_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").select(
         "user_id", "event_type", ts_us(F.col("ts")).alias("t")
     )
-    v = (
+    v = reuse(
         e.where(F.col("event_type") == "view")
         .groupBy("user_id")
-        .agg(F.min("t").alias("t_view")).persist()
+        .agg(F.min("t").alias("t_view"))
     )
-    c = (
+    c = reuse(
         e.where(F.col("event_type") == "click")
         .join(v, "user_id")
         .where(
@@ -3646,7 +3645,7 @@ def events_funnel_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("t") <= F.col("t_view") + FUNNEL_CLICK_US)
         )
         .groupBy("user_id")
-        .agg(F.min("t").alias("t_click")).persist()
+        .agg(F.min("t").alias("t_click"))
     )
     p = (
         e.where(F.col("event_type") == "purchase")
@@ -3656,7 +3655,7 @@ def events_funnel_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("t") <= F.col("t_click") + FUNNEL_BUY_US)
         )
         .groupBy("user_id")
-        .agg(F.min("t").alias("t_buy")).persist()
+        .agg(F.min("t").alias("t_buy"))
     )
     nv = v.agg(F.count("*").cast("long").alias("n_view"))
     nc = c.agg(F.count("*").cast("long").alias("n_click_1h"))
@@ -3806,7 +3805,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
         "event_type", F.lag("event_type").over(wseq).alias("prev")
-    ).where(F.col("prev").isNotNull()).persist()
+    ).where(F.col("prev").isNotNull())
     c = seq.groupBy("prev", F.col("event_type").alias("next")).agg(
         F.count("*").cast("long").alias("n")
     ).localCheckpoint(eager=False)
@@ -4147,9 +4146,9 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate, and the share math is integer (cents × 10⁴ DIV
     total) so the class boundary is bit-exact, no float drift."""
     o = table(spark, sf_dir, "orders")
-    rev = o.groupBy("o_custkey").agg(
+    rev = reuse(o.groupBy("o_custkey").agg(
         F.sum(cents(F.col("o_totalprice"))).cast("long").alias("revenue_cents")
-    ).persist()
+    ))
     tot = rev.agg(F.sum("revenue_cents").cast("long").alias("total_cents"))
     ranked = global_ordered(
         rev,
@@ -4623,16 +4622,16 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     firstw = e.groupBy("user_id").agg(
         F.min(F.date_trunc("week", F.col("ts"))).alias("w0")
-    ).persist()
+    )
     wk = F.date_trunc("week", F.col("ts"))
-    act = (
+    act = reuse(
         e.join(firstw, "user_id")
         .select(
             (F.datediff(wk, F.col("w0")) / 7).cast("long").alias("week_n"),
             "user_id",
         )
         .groupBy("week_n")
-        .agg(F.count_distinct("user_id").cast("long").alias("active")).persist()
+        .agg(F.count_distinct("user_id").cast("long").alias("active"))
     )
     base = act.where(F.col("week_n") == 0).select(
         F.col("active").alias("cohort")
@@ -4651,7 +4650,7 @@ def events_retention_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("ylq"),
-        ).localCheckpoint(eager=False)
+        )
     )
     m = pts.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -5778,11 +5777,11 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     spec runs on the 10-row decile table.  All sums are integer
     cents; shares are exact floor-division basis points."""
     e = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
-    per_user = e.groupBy("user_id").agg(
+    per_user = reuse(e.groupBy("user_id").agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("cents")
-    ).persist()
+    ))
     ranked = global_ordered(
         per_user,
         [F.col("cents"), F.col("user_id")],
@@ -7235,7 +7234,10 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lifetime-days GRID — calendar-bounded metadata
     (census-allowlisted), never raw rows."""
     e = table(spark, sf_dir, "events")
-    span = (
+    # |users|-sized rollup feeds both the global-max and the label
+    # branch — DATA-SCALED, so persist() (lineage kept, executor
+    # loss recomputes; SCALE.md r13 rule): facts scanned ONCE
+    span = reuse(
         e.groupBy("user_id")
         .agg(
             F.datediff(F.max("ts").cast("date"), F.min("ts").cast("date"))
@@ -7243,10 +7245,6 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t"),
             F.max("ts").cast("date").alias("last_day"),
         )
-        # |users|-sized rollup feeds both the global-max and the label
-        # branch — DATA-SCALED, so persist() (lineage kept, executor
-        # loss recomputes; SCALE.md r13 rule): facts scanned ONCE
-        .persist()
     )
     g = span.agg(F.max("last_day").alias("gmax"))
     lab = span.crossJoin(F.broadcast(g)).select(
@@ -7433,19 +7431,19 @@ def events_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id partitioning reused), a bounded-bucket histogram
     aggregate, and 1-row totals broadcast."""
     e = table(spark, sf_dir, "events")
-    su = (
+    su = reuse(
         e.where(F.col("event_type") == "signup")
         .groupBy("user_id")
-        .agg(F.min(F.unix_micros("ts")).alias("s")).persist()
+        .agg(F.min(F.unix_micros("ts")).alias("s"))
     )
     pu = e.where(F.col("event_type") == "purchase").select(
         "user_id", F.unix_micros("ts").alias("p")
     )
-    conv = (
+    conv = reuse(
         su.join(pu, "user_id")
         .where(F.col("p") >= F.col("s"))
         .groupBy("user_id", "s")
-        .agg((F.min("p") - F.col("s").cast("long")).alias("d_us")).persist()
+        .agg((F.min("p") - F.col("s").cast("long")).alias("d_us"))
     )
     tot = (
         su.agg(F.count(F.lit(1)).cast("long").alias("n_signup"))
@@ -7659,15 +7657,14 @@ def orders_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = li.groupBy("l_orderkey").agg(
         F.sum(line_cents).cast("long").alias("line_cents")
     )
-    pairs = (
+    # |orders|-sized difference column feeds the moment fold AND
+    # the outside-count pass — DATA-SCALED, so persist() (lineage
+    # kept, executor loss recomputes; SCALE.md r13 rule)
+    pairs = reuse(
         o.join(l, o.o_orderkey == l.l_orderkey)
         .select(
             (cents(F.col("o_totalprice")) - F.col("line_cents")).alias("d")
         )
-        # |orders|-sized difference column feeds the moment fold AND
-        # the outside-count pass — DATA-SCALED, so persist() (lineage
-        # kept, executor loss recomputes; SCALE.md r13 rule)
-        .persist()
     )
     dd = F.col("d").cast("decimal(19,0)")
     m = pairs.agg(
@@ -8023,9 +8020,9 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def period_classes(pred, alias):
         o = table(spark, sf_dir, "orders").where(pred)
-        rev = o.groupBy("o_custkey").agg(
+        rev = reuse(o.groupBy("o_custkey").agg(
             F.sum(cents(F.col("o_totalprice"))).cast("long").alias("revenue_cents")
-        ).persist()
+        ))
         tot = rev.agg(F.sum("revenue_cents").cast("long").alias("total_cents"))
         ranked = global_ordered(
             rev,
@@ -8245,7 +8242,7 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-risk counts from ONE prefix pass, per-time O-E and variance
     terms x1e9-quantized so both folds are exact BIGINTs."""
     e = table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(
+    per_user = reuse(e.groupBy("user_id").agg(
         F.datediff(F.max("ts").cast("date"), F.min("ts").cast("date"))
         .cast("long")
         .alias("t"),
@@ -8253,7 +8250,7 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count_if(F.col("event_type") == "purchase") > 0)
         .cast("int")
         .alias("grp"),
-    ).persist()
+    ))
     g = per_user.agg(F.max("last_day").alias("gmax"))
     lab = per_user.crossJoin(F.broadcast(g)).select(
         "t",
@@ -8276,7 +8273,7 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="t",
         sums={"a1": "ca1", "a0": "ca0"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     risk = cum.crossJoin(F.broadcast(tot)).select(
         "d1",
         "d0",
@@ -9604,7 +9601,7 @@ def events_hmm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
     ).localCheckpoint(eager=False)
-    grid = daily.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("cnt")).localCheckpoint(eager=False)
+    grid = daily.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     w = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wt = Window.partitionBy()
     med = (
@@ -9960,16 +9957,16 @@ def events_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle on user_id), one distinct, two hash aggregates —
     |channels| output rows; never a subset enumeration."""
     e = table(spark, sf_dir, "events")
-    first_p = (
+    first_p = reuse(
         e.where(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(F.min("ts").alias("p_ts")).persist()
+        .agg(F.min("ts").alias("p_ts"))
     )
-    touches = (
+    touches = reuse(
         e.join(first_p, "user_id")
         .where((F.col("ts") < F.col("p_ts")) & (F.col("event_type") != "purchase"))
         .select("user_id", F.col("event_type").alias("channel"))
-        .distinct().persist()
+        .distinct()
     )
     set_size = touches.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("k")
@@ -10084,7 +10081,7 @@ def events_reliability_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.log(F.col("cum").cast("double")) * _DU_Q + 0.5)
         .cast("long")
         .alias("y"),
-    ).localCheckpoint(eager=False)
+    )
     m = lg.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -10310,7 +10307,9 @@ def events_km_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to events_kaplan_meier — one per-user
     rollup, a 1-row broadcast, then calendar-bounded grid windows."""
     e = table(spark, sf_dir, "events")
-    span = (
+    # |users|-sized — DATA-SCALED, persist() per the SCALE.md
+    # r13 rule (lineage kept, executor loss recomputes)
+    span = reuse(
         e.groupBy("user_id")
         .agg(
             F.datediff(F.max("ts").cast("date"), F.min("ts").cast("date"))
@@ -10318,9 +10317,6 @@ def events_km_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t"),
             F.max("ts").cast("date").alias("last_day"),
         )
-        # |users|-sized — DATA-SCALED, persist() per the SCALE.md
-        # r13 rule (lineage kept, executor loss recomputes)
-        .persist()
     )
     g = span.agg(F.max("last_day").alias("gmax"))
     lab = span.crossJoin(F.broadcast(g)).select(
@@ -10669,7 +10665,9 @@ def events_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min(F.struct("ts", "event_id")).alias("pk"))
     )
-    j = (
+    # per-event frame — DATA-SCALED, persist() per the SCALE.md
+    # r13 rule (lineage kept, executor loss recomputes)
+    j = reuse(
         e.where(F.col("event_type") != "purchase")
         .join(first_p, "user_id", "left")
         .where(
@@ -10682,9 +10680,6 @@ def events_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
             st.cast("long").alias("st"),
             F.col("pk").isNotNull().alias("has_p"),
         )
-        # per-event frame — DATA-SCALED, persist() per the SCALE.md
-        # r13 rule (lineage kept, executor loss recomputes)
-        .persist()
     )
     w_u = Window.partitionBy("user_id").orderBy("ts", "event_id")
     steps = j.select(
@@ -11041,7 +11036,7 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
     is_p = F.col("event_type") == "purchase"
-    per_user = (
+    per_user = reuse(
         e.crossJoin(F.broadcast(span))
         .groupBy("user_id", (F.col("user_id") % 2).alias("arm"))
         .agg(
@@ -11065,7 +11060,7 @@ def events_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("y"),
-        ).persist()
+        )
     )
     dec = "decimal(38,0)"
     pooled = per_user.agg(

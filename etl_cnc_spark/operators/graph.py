@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import q4, sql_q4
 
 SCALE = 100_000_000  # 1e8 fixed-point
@@ -475,10 +475,9 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast otherwise replays the top-k window pass (4x); the
     # frame is nation-bounded (≤ 25·BFS_TOPK rows at any fact scale),
     # so one metadata partition is the right layout at every scale.
-    e2 = (
+    e2 = reuse(
         edges.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
         .coalesce(1)
-        .persist()
     )
     for _ in range(BFS_ROUNDS):
         expanded = dist.join(
@@ -487,7 +486,7 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ev").cast("long").alias("v"),
             (F.col("dist") + 1).alias("dist"),
         )
-        dist = (
+        dist = reuse(
             dist.unionByName(expanded)
             .groupBy("v")
             .agg(F.min("dist").cast("long").alias("dist"))
@@ -499,7 +498,6 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             # a cached 16-partition layout of ≤25 rows is frozen past
             # AQE coalescing and floods every wave with empty tasks.
             .coalesce(1)
-            .persist()
         )
     return dist
 
@@ -1454,10 +1452,9 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the innermost round 2^BFS_ROUNDS times.  Frames are
     # nation-bounded (≤ 25·25 rows); one partition is right at any
     # fact scale.
-    e2 = (
+    e2 = reuse(
         edges.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
         .coalesce(1)
-        .persist()
     )
     for _ in range(BFS_ROUNDS):
         expanded = dist.join(F.broadcast(e2), F.col("v") == F.col("eu")).select(
@@ -1465,12 +1462,11 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ev").cast("long").alias("v"),
             (F.col("dist") + 1).alias("dist"),
         )
-        dist = (
+        dist = reuse(
             dist.unionByName(expanded)
             .groupBy("src", "v")
             .agg(F.min("dist").cast("long").alias("dist"))
             .coalesce(1)
-            .persist()
         )
     return dist.groupBy("src").agg(
         F.count_if(F.col("dist") > 0).cast("long").alias("n_reached"),
@@ -1950,17 +1946,16 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FOUR consumers (the symmetrized copies x3 via ue, the anti-join)
     # — both DATA-SCALED, so persist() per the SCALE.md r13 rule
     # (before r13 this key replayed the lineitem scan 14x)
-    pl = li.select("l_orderkey", "l_partkey").distinct().persist()
+    pl = reuse(li.select("l_orderkey", "l_partkey").distinct())
     a = pl.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1"))
     b = pl.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p2"))
-    pairs = (
+    pairs = reuse(
         a.join(b, "ok")
         .where(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("sup"))
         .where(F.col("sup") >= COP_MIN_SUP)
         .select("p1", "p2")
-        .persist()
     )
     ue = pairs.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionAll(
         pairs.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
@@ -2061,17 +2056,16 @@ def graph_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pl / pairs fan into multiple consumers — DATA-SCALED, persist()
     # per the SCALE.md r13 rule (this key replayed lineitem 18x
     # before r13; same shape as graph_adamic_adar)
-    pl = li.select("l_orderkey", "l_partkey").distinct().persist()
+    pl = reuse(li.select("l_orderkey", "l_partkey").distinct())
     a = pl.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1"))
     b = pl.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p2"))
-    pairs = (
+    pairs = reuse(
         a.join(b, "ok")
         .where(F.col("p1") < F.col("p2"))
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("sup"))
         .where(F.col("sup") >= COP_MIN_SUP)
         .select("p1", "p2")
-        .persist()
     )
     ue = pairs.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionAll(
         pairs.select(F.col("p2").alias("u"), F.col("p1").alias("v"))

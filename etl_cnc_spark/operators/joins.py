@@ -1033,7 +1033,7 @@ def join_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass2 = a.join(
         b, (F.col("t2a") == F.col("t2b")) & (F.col("name_a") < F.col("name_b"))
     ).select("name_a", "name_b")
-    cand = pass1.union(pass2).distinct().localCheckpoint(eager=False)
+    cand = pass1.union(pass2).distinct()
     na = names.select(
         F.col("p_name").alias("name_a"),
         F.col("rep_key").alias("key_a"),

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..llm.text import EN_STOPWORDS
 from ..utils import cents, q4, sql_q4
 from .prefix import global_ordered, ntile_from_rank
@@ -240,13 +240,13 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-event scored frame feeding the totals row and the prefix
     # machine's three passes — DATA-SCALED, persist() per the SCALE.md
     # r13 rule (6 events scans before r13)
-    scored = e.select(
+    scored = reuse(e.select(
         (F.floor(F.col("value") * 100 + 0.5)).cast("long").alias(
             "score_cents"
         ),
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    ).persist()
+    ))
     tot = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_all"),
         F.sum("y").cast("long").alias("pos_all"),
@@ -391,14 +391,14 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
         F.col("qn2") * F.col("cn2")
     )
-    scored = pairs.select(
+    scored = reuse(pairs.select(
         "qid",
         "cid",
         F.when(F.col("qlabel") == F.col("clabel"), 1)
         .otherwise(0)
         .alias("rel"),
         cos.alias("cos"),
-    ).persist()
+    ))
     corp = scored.groupBy("qid").agg(
         F.sum("rel").cast("long").alias("n_rel_corpus")
     )
@@ -508,7 +508,7 @@ def ml_auc_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_desc=True,
         sums={"c_all": "cum_all", "c_pos": "cum_pos"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     tot = grid.agg(
         F.sum("c_all").cast("long").alias("n"),
         F.sum("c_pos").cast("long").alias("n_pos"),
@@ -905,14 +905,14 @@ def ml_gbm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     are final per-bin doubles over bounded bins. The melt is 3× the
     rows but map-side combines to Σ|bins| ≈ 51 groups."""
     e = table(spark, sf_dir, "events")
-    base = e.select(
+    base = reuse(e.select(
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
         F.hour("ts").cast("long").alias("f_hour"),
         F.expr("CAST(weekday(CAST(ts AS DATE)) AS BIGINT)").alias("f_wday"),
         F.least(
             F.floor(F.col("value") / GBM_BAND_W).cast("long"), F.lit(19)
         ).alias("f_band"),
-    ).persist()
+    ))
     tot = base.agg(
         F.count(F.lit(1)).cast("long").alias("n_all"),
         F.sum("y").cast("long").alias("pos_all"),
@@ -927,7 +927,7 @@ def ml_gbm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             base.select(F.lit("value_band").alias("feature"),
                         F.col("f_band").alias("bin"), "y")
-        ).persist()
+        )
     )
     p0 = F.col("pos_all").cast("double") / F.col("n_all")
     hist = (
@@ -1240,7 +1240,7 @@ def ml_target_encoding_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("cat"),
         fold.alias("fold"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    ).persist()
+    )
     gfc = lab.groupBy("fold", "cat").agg(
         F.count(F.lit(1)).cast("long").alias("n_fc"),
         F.sum("y").cast("long").alias("pos_fc"),
@@ -1365,11 +1365,10 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     # totals, vocab size, the log-prob table) — vocabulary-scaled, so
     # persist() per the SCALE.md r13 rule (this key replayed the
     # documents scan 8x before r13)
-    cw = (
+    cw = reuse(
         train_doc.select("lang", F.explode(F.split("text", " ")).alias("w"))
         .groupBy("lang", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("cw"))
-        .persist()
     )
     lt = cw.groupBy("lang").agg(F.sum("cw").cast("long").alias("tl"))
     vc = cw.agg(F.count_distinct("w").cast("long").alias("v"))
@@ -2443,12 +2442,12 @@ def ml_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
     cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
-    scored = pairs.select(
+    scored = reuse(pairs.select(
         "qid",
         "cid",
         F.when(F.col("qlabel") == F.col("clabel"), 1).otherwise(0).alias("rel"),
         cos.alias("cos"),
-    ).persist()
+    ))
     corp = scored.groupBy("qid").agg(
         F.sum("rel").cast("long").alias("n_rel_corpus")
     )
@@ -2575,12 +2574,12 @@ def ml_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm2(F.col("embedding")).alias("cn2"),
     )
     pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    scored = pairs.select(
+    scored = reuse(pairs.select(
         "qid",
         "cid",
         _dot64(F.col("qe"), F.col("ce")).alias("dot"),
         (F.col("qn2") * F.col("cn2")).alias("nn"),
-    ).persist()
+    ))
     w1 = Window.partitionBy("qid").orderBy(
         (F.col("dot") / F.sqrt(F.col("nn"))).desc(), "cid"
     )
@@ -2680,13 +2679,13 @@ def ml_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-node DuckDB, where that is fine)."""
     d = table(spark, sf_dir, "documents")
     words = F.split("text", " ")
-    feat = d.select(
+    feat = reuse(d.select(
         "doc_id",
         F.col("n_chars").cast("long").alias("s1"),
         F.size(words).cast("long").alias("s2"),
         F.size(F.array_distinct(words)).cast("long").alias("s3"),
-    ).persist()
-    melted = feat.select(
+    ))
+    melted = reuse(feat.select(
         "doc_id",
         F.explode(
             F.array(
@@ -2695,7 +2694,7 @@ def ml_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(F.lit(2).alias("rk_id"), F.col("s3").alias("s")),
             )
         ).alias("e"),
-    ).select("doc_id", F.col("e.rk_id").alias("rk_id"), F.col("e.s").alias("s")).persist()
+    ).select("doc_id", F.col("e.rk_id").alias("rk_id"), F.col("e.s").alias("s")))
     ranked = global_ordered(
         melted,
         [F.col("rk_id"), F.col("s"), F.col("doc_id")],
@@ -2807,12 +2806,12 @@ def ml_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
     cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
-    scored = pairs.select(
+    scored = reuse(pairs.select(
         "qid",
         "cid",
         F.when(F.col("qlabel") == F.col("clabel"), 1).otherwise(0).alias("rel"),
         F.floor(cos * _MRR_Q + F.lit(0.5)).cast("long").alias("cq"),
-    ).persist()
+    ))
     best = (
         scored.where(F.col("rel") == 1)
         .groupBy("qid")
@@ -3075,18 +3074,17 @@ def ml_survival_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan + the per-user aggregate + the grid aggregate (3 fact
     # passes at 100 TB; ~0.45 s of extra plan optimization per run at
     # sf0.1).  persist(), not localCheckpoint: the grid is bounded so
-    # either is lifecycle-safe (the registry release wrapper scopes
-    # the cache to this key), but a lazy checkpoint SERIALIZES the
+    # either is lifecycle-safe (the registry build scope releases
+    # the cache after this key), but a lazy checkpoint SERIALIZES the
     # pipeline behind an RDD materialization barrier (A/B-measured
     # ~0.1 s slower at sf0.1), while the cache lets the three
     # consumers share one computation with lineage kept.
-    cells = (
+    cells = reuse(
         coded.groupBy("t", "s")
         .agg(
             F.count(F.lit(1)).cast("long").alias("c_all"),
             F.count_if(F.col("ev") == 1).cast("long").alias("c_ev"),
         )
-        .persist()
     )
     dt = cells.select("t").distinct()
     ds = cells.select("s").distinct()
@@ -3716,7 +3714,7 @@ def ml_qini_auuc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("y"),
-    ).persist()
+    )
     grid = per_user.groupBy("s").agg(
         F.count_if(F.col("treated") == 1).cast("long").alias("nt"),
         F.count_if(F.col("treated") == 0).cast("long").alias("nc"),
@@ -3735,7 +3733,7 @@ def ml_qini_auuc(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_desc=True,
         sums={"nt": "cnt", "nc": "cnc", "yt": "cyt", "yc": "cyc", "nall": "cn"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     tot = grid.agg(
         F.sum("nt").cast("long").alias("tnt"),
         F.sum("nc").cast("long").alias("tnc"),

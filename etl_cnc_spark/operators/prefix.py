@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..registry import reuse
+
 __all__ = ["global_ordered", "ntile_from_rank"]
 
 _BUCKET = 1024  # bucket-group width for the hierarchical offset fold
@@ -223,17 +225,8 @@ def global_ordered(
     # below and the per-bucket totals) — uncached, both replay the
     # caller's whole upstream lineage, so every prefix-machine user
     # paid its input twice (and the no-bounds path a third time for
-    # the min/max pass).  persist() shares one computation across the
-    # branches; lineage is kept (SCALE.md data-scaled rule) and the
-    # registry release wrapper bounds the cache to the calling key.
-    # Only inside a registered build: a direct caller (tests, host
-    # code) has no release point, and an untracked entry would sit in
-    # the CacheManager for the session's lifetime — exactly what the
-    # r14 release discipline exists to prevent.
-    from ..registry import in_registered_build
-
-    if in_registered_build():
-        bucketed = bucketed.persist()
+    # the min/max pass).
+    bucketed = reuse(bucketed)
     # single-select stages (r16): the old withColumn-per-column chains
     # re-analyzed the full caller lineage once per column — with ~50
     # call sites that was the engine's largest block of driver-side

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import q2, sql_q2
 from .prefix import global_ordered, ntile_from_rank
 
@@ -158,9 +158,9 @@ def sort_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").cast("long").alias("x"),
         (F.col("p_partkey") % 64).cast("long").alias("y"),
     )
-    zed = pts.select(
+    zed = reuse(pts.select(
         "p_partkey", "x", "y", _z_spark(F.col("x"), F.col("y")).alias("z")
-    ).persist()
+    ))
     n_df = zed.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     filed = (
         global_ordered(

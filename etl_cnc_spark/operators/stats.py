@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..operators.prefix import global_ordered
-from ..registry import register
+from ..registry import register, reuse
 from ..utils import cents, q4, sql_q4
 
 _STATUSES = ("F", "O", "P")
@@ -484,7 +484,7 @@ def stat_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col=None,
-    ).select("v_cents", "cum1", "cum2").localCheckpoint(eager=False)
+    ).select("v_cents", "cum1", "cum2")
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2")
     )
@@ -702,7 +702,7 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c2",
         "t",
         (F.col("cum_t") - F.col("t")).alias("before"),
-    ).localCheckpoint(eager=False)
+    )
     sums = cum.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -2264,7 +2264,7 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col=None,
     ).select(
         "v_cents", "t", (F.col("cum_t") - F.col("t")).alias("before")
-    ).localCheckpoint(eager=False)
+    )
     per_group = (
         ev.join(cum, "v_cents")
         .groupBy("event_type")
@@ -2382,7 +2382,7 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the r12 plan, the r13 steady-state elevation (1.4-1.7x gate)
     # (r16: expressions as JVM-parsed SQL strings — the profile showed
     # ~half this query's cold wall was driver-side plan construction)
-    grid = (
+    grid = reuse(
         e.selectExpr(
             "event_type",
             "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
@@ -2392,22 +2392,21 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1"),
             F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
         )
-        .persist()
     )
     # cum is the same grid-sized frame with two consumers (itself and
     # its rank+1 shift).  r15: both reuse points moved from lazy
     # localCheckpoint to persist() — the checkpoint's RDD
     # materialization BARRIER serializes the stage pipeline (the
     # cindex A/B measured the same swap), while the cache shares one
-    # computation with lineage kept; the r14 release wrapper bounds
-    # the cache to this key's lifetime.
-    cum = global_ordered(
+    # computation with lineage kept; the build scope bounds the cache
+    # to this key's lifetime.
+    cum = reuse(global_ordered(
         grid,
         [F.col("v_cents")],
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col="rk",
-    ).persist()
+    ))
     nxt = cum.selectExpr("rk - 1 AS rk", "v_cents AS v_next")
     totals = grid.agg(
         F.expr("CAST(sum(c1) AS BIGINT) AS n1"),
@@ -2508,7 +2507,7 @@ def stat_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -2955,7 +2954,7 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "m1", "cb": "b"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -3188,7 +3187,7 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -4248,10 +4247,9 @@ def stat_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame (user list, per-type totals, indicators) — |users|-scaled,
     # so persist() per the SCALE.md r13 rule (lineage kept, executor
     # loss recomputes); consumers read the cache, never events
-    base = (
+    base = reuse(
         e.groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .persist()
     )
     users = base.select("user_id").distinct()
     nu = users.agg(F.count(F.lit(1)).cast("long").alias("n_users"))
@@ -4746,7 +4744,7 @@ def stat_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y")).localCheckpoint(eager=False)
+    ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y"))
     # calendar-bounded hour grid (census-allowlisted)
     idx = hourly.select(
         "y", F.row_number().over(Window.orderBy("hr")).alias("t")
@@ -4989,7 +4987,7 @@ def stat_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("nat"),
         "x",
         F.floor(xd * F.log(xd) * THEIL_QR + 0.5).cast("long").alias("qxlx"),
-    ).persist()
+    )
     grp = rowq.groupBy("nat").agg(
         F.count(F.lit(1)).cast("long").alias("n_g"),
         F.sum("x").cast("long").alias("x_g"),
@@ -5531,7 +5529,7 @@ def stat_winsorized_trimmed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cum = grid.join(tot, "f").select(
         "f", "v", "t", "n", F.sum("t").over(w_cum).cast("long").alias("c")
-    ).localCheckpoint(eager=False)
+    )
     bounds = cum.groupBy("f").agg(
         F.min(
             F.when(100 * F.col("c") >= WINSOR_PCT * F.col("n"), F.col("v"))
@@ -5992,7 +5990,7 @@ def stat_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hr")
-    ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y")).localCheckpoint(eager=False)
+    ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y"))
     # calendar-bounded hour grid (census-allowlisted)
     idx = hourly.select(
         "y", (F.row_number().over(Window.orderBy("hr")) - 1).alias("t")
@@ -6216,7 +6214,7 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c2": "cum2"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -6331,7 +6329,7 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c": "cumn"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -6866,7 +6864,7 @@ def stat_lilliefors(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="q",
         sums={"cnt": "cum"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     phi = _phi_col((F.col("q") - F.col("mu")) / F.col("sigma"))
     gap = F.greatest(
         F.abs(F.col("cum").cast("double") / F.col("n") - phi),
@@ -8081,11 +8079,11 @@ def stat_two_way_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else bounded-row arithmetic on broadcast 1-row
     frames."""
     li = table(spark, sf_dir, "lineitem")
-    base = li.select(
+    base = reuse(li.select(
         F.col("l_returnflag").alias("a"),
         F.col("l_linestatus").alias("b"),
         cents(F.col("l_extendedprice")).alias("yc"),
-    ).persist()
+    ))
     cells = base.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("yc").cast("long").alias("s"),
@@ -9499,7 +9497,7 @@ def stat_kuiper_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -9631,7 +9629,7 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"cn": "cumn"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -10580,7 +10578,7 @@ def stat_white_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast(dec)
         .alias("eq"),
         "nd",
-    ).localCheckpoint(eager=False)
+    )
     td = F.col("t").cast(dec)
     aux = resid.agg(
         F.max("nd").alias("nd"),
@@ -11803,7 +11801,7 @@ def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v_cents",
         sums={"c1": "cum1", "c2": "cum2"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     totals = grid.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
@@ -12350,9 +12348,9 @@ def stat_ridit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash aggregate to the grid, ONE prefix pass, a
     grid-sized equi-join back to rows, one |types|-row aggregate."""
     e = table(spark, sf_dir, "events")
-    ev = e.select(
+    ev = reuse(e.select(
         "event_type", F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v")
-    ).persist()
+    ))
     grid = ev.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("t")).localCheckpoint(eager=False)
     cum = global_ordered(
         grid,
@@ -12360,7 +12358,7 @@ def stat_ridit(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_key="v",
         sums={"t": "cumt"},
         rank_col=None,
-    ).localCheckpoint(eager=False)
+    )
     n_ref = grid.agg(F.sum("t").cast("long").alias("n_ref"))
     ref = cum.select(
         "v", "t", (F.col("cumt") - F.col("t")).alias("below")
@@ -12899,13 +12897,13 @@ def stat_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the 1-row decision frame back to the ranked stream. At
     100 TB the stream ranks once and everything after is metadata."""
     e = table(spark, sf_dir, "events")
-    seq = e.select(
+    seq = reuse(e.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1)
         .otherwise(0)
         .cast("long")
         .alias("x"),
-    ).persist()
+    ))
     ranked = global_ordered(
         seq,
         [F.col("event_id")],

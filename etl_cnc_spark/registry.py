@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import functools
 import importlib
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -314,163 +315,61 @@ _OP_MODULES = [
 ]
 
 
-# --- deterministic cache release (ADVICE r13, medium) ---------------
+# --- build scope: the one release point for build caches -----------
 #
-# Builds persist() their data-scaled intermediates (SCALE.md r13
-# checkpoint rule) but can NOT unpersist them: the returned DataFrame
-# is lazy, so the cache must outlive the build call itself.  Without a
-# release point, a 696-key single-session sweep accumulates every
-# key's MEMORY_AND_DISK entries in the CacheManager until session end.
-#
-# The deterministic release point is the START of the next top-level
-# build of a DIFFERENT key: every harness that matters (the grading
-# driver, check.py, bench.py, pytest) is sequential and has fully
-# consumed key N's result before building key N+1, so clearing there
-# bounds the CacheManager to ONE key's working set.  Same-key rebuilds
-# deliberately KEEP the caches — CacheManager matches the rebuilt plan
-# by canonicalized-plan equality, so bench.py's warmup + timed-run
-# protocol measures warm steady state exactly as it did before this
-# wrapper existed (the frozen BASELINE.md gates assume that protocol).
-# ``register`` wraps each build with a depth counter so COMPOSED
-# builds (dedup_recall_report invoking REGISTRY["dedup_embedding"]
-# .build) never clear mid-build; only the outermost entry releases.
-# Release is SCOPED to the build's own entries (ADVICE r14, low): a
-# persist()/cache() interception, active only while a registered build
-# is on the stack, records exactly the frames the build cached, and the
-# release unpersists those — never ``spark.catalog.clearCache()``, so a
-# host application/notebook's own cached frames are untouched.
-# ``unpersist(blocking=False)`` drops the SQL CacheManager entry only —
-# lineage is kept on every persist() site, so a released frame
-# recomputes correctly if an unconsumed DataFrame still references it
-# (perf, never correctness), and localCheckpoint blocks (RDD-level
-# storage, e.g. dedup_minhash's documented lineage break) are
-# untouched.  One edge is inherited from CacheManager's plan-equality
-# matching: if the host cached the SAME canonical plan a build also
-# persists, they share one entry and the release drops it (the host's
-# frame recomputes — again perf only).  Set ``AUTO_RELEASE_CACHES =
-# False`` to opt out (e.g. a notebook that deliberately shares caches
-# across queries).
-#
-# Thread-safety: the module globals below (depth counter, last key,
-# tracked lists) assume SEQUENTIAL top-level builds in one driver
-# thread — the contract every harness here has (grading driver,
-# check.py, bench.py, pytest).  Concurrent job submission from
-# multiple driver threads would race the depth counter and could
-# release one thread's frames mid-build; such a host should set
-# AUTO_RELEASE_CACHES = False and manage its own cache lifecycle.
-AUTO_RELEASE_CACHES = True
-_build_depth = 0
-_last_top_key: str | None = None
-_tracked_frames: list[DataFrame] = []  # persisted by the current top key
-_tracked_tables: list[str] = []  # CACHE TABLE names pinned by the key
+# Rule: a build persists a frame it reads more than once through
+# ``reuse()``.  The DataFrame a build returns is lazy, so the build
+# cannot unpersist; the next top-level registered build on the same
+# thread (or ``release_caches``) unpersists what the previous one
+# recorded.  A composed build runs inside its caller's scope and never
+# releases mid-build; outside any build ``reuse()`` does not persist.
+# Thread scope: each thread has its own scope, so a build on one
+# thread never releases frames another thread's build recorded.
+
+
+class _BuildScope(threading.local):
+    def __init__(self) -> None:
+        self.depth = 0  # registered builds on this thread's stack
+        self.frames: list[DataFrame] = []  # recorded since the last release
+
+
+_scope = _BuildScope()
+
+
+def reuse(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the current registered build and record it
+    for release; outside a registered build return ``df`` as is."""
+    if _scope.depth == 0:
+        return df
+    df = df.persist()
+    _scope.frames.append(df)
+    return df
 
 
 def release_caches(spark: SparkSession) -> None:
-    """Release every cache entry the current top-level key's builds
-    have registered — the bench's cold-run hook (BASELINE.md r16
-    protocol; VERDICT r15 "what's wrong" #1).
-
-    Same-key rebuilds deliberately KEEP their caches under the normal
-    release discipline (the wrapper only releases when the top-level
-    key CHANGES), which means a warm-up + timed-rebuild protocol would
-    time cache READS of every persisted subtree instead of the
-    computation.  bench.py calls this between the warm-up and each
-    timed run so every timed execution recomputes its persisted
-    subtrees from the parquet inputs (localCheckpoint blocks never
-    carry across rebuilds anyway — they are keyed to the original RDD
-    instance, not to plan equality — so after this call a rebuilt
-    query's plan has no warm Spark-side state left to read)."""
-    _release_tracked(spark)
-
-
-def in_registered_build() -> bool:
-    """True while a registered build is on the stack — shared helpers
-    use this to persist() reuse points ONLY when the release wrapper
-    will reclaim them (a direct caller outside any build would leak
-    the entry in the CacheManager for the session's lifetime)."""
-    return _build_depth > 0
-
-
-def track_sql_cached_table(name: str) -> None:
-    """Record a ``CACHE TABLE name`` issued inside a registered build
-    so the deterministic release can UNCACHE it (DataFrame-level
-    interception cannot see SQL-surface cache commands)."""
-    if _build_depth > 0:
-        _tracked_tables.append(name)
-
-
-def _release_tracked(spark: SparkSession) -> None:
-    global _tracked_frames, _tracked_tables
-    for df in _tracked_frames:
+    """Unpersist every frame this thread's builds recorded since the
+    last release — the cold-run hook between timed runs (bench.py,
+    perfbench)."""
+    frames, _scope.frames = _scope.frames, []
+    for df in frames:
         try:
             df.unpersist(blocking=False)
         except Exception:
-            pass  # a dead frame just means nothing left to release
-    _tracked_frames = []
-    for t in _tracked_tables:
-        try:
-            spark.sql(f"UNCACHE TABLE IF EXISTS {t}")
-        except Exception:
-            pass
-    _tracked_tables = []
+            pass  # a stopped session has nothing left to release
 
 
-# Interception point: builds call plain ``df.persist()`` / ``.cache()``
-# (85 sites follow the SCALE.md r13 checkpoint rule); wrapping the two
-# DataFrame methods once here records the returned frame when — and
-# only when — a registered build is on the stack (_build_depth > 0).
-# Outside a build (host code, tests driving persist directly) the
-# original behavior is byte-for-byte unchanged.  NOTE: Spark 4 made
-# ``pyspark.sql.DataFrame`` an abstract facade whose CONCRETE subclass
-# (pyspark.sql.classic.dataframe.DataFrame) overrides persist/cache —
-# the wrap must land on every class that DEFINES the method in its own
-# __dict__, or instances never see it.
-def _wrap_tracking(cls, method: str) -> None:
-    orig = cls.__dict__[method]
-
-    @functools.wraps(orig)
-    def tracking(self, *args, **kwargs):
-        out = orig(self, *args, **kwargs)
-        if _build_depth > 0:
-            _tracked_frames.append(out)
-        return out
-
-    setattr(cls, method, tracking)
-
-
-def _install_tracking() -> None:
-    classes = [DataFrame]
-    try:  # the classic (py4j) engine — the one local/cluster runs use
-        from pyspark.sql.classic.dataframe import DataFrame as _CDF
-
-        classes.append(_CDF)
-    except ImportError:  # pre-4.0 layout: DataFrame is already concrete
-        pass
-    for cls in classes:
-        for method in ("persist", "cache"):
-            if method in cls.__dict__:
-                _wrap_tracking(cls, method)
-
-
-_install_tracking()
-
-
-def _with_cache_release(fn: BuildFn, name: str | None = None) -> BuildFn:
+def _build_scope(fn: BuildFn) -> BuildFn:
     @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        global _build_depth, _last_top_key
-        if _build_depth == 0 and AUTO_RELEASE_CACHES:
-            key = name or fn.__name__
-            if _last_top_key is not None and _last_top_key != key:
-                _release_tracked(spark)
-            _last_top_key = key
-        _build_depth += 1
+    def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
+        if _scope.depth == 0:
+            release_caches(spark)
+        _scope.depth += 1
         try:
             return fn(spark, sf_dir)
         finally:
-            _build_depth -= 1
+            _scope.depth -= 1
 
-    return wrapped
+    return scoped
 
 
 def register(
@@ -489,7 +388,7 @@ def register(
         resolved = check or ("hash" if oracle is not None else "rows")
         REGISTRY[name] = QueryDef(
             name=name,
-            build=_with_cache_release(fn, name),
+            build=_build_scope(fn),
             oracle=oracle,
             check=resolved,
             notes=notes,

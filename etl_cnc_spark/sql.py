@@ -22,7 +22,7 @@ def run(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     return spark.sql(text)
 
 
-from .registry import register, track_sql_cached_table  # noqa: E402
+from .registry import register, reuse  # noqa: E402
 
 # Shared-text keys: ONE dialect-neutral SQL string is BOTH the Spark
 # query (via run()) and the DuckDB oracle — the strongest §3.2
@@ -331,10 +331,9 @@ def sql_entry_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_orderstatus = 'F' AND o_totalprice >= 50000.0
         """
     )
-    # SQL-surface caching bypasses the DataFrame persist interception;
-    # register the table so the scoped release can UNCACHE it at the
-    # next top-level key (registry ADVICE-r14 lifecycle)
-    track_sql_cached_table("etlcnc_hot_orders")
+    # persisting the cached table adds no second entry; it records the
+    # table in the build scope, whose release uncaches it
+    reuse(spark.table("etlcnc_hot_orders"))
     return spark.sql(
         """
         SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,

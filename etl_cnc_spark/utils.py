@@ -209,9 +209,7 @@ def sql_avg_money(expr: str) -> str:
     )
 
 
-def pairwise_set_overlap(
-    df, group_col: str, out_a: str, out_b: str, *, cache_input: bool = True
-):
+def pairwise_set_overlap(df, group_col: str, out_a: str, out_b: str):
     """Exact pairwise Jaccard/containment of per-group element sets.
 
     ``df`` must be a DISTINCT (group, element) frame with exactly two
@@ -221,23 +219,17 @@ def pairwise_set_overlap(
     events_user_overlap and text_vocab_overlap so the overlap math
     lives in ONE place. Shape: one self-join keyed on the element
     (output bounded by |groups|² per element) + broadcast size joins.
-
-    ``cache_input`` (default True): the helper persist()s ``df``
-    because it is consumed three times (size aggregate + both
-    self-join sides) and both measured callers re-scanned their fact
-    table 4x without it (SCALE.md r13 audit). Pass ``False`` when the
-    caller has already cached/checkpointed the frame, so the helper
-    does not register a second redundant CacheManager entry
-    (ADVICE r13, low).
     """
     from pyspark.sql import functions as F
+
+    from .registry import reuse
 
     elem = [c for c in df.columns if c != group_col][0]
     # the distinct (group, element) frame feeds the size aggregate AND
     # both self-join sides — DATA-SCALED, persist() per the SCALE.md
-    # r13 rule (both callers re-scanned their fact table 4x before)
-    if cache_input:
-        df = df.persist()
+    # r13 rule (both callers re-scanned their fact table 4x before).
+    # A caller that already cached an equal plan gets no second entry.
+    df = reuse(df)
     sizes = df.groupBy(group_col).agg(F.count("*").cast("long").alias("n"))
     a = df.select(F.col(group_col).alias(out_a), elem)
     b = df.select(F.col(group_col).alias(out_b), elem)

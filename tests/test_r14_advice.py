@@ -3,21 +3,22 @@
 ADVICE r13 (medium) flagged that the ~100 persist() sites added by the
 SCALE.md checkpoint rule have no release path — a 696-key
 single-session sweep accumulates every key's MEMORY_AND_DISK entries
-in the CacheManager until session end.  The fix is in
-registry._with_cache_release: every registered build clears the SQL
-cache at TOP-LEVEL entry (the previous key's result is fully consumed
-by then in every sequential harness), while a depth counter keeps
-composed builds (dedup_recall_report → dedup_embedding*) from
-clearing mid-composition.  These tests pin both halves plus the
-pairwise_set_overlap cache_input opt-out (ADVICE r13, low).
+in the CacheManager until session end.  Builds persist through
+``registry.reuse``, which records the frame in the thread's build
+scope; the next top-level registered build releases what the previous
+one recorded, while a composed build (dedup_recall_report →
+dedup_embedding*) never releases mid-build.  These tests pin the
+scope's rules.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from etl_cnc_spark import registry as R
-from etl_cnc_spark.registry import load_all
+from etl_cnc_spark.registry import load_all, reuse
 from etl_cnc_spark.utils import pairwise_set_overlap
 
 REGISTRY = load_all()
@@ -27,8 +28,12 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _is_cached(df) -> bool:
+    return df.storageLevel.useMemory
+
+
 def test_next_top_level_build_releases_previous_caches(spark, sf_dir):
-    """Key N's persist() entries are dropped when key N+1 builds."""
+    """Key N's reuse() entries are dropped when key N+1 builds."""
     # events_user_overlap persists its distinct (group, element) frame
     # via pairwise_set_overlap — materialize it so the entry is live.
     out = REGISTRY["events_user_overlap"].build(spark, sf_dir)
@@ -40,82 +45,137 @@ def test_next_top_level_build_releases_previous_caches(spark, sf_dir):
     assert _cache_empty(spark), "previous key's caches must be released"
 
 
-def test_same_key_rebuild_keeps_caches(spark, sf_dir):
-    """bench.py's warmup + timed-run protocol rebuilds the SAME key;
-    the release must NOT fire between same-key rebuilds (CacheManager
-    plan-equality lets the rebuilt plan hit the warm entry — the
-    steady state the frozen BASELINE.md gates were measured in)."""
-    out = REGISTRY["events_user_overlap"].build(spark, sf_dir)
-    out.collect()
-    assert not _cache_empty(spark)
-    REGISTRY["events_user_overlap"].build(spark, sf_dir).collect()
-    assert not _cache_empty(spark), "same-key rebuild must keep caches"
-    # a different key still releases
-    REGISTRY["agg_global"].build(spark, sf_dir).collect()
-    assert _cache_empty(spark)
+def test_same_key_rebuild_releases_previous_caches(spark, sf_dir):
+    """A rebuild of the SAME key releases the previous build's frames
+    too (no same-key exception), and the rebuilt frame still computes."""
+    built = []
+
+    def build(s, d):
+        # distinct plans per build: the CacheManager matches by plan
+        df = reuse(s.range(20 + len(built)).withColumn("v", F.col("id") * 5))
+        built.append(df)
+        return df
+
+    scoped = R._build_scope(build)
+    assert scoped(spark, sf_dir).count() == 20
+    assert _is_cached(built[0])
+    assert scoped(spark, sf_dir).count() == 21
+    assert not _is_cached(built[0]), "rebuild must release the previous frame"
+    assert _is_cached(built[1])
+    R.release_caches(spark)
+    assert not _is_cached(built[1])
 
 
 def test_composed_builds_do_not_clear_mid_build(spark, sf_dir):
-    """The depth counter: an inner registered build invoked from
-    inside an outer build must NOT clear the outer's persists."""
+    """An inner registered build invoked from inside an outer build
+    must NOT release the outer's frames."""
     captured = {}
 
     def outer(s, d):
-        inner_frame = s.range(10).withColumn("v", F.col("id") * 2)
-        inner_frame = inner_frame.persist()
-        inner_frame.count()  # materialize the cache entry
-        captured["frame"] = inner_frame
-        # a registered (wrapped) build at depth 1 — must not clear
+        frame = reuse(s.range(10).withColumn("v", F.col("id") * 2))
+        frame.count()  # materialize the cache entry
+        captured["frame"] = frame
+        # a registered (scoped) build nested in this one — must not clear
         REGISTRY["agg_global"].build(s, d).collect()
-        assert not _cache_empty(s), (
-            "inner registered build cleared the outer build's cache"
+        assert _is_cached(frame), (
+            "inner registered build released the outer build's cache"
         )
-        return inner_frame
+        return frame
 
-    wrapped = R._with_cache_release(outer)
-    res = wrapped(spark, sf_dir)
+    res = R._build_scope(outer)(spark, sf_dir)
     assert res.count() == 10
-    captured["frame"].unpersist()
+    assert _is_cached(captured["frame"])
+    R.release_caches(spark)
+    assert not _is_cached(captured["frame"])
 
 
 def test_release_is_top_level_only_and_resets_depth_on_error(spark, sf_dir):
-    """The depth counter unwinds on exception, so a failed build does
-    not permanently disable the release for the rest of the session."""
+    """A failed build unwinds the scope: reuse() outside a build is a
+    no-op again, and the next top-level build still releases."""
+    held = []
 
     def boom(s, d):
+        held.append(reuse(s.range(7)))
         raise RuntimeError("boom")
 
-    wrapped = R._with_cache_release(boom)
     try:
-        wrapped(spark, sf_dir)
+        R._build_scope(boom)(spark, sf_dir)
     except RuntimeError:
         pass
-    assert R._build_depth == 0
+    assert _is_cached(held[0])
+    plain = spark.range(3)
+    assert not _is_cached(reuse(plain)), "reuse() outside a build must not persist"
+    REGISTRY["agg_global"].build(spark, sf_dir).collect()
+    assert not _is_cached(held[0]), "next top-level build must release"
 
 
-def test_pairwise_set_overlap_cache_input_opt_out(spark):
-    """cache_input=False registers NO CacheManager entry (the caller
-    already cached the frame); results are identical either way."""
-    spark.catalog.clearCache()
+def test_build_on_another_thread_keeps_this_threads_frames(spark, sf_dir):
+    """Scopes are per thread: a top-level build on thread B must not
+    release the frames thread A's build recorded."""
+    a_built = threading.Event()
+    b_done = threading.Event()
+    seen = {}
+
+    def build_a(s, d):
+        df = reuse(s.range(30).withColumn("a", F.col("id") + 1))
+        df.count()
+        return df
+
+    def thread_a():
+        seen["frame"] = R._build_scope(build_a)(spark, sf_dir)
+        a_built.set()
+        b_done.wait(timeout=120)
+        seen["cached_after_b"] = _is_cached(seen["frame"])
+        R.release_caches(spark)
+        seen["cached_after_release"] = _is_cached(seen["frame"])
+
+    def thread_b():
+        a_built.wait(timeout=120)
+        try:
+            REGISTRY["agg_global"].build(spark, sf_dir).collect()
+            R.release_caches(spark)
+        finally:
+            b_done.set()
+
+    ta, tb = threading.Thread(target=thread_a), threading.Thread(target=thread_b)
+    ta.start()
+    tb.start()
+    ta.join(timeout=300)
+    tb.join(timeout=300)
+    assert not ta.is_alive() and not tb.is_alive()
+    assert seen["cached_after_b"], "thread B's build released thread A's frame"
+    assert not seen["cached_after_release"]
+
+
+def test_pairwise_set_overlap_on_cached_input_adds_no_entry(spark):
+    """Inside a build, pairwise_set_overlap reuse()s its input; a caller
+    that already cached an equal plan gets no second CacheManager
+    entry, and the result matches the uncached helper's."""
     rows = [("g1", "a"), ("g1", "b"), ("g2", "b"), ("g2", "c"), ("g3", "a")]
-    dv = spark.createDataFrame(rows, "grp string, elem string")
-
-    out_nocache = pairwise_set_overlap(
-        dv, "grp", "ga", "gb", cache_input=False
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    plain = sorted(
+        tuple(r)
+        for r in pairwise_set_overlap(
+            spark.createDataFrame(rows, "grp string, elem string"),
+            "grp", "ga", "gb",
+        ).collect()
     )
-    got_nocache = sorted(
-        tuple(r) for r in out_nocache.collect()
-    )
-    assert _cache_empty(spark), "cache_input=False must not persist"
+    got = {}
 
-    out_cached = pairwise_set_overlap(dv, "grp", "ga", "gb")
-    got_cached = sorted(tuple(r) for r in out_cached.collect())
-    assert not _cache_empty(spark), "default path persists the input"
-    spark.catalog.clearCache()
+    def build(s, d):
+        dv = reuse(s.createDataFrame(rows, "grp string, elem string"))
+        before = cm.numCachedEntries()
+        out = pairwise_set_overlap(dv, "grp", "ga", "gb")
+        got["added"] = cm.numCachedEntries() - before
+        return out
 
-    assert got_nocache == got_cached
+    out = R._build_scope(build)(spark, None)
+    got_cached = sorted(tuple(r) for r in out.collect())
+    R.release_caches(spark)
+    assert got["added"] == 0, "an equal-plan persist must not add an entry"
+    assert got_cached == plain
     # pairs with a shared element: (g1,g2) share b, (g1,g3) share a
-    assert len(got_nocache) == 2
+    assert len(plain) == 2
 
 
 def test_hoeffding_cap_raises_in_spark(spark, sf_dir, monkeypatch):

@@ -11,11 +11,11 @@ Three advisor findings from the r14 review:
    (~4.6e9 pairs) but left it unenforced — the non-ANSI long sum wraps
    silently past 2^63.  Fixed with the hoeffding pattern: raise_error
    in Spark, error() in the oracle, same remedy message.
-3. registry._with_cache_release used session-global clearCache(),
-   dropping a host application's own cached frames.  Fixed: a
-   persist()/cache() interception active only inside registered builds
-   tracks exactly the build's entries; release unpersists those and
-   UNCACHEs tracked CACHE TABLE names — host caches survive.
+3. the registry's cache release used session-global clearCache(),
+   dropping a host application's own cached frames.  Fixed: builds
+   persist through registry.reuse, which records exactly the build's
+   entries (a CACHE TABLE too, by reusing the cached table); release
+   unpersists those — host caches survive.
 """
 
 from __future__ import annotations
@@ -163,9 +163,9 @@ def test_build_caches_release_but_host_survives(spark, sf_dir):
 
 
 def test_sql_cache_table_released_at_next_key(spark, sf_dir):
-    """CACHE TABLE goes through the SQL surface, invisible to the
-    DataFrame interception; the build registers the name and the
-    release UNCACHEs it at the next top-level key."""
+    """CACHE TABLE goes through the SQL surface; the build reuse()s
+    the cached table (no second entry), so the release at the next
+    top-level key uncaches it."""
     REGISTRY["sql_entry_cache_table"].build(spark, sf_dir).collect()
     assert spark.catalog.isCached("etlcnc_hot_orders")
     REGISTRY["agg_global"].build(spark, sf_dir).collect()

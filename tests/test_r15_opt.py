@@ -95,7 +95,7 @@ def test_rfm_melts_with_one_generate(spark, sf_dir):
 
 def test_global_ordered_direct_call_leaks_no_cache(spark, sf_dir):
     """r15: global_ordered persists its bucketed frame ONLY inside a
-    registered build (where the release wrapper reclaims it) — a
+    registered build (where the build scope releases it) — a
     direct call has no release point, so persisting there would leave
     a CacheManager entry for the session's lifetime and break the r14
     release invariant for every later key."""

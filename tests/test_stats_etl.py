@@ -78,6 +78,22 @@ def test_python_datasource_declares_splits(spark):
     assert df.count() == N_SPLITS * 1000
 
 
+def test_sink_python_ds_rebuild_matches_oracle(spark, sf_dir):
+    """A rebuild in the same process rewrites the sink's staging
+    directory instead of appending to it: every build matches the
+    oracle, and a still-lazy frame from the first build re-reads the
+    same rows."""
+    from etl_cnc_spark.oracle import compare
+
+    q = REGISTRY["sink_python_ds"]
+    first = q.build(spark, sf_dir)
+    rows = sorted(first.collect())
+    for _ in range(2):
+        res = compare(q, spark, sf_dir)
+        assert res.ok, f"{res.detail}\n" + "\n".join(res.mismatches)
+    assert sorted(first.collect()) == rows
+
+
 def test_cms_error_bounds(spark, sf_dir):
     """CMS never underestimates, and stays within the e/w * N
     classical bound (with 4 rows the failure probability is

@@ -49,7 +49,7 @@ from etl_cnc_spark.registry import load_all  # noqa: E402
 PKG = "etl_cnc_spark"
 
 # Shared harness files excluded from the per-key closure: every build
-# references @register (and through it the cache-release wrapper), so
+# references @register (and through it the build scope), so
 # a change there marks ALL keys stale — but it is key-agnostic
 # infrastructure, identically exercised by every key the driver runs
 # in ANY window, and is separately pinned by its own pytest suite +
