@@ -23,8 +23,7 @@ inputs instead of reading the warm-up's materialized cache.  The
 warm-up still serves its original purpose (JIT, code cache, FS page
 cache).  Queries, timing methodology (median of 3 ``.collect()``
 wall-clocks), env contract and the one-line stdout JSON are
-unchanged; the warm-protocol numbers measured at the same HEAD are
-recorded in OPTIMIZATION_r16.md and the re-freeze note in BASELINE.md.
+unchanged; the re-freeze note is in BASELINE.md.
 """
 
 from __future__ import annotations

@@ -2,9 +2,10 @@
 
 SURVEY.md §1: ten parquet tables per scale-factor dir
 (``region nation customer supplier part orders lineitem events
-documents embeddings``). Schema-on-read from parquet footers; the
-DuckDB oracle pre-registers views of the same names, so view names
-here match exactly.
+documents embeddings``). Schema-on-read from parquet footers, read on
+the driver (``footer_schema``) so resolving a table fires no Spark
+job; the DuckDB oracle pre-registers views of the same names, so view
+names here match exactly.
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType, _parse_datatype_json_string
 
 from .session import tune
 
@@ -44,16 +45,54 @@ def events_ts_is_long(spark: SparkSession, events_path: str) -> bool:
     Both runtimes exist across driver rounds, so every events reader
     branches on the observed schema instead of assuming one era.
     """
-    # tune() first: on nanosAsLong-era runtimes this batch read throws
-    # without the conf, and callers must not have to know that.
+    # tune() first: on nanosAsLong-era runtimes the schema conversion
+    # throws without the conf, and callers must not have to know that.
     tune(spark)
-    dt = spark.read.parquet(events_path).schema["ts"].dataType
-    return isinstance(dt, LongType)
+    schema = footer_schema(spark, events_path) or spark.read.parquet(events_path).schema
+    return isinstance(schema["ts"].dataType, LongType)
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer for one
+    parquet FILE, read from its footer on the driver; None when
+    ``path`` is not a single file (a directory of part files, or a
+    missing path), which is left to Spark's own reader.
+
+    Spark's own inference runs a one-task job per read
+    (``mergeSchemasInParallel``) to open that same footer; here the
+    driver opens it through py4j and converts it with the same pieces
+    the inference job uses: the Spark schema stored in the footer's
+    key-value metadata when a Spark writer left one, else
+    ``ParquetToSparkSchemaConverter`` configured from the session's
+    SQL conf (binary-as-string, INT96, timestamp-NTZ and nanos-as-long
+    all follow the conf).  No Spark job runs."""
+    jvm = spark._jvm
+    jss = spark._jsparkSession
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hconf = jss.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(hconf).isFile(hpath):
+        return None
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, hconf)
+    )
+    try:
+        footer = jvm.org.apache.parquet.hadoop.Footer(hpath, reader.getFooter())
+    finally:
+        reader.close()
+    converter = parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf())
+    jschema = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
+    # file sources read every column as nullable, as inference reports
+    return _parse_datatype_json_string(jschema.asNullable().json())
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Lazy: only the footer is touched until an
-    action runs, so repeated calls are cheap.
+    """Read one fixture table. Lazy and job-free: the schema comes from
+    the file's parquet footer, read on the driver (``footer_schema``),
+    and is handed to ``spark.read.schema(...).parquet(...)``, so the
+    read fires no schema-inference job; no data is touched until an
+    action runs.  A table stored as a directory of part files is read
+    with Spark's own inference (one job on first use).
 
     ``events.ts`` is TIMESTAMP(NANOS) in parquet; whatever type the
     runtime surfaces it as (see ``events_ts_is_long``), normalize to a
@@ -66,11 +105,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema resolved on the first call.  Files added, removed or
     re-schema'd under ``sf_dir`` later are not seen by this session
     (use a new session, or drop ``spark._etlcnc_tables``).
-    ``spark.read.parquet`` costs a driver-side footer read + schema
-    resolution on every call, and the bench keys reference 1–4 tables
-    per build, so the uncached path re-paid ~20–50 ms of pure
-    driver/py4j latency per reference — the same reason a catalog
-    resolves a table once per session.  The memo dict lives ON the
+    A read costs a footer read + schema resolution on every call, and
+    the bench keys reference 1–4 tables per build, so the uncached
+    path re-paid ~20–50 ms of pure driver/py4j latency per reference
+    — the same reason a catalog resolves a table once per session.  The memo dict lives ON the
     session object, so a stopped/replaced session never leaks stale
     handles into a new one."""
     tune(spark)
@@ -78,7 +116,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (sf_dir, name)
     df = memo.get(key)
     if df is None:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        path = f"{sf_dir}/{name}.parquet"
+        schema = footer_schema(spark, path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         if name == "events":
             if isinstance(df.schema["ts"].dataType, LongType):
                 df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

@@ -709,7 +709,10 @@ def dedup_minhash_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sig = reuse(
+    # sig feeds both sides of the bucket self-join.  No cache: both
+    # sides plan the same exchanges and AQE runs each once, where a
+    # cached sig would stop that reuse and cost jobs of its own.
+    sig = (
         sh.selectExpr("doc_id", "explode(sequence(1, 16)) AS h", "sh")
         .selectExpr(
             "doc_id", "h", "md5(concat(CAST(h AS STRING), '|', sh)) AS hv"
@@ -1009,8 +1012,8 @@ _MINHASH_ORACLE = REGISTRY["dedup_minhash_relational"].oracle
 
 @register(
     "text_near_dup_cluster",
-    bench=True,  # iterative-join representative: a regression in the
-    # pointer-jumping components loop is driver-visible here
+    bench=True,  # candidates → gate → components composition: the
+    # MinHash chain plus one Arrow-batched union-find group
     oracle=f"""
     WITH RECURSIVE mh AS ({_MINHASH_ORACLE}),
     pairs AS (
@@ -1036,9 +1039,12 @@ def text_near_dup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity gate → clusters → keep one per cluster — with each
     stage individually verified elsewhere (dedup_minhash_relational,
     dedup_cluster) and the composition verified here against DuckDB's
-    recursive-CTE reachability. Scale: bucket-join candidates are
-    linear-ish, components run O(log diameter) rounds, driver sees
-    only convergence counts."""
+    recursive-CTE reachability. Scale: the candidates come from
+    dedup_minhash_relational's ``doc_id < 60`` scope, so the symmetric
+    edge frame has at most 60·59 rows — far under
+    ``LOCAL_CC_MAX_EDGES`` at any SF.  Components therefore go straight
+    to the one-group union-find (``_local_union_find``): no eager
+    checkpoint or edge count at build, so the build fires no job."""
     mh = REGISTRY["dedup_minhash_relational"].build(spark, sf_dir)
     pairs = mh.where(F.col("est_jaccard") >= NEARDUP_TAU).select(
         "doc_a", "doc_b"
@@ -1059,7 +1065,7 @@ def text_near_dup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("_e")
     ).select("_e.u", "_e.v")
-    labels = min_label_components(edges)
+    labels = _local_union_find(edges)
     return labels.select(
         F.col("nid").alias("doc_id"), F.col("label").alias("cluster_id")
     )

@@ -14,10 +14,11 @@ Two operators:
 
 Float discipline (SURVEY.md §5): every scoring formula is written
 with byte-identical literals and operation order on the Spark and
-DuckDB sides; per-term partial scores are aggregated into fixed
-slots (``sum(CASE term WHEN ...)``) and added in a fixed expression
-order, so no floating-point sum depends on row order — the results
-are bitwise reproducible at any parallelism.
+DuckDB sides; per-term partial scores sit in fixed slots (the oracle's
+``sum(CASE term WHEN ...)``, the Spark side's row-local
+``CASE WHEN tf > 0``) added in a fixed expression order, so no
+floating-point sum depends on row order — the results are bitwise
+reproducible at any parallelism.
 
 No reference citations possible — /root/reference is empty (see
 SURVEY.md §0); the surface derives from the public BM25/RRF
@@ -112,20 +113,39 @@ _BM25_CTE = f"""
 # f-string templates parse JVM-side in one call per select.  Every
 # literal keeps its exact double form via the `D` suffix (a bare SQL
 # `0.5` would parse as DECIMAL and change the arithmetic type lattice).
-_PER_TERM_STRUCTS = ", ".join(
-    f"struct('{t}' AS term, CAST(size(filter(ws, w -> w = '{t}')) AS BIGINT) AS tf)"
-    for t in QUERY_TERMS
-)
-_CONTRIB_SPARK = (
-    "ln(1.0D + ((n_docs - df) + 0.5D) / (df + 0.5D))"
-    f" * (CAST(tf AS DOUBLE) * {BM25_K1P1}D)"
-    f" / (tf + {BM25_K1}D * ({BM25_OMB}D + {BM25_B}D * (dl / avgdl)))"
-)
-_SLOT_EXPRS = [
-    f"sum(CASE WHEN term = '{t}' THEN contrib ELSE 0.0D END) AS s{i}"
+_TF_EXPRS = [
+    f"CAST(size(filter(ws, w -> w = '{t}')) AS BIGINT) AS tf{i}"
     for i, t in enumerate(QUERY_TERMS)
 ]
+_STAT_EXPRS = [
+    "CAST(count(1) AS BIGINT) AS n_docs",
+    "CAST(sum(dl) AS DOUBLE) / count(1) AS avgdl",
+    *(
+        f"CAST(count_if(tf{i} > 0) AS BIGINT) AS df{i}"
+        for i in range(len(QUERY_TERMS))
+    ),
+]
+
+
+def _contrib_spark(i: int) -> str:
+    return (
+        f"ln(1.0D + ((n_docs - df{i}) + 0.5D) / (df{i} + 0.5D))"
+        f" * (CAST(tf{i} AS DOUBLE) * {BM25_K1P1}D)"
+        f" / (tf{i} + {BM25_K1}D * ({BM25_OMB}D + {BM25_B}D * (dl / avgdl)))"
+    )
+
+
+# slot i = the term's contrib when the doc holds it, else 0.0 — what
+# the oracle's per-doc sum(CASE term ...) yields, since each doc has at
+# most one row per term and adding exact zeros changes no bit
+_SLOT_EXPRS = [
+    f"CASE WHEN tf{i} > 0 THEN {_contrib_spark(i)} ELSE 0.0D END AS s{i}"
+    for i in range(len(QUERY_TERMS))
+]
 _SCORE_SPARK = " + ".join(f"s{i}" for i in range(len(QUERY_TERMS)))
+_N_TERMS_SPARK = " + ".join(
+    f"CAST(tf{i} > 0 AS BIGINT)" for i in range(len(QUERY_TERMS))
+)
 
 
 def _bm25_scores(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
@@ -134,56 +154,24 @@ def _bm25_scores(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
 
     Deliberately does NOT explode the corpus into words: per-term
     frequencies come from |Q| array folds per document (``filter`` +
-    ``size`` over the split array), so tf and dl are computed
-    row-locally with ZERO data-sized shuffle — the only shuffles are
-    the 4-row df aggregate, the 1-row corpus stats, and the final
-    per-doc score aggregate. (An exploded-words formulation shuffles
-    ~avg-doc-length× more rows twice; the oracle deliberately keeps
-    that independent shape — tf/df/dl are integers either way, so the
-    two formulations agree bitwise.)
-
-    The corpus is SPLIT ONCE: the per-doc (dl, tf-structs) base frame
-    — doc-count-sized integers, no text — is persist()ed and every
-    consumer (corpus stats, the tf explode, df, scoring) reads the
-    cache; before r12 the split + array folds re-ran up to 3x
-    (stats pass, tf pass, and tf's second consumer). The matched
-    (doc, term) frame is persisted too. r12 interleaved 8-run A/B
-    on sim_hybrid_rrf: 1.135 s vs 1.244 s. r13: both frames moved
-    from localCheckpoint to persist() — they are DATA-SCALED, and
-    persist keeps lineage so executor loss recomputes instead of
-    failing the job (SCALE.md checkpoint rule).
-
-    r16: the expression trees are built from SQL strings (module
-    constants above) instead of per-node Column calls — identical
-    Catalyst expressions (hash parity at three SFs proves it), a
-    fraction of the py4j traffic."""
-    d = table(spark, sf_dir, "documents").selectExpr(
+    ``size`` over the split array), so tf and dl are row-local.  The
+    query is a fixed set of |Q| = 4 terms, so ONE 1-row aggregate over
+    the per-doc frame gives every corpus statistic — n_docs, avgdl and
+    the df of each term — and the score is a row-local expression over
+    that broadcast row: no exploded (doc, term) frame, no df shuffle,
+    no per-doc score aggregate.  (An exploded-words formulation
+    shuffles ~avg-doc-length× more rows twice; the oracle deliberately
+    keeps that independent shape — tf/df/dl are integers either way,
+    and each oracle slot sum adds one nonzero contrib to exact zeros,
+    so the two formulations agree bitwise.)"""
+    base = table(spark, sf_dir, "documents").selectExpr(
         "doc_id", "split(text, ' ') AS ws"
-    )
-    # DATA-SCALED (doc-count-sized): persist(), not localCheckpoint —
-    # lineage is kept so an executor loss RECOMPUTES the partitions
-    # instead of failing the job (SCALE.md round-13 checkpoint rule);
-    # reuse across the four consumers is identical.
-    base = reuse(d.selectExpr(
-        "doc_id",
-        "CAST(size(ws) AS BIGINT) AS dl",
-        f"array({_PER_TERM_STRUCTS}) AS terms",
-    ))
-    stats = base.agg(
-        F.expr("CAST(count(1) AS BIGINT) AS n_docs"),
-        F.expr("CAST(sum(dl) AS DOUBLE) AS n_words"),
-    ).selectExpr("n_docs", "n_words / n_docs AS avgdl")
-    # doc x matched-terms — data-scaled, same rule
-    tf = reuse(base.selectExpr("doc_id", "dl", "inline(terms)").where("tf > 0"))
-    dfx = tf.groupBy("term").agg(F.expr("CAST(count(1) AS BIGINT) AS df"))
-    scored = (
-        tf.join(F.broadcast(dfx), "term")
-        .crossJoin(F.broadcast(stats))
-        .selectExpr("doc_id", "term", f"{_CONTRIB_SPARK} AS contrib")
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        *[F.expr(s) for s in _SLOT_EXPRS],
-        F.expr("CAST(count(1) AS BIGINT) AS n_terms"),
+    ).selectExpr("doc_id", "CAST(size(ws) AS BIGINT) AS dl", *_TF_EXPRS)
+    stats = base.selectExpr(*_STAT_EXPRS)
+    per_doc = (
+        base.crossJoin(F.broadcast(stats))
+        .where(" OR ".join(f"tf{i} > 0" for i in range(len(QUERY_TERMS))))
+        .selectExpr("doc_id", f"{_N_TERMS_SPARK} AS n_terms", *_SLOT_EXPRS)
     )
     # Global top-n WITHOUT a corpus-sized single-partition window:
     # orderBy+limit plans as TakeOrderedAndProject (per-partition
@@ -259,19 +247,21 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexical top-100 and the cosine top-100 against the query
     embedding (vec_id 0), fused without score calibration.
 
-    RRF needs only the two rank columns, so the fusion is a full
-    outer join of two already-bounded (≤100-row) lists — trivially
-    broadcastable at any corpus size; the expensive stages are the
+    RRF needs only the two rank columns, so the fusion is a union of
+    two already-bounded (≤100-row) lists grouped by doc_id — the
+    rank each list gives a doc, NULL where the list lacks it, with no
+    join at any corpus size; the expensive stages are the
     two rankers, each linear (BM25 above; cosine is one broadcast
     1-row query × corpus pass, same shape as ``sim_topk_exact``),
     and each takes its top-100 via TakeOrderedAndProject before any
     single-partition ranking window runs."""
     lex = _bm25_scores(spark, sf_dir, LIST_N).selectExpr(
-        "doc_id", "rn AS lex_rn"
+        "doc_id", "rn AS lex_rn", "CAST(NULL AS BIGINT) AS vec_rn"
     )
     # same Catalyst trees as the r15 Column-object build (_dot64 /
-    # _norm2 HOF folds), expressed as SQL strings — see _bm25_scores'
-    # r16 note; hash parity at three SFs pins the equivalence.
+    # _norm2 HOF folds), expressed as SQL strings — see the note on the
+    # BM25 expression strings; hash parity at three SFs pins the
+    # equivalence.
     norm2 = "aggregate({col}, 0.0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
     dot = (
         "aggregate(zip_with(qe, embedding,"
@@ -292,14 +282,21 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("cos").desc(), "doc_id")
         .limit(LIST_N)
         .withColumn("rn", F.row_number().over(wv).cast("long"))
-        .selectExpr("doc_id", "rn AS vec_rn")
+        .selectExpr("doc_id", "CAST(NULL AS BIGINT) AS lex_rn", "rn AS vec_rn")
     )
-    fused = lex.join(vec, "doc_id", "full").selectExpr(
-        "doc_id",
-        "lex_rn",
-        "vec_rn",
-        f"coalesce(1.0D / ({RRF_K} + lex_rn), 0.0D)"
-        f" + coalesce(1.0D / ({RRF_K} + vec_rn), 0.0D) AS rrf",
+    # each list holds a doc at most once, so max() per doc just picks
+    # its rank from the list that has it (NULL where it is absent)
+    fused = (
+        lex.unionByName(vec)
+        .groupBy("doc_id")
+        .agg(F.expr("max(lex_rn) AS lex_rn"), F.expr("max(vec_rn) AS vec_rn"))
+        .selectExpr(
+            "doc_id",
+            "lex_rn",
+            "vec_rn",
+            f"coalesce(1.0D / ({RRF_K} + lex_rn), 0.0D)"
+            f" + coalesce(1.0D / ({RRF_K} + vec_rn), 0.0D) AS rrf",
+        )
     )
     w = Window.orderBy(F.col("rrf").desc(), "doc_id")
     return (

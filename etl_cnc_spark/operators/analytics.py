@@ -750,13 +750,11 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ELSE 0 END) AS BIGINT) AS monetary_cents"
         ),
     )
-    # One cached per-user rollup feeds every consumer (the melted
-    # rank frame and the stats row): the events scan + aggregate runs
-    # ONCE. cache() (not localCheckpoint) keeps lineage, so executor
-    # loss on a real cluster recomputes instead of failing the query;
-    # the rollup is |users| rows — tiny, and cache() itself is lazy
-    # so no job runs at build.
-    base = reuse(base)
+    # The per-user rollup feeds two consumers (the melted rank frame
+    # and the stats row), and both read all three metrics, so both
+    # plan the same rollup exchange and AQE runs it once: the events
+    # scan + aggregate runs ONCE without a cache (a cached rollup would
+    # stop that reuse and cost jobs of its own).
     # Bounded metadata as a broadcast 1-row frame (2 scalars + 3
     # per-metric (lo, hi) ranges — metadata, never data): joins into
     # the plan lazily instead of a driver-side .first() at build.

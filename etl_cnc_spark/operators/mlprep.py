@@ -3069,27 +3069,24 @@ def ml_survival_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("p_day").isNotNull(), 1).otherwise(0).alias("ev"),
         "s",
     )
-    # cells feeds THREE consumers (the dt spine, the ds spine, and the
-    # dense left join) — uncached, each consumer replays the events
-    # scan + the per-user aggregate + the grid aggregate (3 fact
-    # passes at 100 TB; ~0.45 s of extra plan optimization per run at
-    # sf0.1).  persist(), not localCheckpoint: the grid is bounded so
-    # either is lifecycle-safe (the registry build scope releases
-    # the cache after this key), but a lazy checkpoint SERIALIZES the
-    # pipeline behind an RDD materialization barrier (A/B-measured
-    # ~0.1 s slower at sf0.1), while the cache lets the three
-    # consumers share one computation with lineage kept.
-    cells = reuse(
-        coded.groupBy("t", "s")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("c_all"),
-            F.count_if(F.col("ev") == 1).cast("long").alias("c_ev"),
-        )
+    cells = coded.groupBy("t", "s").agg(
+        F.count(F.lit(1)).cast("long").alias("c_all"),
+        F.count_if(F.col("ev") == 1).cast("long").alias("c_ev"),
     )
-    dt = cells.select("t").distinct()
-    ds = cells.select("s").distinct()
+    # Both spines come from ONE 1-row aggregate over cells; the dense
+    # frame is their cross product, exploded from that row and
+    # left-joined to the cells (a pair with no subjects gets zero
+    # counts, which add nothing to the folds below).  No cache: cells
+    # has two consumers (the spine aggregate and the join), and AQE
+    # runs the per-user exchange under both once, so the events scan
+    # runs once.
     dense = (
-        dt.crossJoin(ds)
+        cells.agg(
+            F.expr("collect_set(t) AS ts"),
+            F.expr("collect_set(s) AS ss"),
+        )
+        .selectExpr("explode(ts) AS t", "ss")
+        .selectExpr("t", "explode(ss) AS s")
         .join(cells, ["t", "s"], "left")
         .select(
             "t",

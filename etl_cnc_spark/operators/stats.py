@@ -2317,10 +2317,10 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_wasserstein_1d",
-    bench=True,  # the ECDF-grid prefix-machine representative: the
-    # last plan family with no frozen number (VERDICT r7 item 8) —
-    # hash-agg to the bounded cents grid, ONE bucketed prefix pass,
-    # grid-sized rank+1 self-join, broadcast totals.
+    bench=True,  # the ECDF-grid representative: hash-agg to the
+    # bounded cents grid, ONE _pid-bucketed window wave (running sums
+    # and lead() together), per-bucket metadata carrying the offsets,
+    # the next bucket's first value and n1/n2.
     oracle=f"""
     WITH ev AS (
         SELECT event_type,
@@ -2360,29 +2360,31 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus this one (the last grid point contributes nothing: both
     ECDFs are 1 there).
 
-    Scale shape: hash-aggregate to the bounded cents grid FIRST, then
-    ONE bucketed-prefix pass (``global_ordered``) yields both the
-    cumulative counts and the rank used to fetch the next grid value
-    (a grid-sized self-equi-join on rank+1 — never a lead() over an
-    unpartitioned window).  The summand is an exact BIGINT
-    (|cum1·n2 − cum2·n1| ≤ n1·n2, times the cents gap; the total is
-    bounded by n1·n2·span — within int64 through ~1e9×1e9-row
-    groups × 10^7-cent spans split across, which a 100 TB run stays
-    under because the grid aggregate has already collapsed the rows),
-    so the sum is order-free and the only double is the final
-    division."""
+    Scale shape: hash-aggregate to the bounded cents grid FIRST, give
+    each grid point an ordered bucket id from its own value (the
+    prefix machine's value-derived ``_pid``, see operators/prefix.py),
+    then ONE window wave partitioned by ``_pid`` yields both the
+    bucket-local running counts and ``lead(v_cents)`` — never a window
+    over an unpartitioned grid.  n1/n2 come from the same 1-row
+    aggregate as the bucket bounds and ride along in every row.  The
+    per-bucket metadata (≤ one row per bucket, grouped from the same
+    partitioned frame) folds in the exclusive offsets and the next
+    non-empty bucket's first value (the ``lead`` of a bucket's last
+    point), so one broadcast join completes every row: no cached
+    cumulative frame, no rank+1 self-join, no separate totals pass.
+    The summand is an
+    exact BIGINT (|cum1·n2 − cum2·n1| ≤ n1·n2, times the cents gap;
+    the total is bounded by n1·n2·span — within int64 through
+    ~1e9×1e9-row groups × 10^7-cent spans split across, which a
+    100 TB run stays under because the grid aggregate has already
+    collapsed the rows), so the sum is order-free and the only double
+    is the final division."""
     e = table(spark, sf_dir, "events").where(
         F.col("event_type").isin(KS_G1, KS_G2)
     )
-    # grid is BOUNDED (cents-domain-sized, not data-sized) and feeds
-    # FOUR consumers (global_ordered's min/max pass, its bucketed
-    # prefix, its per-bucket totals, and the n1/n2 totals below);
-    # without the lazy checkpoint each consumer replays the full
-    # events scan + aggregate — 10 parquet scans / 19 exchanges in
-    # the r12 plan, the r13 steady-state elevation (1.4-1.7x gate)
     # (r16: expressions as JVM-parsed SQL strings — the profile showed
     # ~half this query's cold wall was driver-side plan construction)
-    grid = reuse(
+    grid = (
         e.selectExpr(
             "event_type",
             "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
@@ -2393,36 +2395,80 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
         )
     )
-    # cum is the same grid-sized frame with two consumers (itself and
-    # its rank+1 shift).  r15: both reuse points moved from lazy
-    # localCheckpoint to persist() — the checkpoint's RDD
-    # materialization BARRIER serializes the stage pipeline (the
-    # cindex A/B measured the same swap), while the cache shares one
-    # computation with lineage kept; the build scope bounds the cache
-    # to this key's lifetime.
-    cum = reuse(global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col="rk",
-    ))
-    nxt = cum.selectExpr("rk - 1 AS rk", "v_cents AS v_next")
-    totals = grid.agg(
-        F.expr("CAST(sum(c1) AS BIGINT) AS n1"),
-        F.expr("CAST(sum(c2) AS BIGINT) AS n2"),
+    # ≤ 1024 buckets keeps the metadata fold in ONE `_pid DIV 1024`
+    # window partition (a few hundred rows at most); the grid is
+    # cents-domain-bounded, so more buckets would buy nothing.
+    parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 1024)
+    # One 1-row aggregate gives the bucket bounds AND n1/n2.  It reads
+    # every grid column, so its grid exchange is the same plan as the
+    # bucketed branch's and AQE runs it once (no cache: a cached grid
+    # would stop AQE from reusing the window exchange below, which
+    # both the rows and the metadata read).
+    stats = grid.selectExpr(
+        "min(v_cents) AS _lo",
+        "max(v_cents) AS _hi",
+        "CAST(sum(c1) AS BIGINT) AS n1",
+        "CAST(sum(c2) AS BIGINT) AS n2",
     )
-    num = (
-        cum.join(nxt, "rk")
-        .crossJoin(F.broadcast(totals))
+    w = "PARTITION BY _pid ORDER BY v_cents"
+    local = grid.crossJoin(F.broadcast(stats)).selectExpr(
+        "v_cents",
+        "c1",
+        "c2",
+        "n1",
+        "n2",
+        f"(v_cents - _lo) DIV ((_hi - _lo + {parts}) DIV {parts}) AS _pid",
+    ).selectExpr(
+        "_pid",
+        "v_cents",
+        "n1",
+        "n2",
+        f"sum(c1) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        " AS _run1",
+        f"sum(c2) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        " AS _run2",
+        f"lead(v_cents) OVER ({w}) AS _next",
+    )
+    # per-bucket metadata from the same windowed frame (a bucket's
+    # total is its last running count): the exclusive offsets enter
+    # as ONE exact BIGINT term, _off1·n2 − _off2·n1, and the next
+    # non-empty bucket's first value completes each bucket's last lead.
+    # Reading n1/n2 here as the rows do keeps the columns under both
+    # branches' window exchange the same, so AQE runs it once.
+    wm = "PARTITION BY _pid DIV 1024 ORDER BY _pid"
+    excl = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    meta = (
+        local.groupBy("_pid")
         .agg(
-            F.expr(
-                "CAST(sum(abs(cum1 * n2 - cum2 * n1)"
-                " * (v_next - v_cents)) AS BIGINT) AS w1_num"
-            )
+            F.expr("max(_run1) AS _t1"),
+            F.expr("max(_run2) AS _t2"),
+            F.expr("min(v_cents) AS _first"),
+            F.expr("max(n1) AS _n1"),
+            F.expr("max(n2) AS _n2"),
+        )
+        .selectExpr(
+            "_pid",
+            f"coalesce(sum(_t1) OVER ({wm} {excl}), 0) * _n2"
+            f" - coalesce(sum(_t2) OVER ({wm} {excl}), 0) * _n1 AS _offd",
+            f"lead(_first) OVER ({wm}) AS _next_first",
         )
     )
-    return num.crossJoin(F.broadcast(totals)).select(
+    # Every row finds its bucket's metadata, so a left join returns
+    # what an inner one would; an inner join would also push an
+    # inferred `_pid IS NOT NULL` below the rows' window exchange,
+    # making it differ from the metadata branch's copy, which AQE then
+    # could not reuse.  The last grid point has no successor: its
+    # summand is NULL and sum() skips it; n1/n2 are constant, so max()
+    # just carries them.
+    num = local.join(F.broadcast(meta), "_pid", "left").agg(
+        F.expr(
+            "CAST(sum(abs(_offd + _run1 * n2 - _run2 * n1)"
+            " * (coalesce(_next, _next_first) - v_cents)) AS BIGINT) AS w1_num"
+        ),
+        F.expr("max(n1) AS n1"),
+        F.expr("max(n2) AS n2"),
+    )
+    return num.select(
         "n1",
         "n2",
         q4(
@@ -6088,10 +6134,11 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike KS, is differentiable in the mass moved (the two-sample
     counterpart of the energy statistic behind distance correlation).
 
-    Scale shape: the same bounded-cents-grid prefix machine as
-    stat_wasserstein_1d (hash-aggregate to the grid, ONE bucketed
-    prefix pass for both cumulative counts and rank, grid-sized
-    rank+1 self-join for the gap); the squared ECDF gap is
+    Scale shape: the bounded-cents-grid prefix machine
+    (hash-aggregate to the grid, ONE bucketed prefix pass for both
+    cumulative counts and rank, grid-sized rank+1 self-join for the
+    gap — stat_wasserstein_1d's shape before it moved to one
+    _pid-bucketed window with lead()); the squared ECDF gap is
     fixed-point quantized (x1e9, floor) per grid point BEFORE the
     gap-weighted sum, so the aggregate is an exact BIGINT on both
     engines."""

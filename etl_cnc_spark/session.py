@@ -1,10 +1,11 @@
 """SparkSession factory and runtime tuning.
 
-SURVEY.md §4: AQE on, Arrow on. Shuffle partitions: A/B-measured in
-fresh processes on the sf0.1 bench, cores/2 beats 1x cores by ~5%
-(task-dispatch overhead on sub-second stages; AQE coalescing still
-right-sizes larger shuffles at runtime). Smaller parquet splits
-(maxPartitionBytes 8 MB) were ALSO A/B-tested and are a net loss
+SURVEY.md §4: AQE on, Arrow on. Shuffle partitions: cores/2, floored
+at 8 (``max(8, cores // 2)``, so every host up to 16 cores gets 8).
+A/B-measured in fresh processes on the sf0.1 bench, cores/2 beat
+1x cores by ~5% (task-dispatch overhead on sub-second stages; AQE
+coalescing still right-sizes larger shuffles at runtime). Smaller
+parquet splits (maxPartitionBytes 8 MB) were ALSO A/B-tested and are a net loss
 under cold-start conditions — more tasks pay more scheduling than
 the extra scan parallelism returns; the 128 MB default stays. On a
 real cluster the same knobs are sized by DATA, not cores:

@@ -362,8 +362,13 @@ def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
     windowspecdefinition in their plans is partitioned (by _pid or a
     real key) — no "WindowExec: No Partition Defined" over the
     data-proportional cents grid survives (VERDICT r5 #4). events_rfm
-    is covered by the same assertion (its ranks share the machine)."""
-    for key in ("stat_ks_test", "stat_mann_whitney", "events_rfm"):
+    is covered by the same assertion (its ranks share the machine), and
+    so is stat_wasserstein_1d (running counts and lead() in one
+    _pid-bucketed window), which must also never join on a rank."""
+    import re
+
+    keys = ("stat_ks_test", "stat_mann_whitney", "events_rfm", "stat_wasserstein_1d")
+    for key in keys:
         df = REGISTRY[key].build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():
@@ -373,6 +378,18 @@ def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
                 # partition columns before the ordering spec — every
                 # spec here must carry the _pid partition column.
                 assert "_pid" in line, (key, line)
+        if key == "stat_wasserstein_1d":
+            joins = [line for line in plan.splitlines() if "Join" in line]
+            assert joins, plan
+            assert not [j for j in joins if re.search(r"\brk#", j)], joins
+
+
+def test_hybrid_rrf_fuses_without_full_outer_join(spark, sf_dir):
+    """sim_hybrid_rrf fuses its two ≤100-row rank lists with a union
+    and a per-doc aggregate instead of a full outer join."""
+    plan = plan_of("sim_hybrid_rrf", spark, sf_dir)
+    assert "FullOuter" not in plan, plan
+    assert node_count(plan, "Union") == 1, plan
 
 
 def test_skyline_bucket_prefilter_prunes(spark, sf_dir):
@@ -555,7 +572,7 @@ def test_unpartitioned_window_census():
         ("llm/retrieval.py", "_bm25_scores"):
             "runs after .limit(n) — bounded retrieval list",
         ("llm/retrieval.py", "sim_hybrid_rrf"):
-            "vec list after .limit(LIST_N); fusion joins two bounded "
+            "vec list after .limit(LIST_N); fusion unions two bounded "
             "lists",
         # calendar-bounded daily series (~thousands of rows at any SF)
         ("operators/stats.py", "stat_runs_test"):

@@ -1,6 +1,7 @@
-"""Unit tests for the range-partitioned global-ordering helper
-(`operators/prefix.py`) — the replacement for every single-partition
-``Window.orderBy`` in the repo.
+"""Unit tests for the value-bucketed global-ordering helper
+(`operators/prefix.py`: ordered bucket ids derived from each row's own
+key) — the replacement for every single-partition ``Window.orderBy``
+in the repo.
 
 Property: ``global_ordered`` must equal the textbook unpartitioned
 window (row_number / running sum / ntile) on adversarial data — ties,

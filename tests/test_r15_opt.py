@@ -6,7 +6,7 @@ so a regression is caught by shape, not by timing noise.
 
 from __future__ import annotations
 
-from tests.test_plans import node_count, plan_of
+from tests.test_plans import REGISTRY, node_count, plan_of
 
 
 def test_q21_single_fact_pass(spark, sf_dir):
@@ -26,13 +26,24 @@ def test_q21_single_fact_pass(spark, sf_dir):
     assert node_count(plan, "Expand") == 0, plan
 
 
+def executed_plan_of(key: str, spark, sf_dir: str) -> str:
+    """The final adaptive plan after a collect: exchanges AQE reused
+    show as ``ReusedExchange``, so each scan that RAN appears once."""
+    df = REGISTRY[key].build(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 def test_cindex_single_fact_scan(spark, sf_dir):
-    """r15: the (t, s) cell grid is persist()ed — its three consumers
-    (dt spine, ds spine, dense left join) share one events scan + one
-    per-user aggregate instead of replaying the fact lineage 3x."""
-    plan = plan_of("ml_survival_cindex", spark, sf_dir)
-    assert node_count(plan, "Scan parquet") == 1, plan
-    assert "InMemoryRelation" in plan, plan
+    """The (t, s) cell grid has two consumers (the one-aggregate spine
+    and the dense left join); the per-user exchange under both runs
+    once, so one events scan serves both.  (r15 shared them through a
+    persist(); the cache is gone because a cached subtree stops AQE
+    from reusing the exchanges above it.)"""
+    plan = executed_plan_of("ml_survival_cindex", spark, sf_dir)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "ReusedExchange" in plan, plan
 
 
 def test_spread_scan_small_file_repartitions(spark, sf_dir):
@@ -136,14 +147,14 @@ def test_minhash_estimate_single_join(spark, sf_dir):
     assert joins == 1, plan
 
 
-def test_wasserstein_cached_grid_single_scan(spark, sf_dir):
-    """r15: the cents grid and the cumulative frame are persist()ed
-    (not lazily checkpointed) — consumers share one computation
-    without the RDD materialization barrier, and the single events
-    scan stays visible to plan audits."""
-    plan = plan_of("stat_wasserstein_1d", spark, sf_dir)
-    assert node_count(plan, "Scan parquet") == 1, plan
-    assert "InMemoryRelation" in plan, plan
+def test_wasserstein_single_scan(spark, sf_dir):
+    """The cents grid feeds the 1-row bounds aggregate and the bucketed
+    window, and the windowed frame feeds the rows and the per-bucket
+    metadata; AQE runs each shared exchange once (no cache, which
+    would block that reuse), so the events scan runs once."""
+    plan = executed_plan_of("stat_wasserstein_1d", spark, sf_dir)
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "ReusedExchange" in plan, plan
 
 
 def test_cluster_edges_symmetrize_without_union(spark, sf_dir):

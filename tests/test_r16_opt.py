@@ -1,4 +1,4 @@
-"""Round-16 optimization-round pins (OPTIMIZATION_r16.md).
+"""Round-16 optimization-round pins.
 
 Each test freezes the STRUCTURAL property an r16 optimization bought,
 so a regression is caught by shape, not by timing noise.
@@ -25,7 +25,7 @@ def test_release_caches_makes_timed_runs_cold(spark, sf_dir):
     from etl_cnc_spark import registry as R
 
     reg = R.load_all()
-    build = reg["events_rfm"].build  # caches the rollup + prefix frames
+    build = reg["events_rfm"].build  # the prefix machine caches its frame
     R.release_caches(spark)
     before = _cache_entries(spark)
     build(spark, sf_dir).collect()  # warm-up materializes the caches

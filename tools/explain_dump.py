@@ -3,7 +3,7 @@
 
 Usage::
 
-    python tools/explain_dump.py --out plans/r15 --suffix _before [key ...]
+    python tools/explain_dump.py --out DIR [--suffix _before] [key ...]
 
 Defaults to the 15 flagship bench keys at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1 — the bench scale, so the plans match
@@ -28,7 +28,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="plans/r15")
+    ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="_before")
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args(argv)
