@@ -108,9 +108,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     A read costs a footer read + schema resolution on every call, and
     the bench keys reference 1–4 tables per build, so the uncached
     path re-paid ~20–50 ms of pure driver/py4j latency per reference
-    — the same reason a catalog resolves a table once per session.  The memo dict lives ON the
-    session object, so a stopped/replaced session never leaks stale
-    handles into a new one."""
+    — the same reason a catalog resolves a table once per session.
+    The memo dict lives ON the session object, so a stopped/replaced
+    session never leaks stale handles into a new one."""
     tune(spark)
     memo: dict = spark.__dict__.setdefault("_etlcnc_tables", {})
     key = (sf_dir, name)
