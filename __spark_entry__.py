@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+A consumer runs ``entry(spark)`` as a smoke check, then builds any
+``queries()[name]`` over a fixture directory and compares it against
+the matching ``oracle_sql()[name]`` run in DuckDB (row count, schema
+and order-insensitive values). ``queries()`` holds every registered
+key; ``tests/test_parity.py`` checks all of them this way.
 
 Implementation lives in ``etl_cnc_spark/`` — this module only adapts
 the registry (SURVEY.md §2 operator inventory) to the contract.

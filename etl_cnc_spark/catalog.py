@@ -52,6 +52,33 @@ def events_ts_is_long(spark: SparkSession, events_path: str) -> bool:
     return isinstance(schema["ts"].dataType, LongType)
 
 
+def _open_footer(spark: SparkSession, path: str):
+    """A JVM ``ParquetFileReader`` over the parquet FILE ``path``, opened
+    on the driver (the caller closes it); None when ``path`` is not a
+    single file."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(hconf).isFile(hpath):
+        return None
+    return jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, hconf)
+    )
+
+
+def footer_row_count(spark: SparkSession, path: str) -> int | None:
+    """Rows in one parquet FILE, summed from its footer's row-group
+    metadata on the driver; no Spark job runs.  None when ``path`` is
+    not a single file (a directory of part files, or a missing path)."""
+    reader = _open_footer(spark, path)
+    if reader is None:
+        return None
+    try:
+        return reader.getRecordCount()
+    finally:
+        reader.close()
+
+
 def footer_schema(spark: SparkSession, path: str) -> StructType | None:
     """The schema ``spark.read.parquet(path)`` would infer for one
     parquet FILE, read from its footer on the driver; None when
@@ -66,21 +93,16 @@ def footer_schema(spark: SparkSession, path: str) -> StructType | None:
     ``ParquetToSparkSchemaConverter`` configured from the session's
     SQL conf (binary-as-string, INT96, timestamp-NTZ and nanos-as-long
     all follow the conf).  No Spark job runs."""
-    jvm = spark._jvm
-    jss = spark._jsparkSession
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    hconf = jss.sessionState().newHadoopConf()
-    if not hpath.getFileSystem(hconf).isFile(hpath):
+    reader = _open_footer(spark, path)
+    if reader is None:
         return None
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hpath, hconf)
-    )
+    jvm = spark._jvm
     try:
-        footer = jvm.org.apache.parquet.hadoop.Footer(hpath, reader.getFooter())
+        footer = jvm.org.apache.parquet.hadoop.Footer(reader.getPath(), reader.getFooter())
     finally:
         reader.close()
-    converter = parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf())
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = parquet.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
     jschema = parquet.ParquetFileFormat.readSchemaFromFooter(footer, converter)
     # file sources read every column as nullable, as inference reports
     return _parse_datatype_json_string(jschema.asNullable().json())

@@ -366,8 +366,9 @@ def agg_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.count(F.lit(1)).alias("n"),
     )
-    # scalar columns, not array<double>: the driver's pandas
-    # canonicalizer cannot factorize array cells (tools/preflight.py)
+    # scalar columns, not array<double>: one column per quantile is the
+    # flat schema an oracle query returns, and the one
+    # tests/test_llm.py::test_approx_quantile_error reads
     return qs.select(
         "l_returnflag",
         F.col("price_quartiles")[0].alias("p25"),

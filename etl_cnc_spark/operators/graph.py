@@ -706,13 +706,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = top.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()
-    # lazy localCheckpoint (not cache): materialized once at first
-    # action and released by the ContextCleaner when the plan is
-    # dropped — a long-lived session sweeping many keys does not
-    # accumulate pinned edge lists the way CacheManager entries
-    # would. At 100 TB swap for a reliable checkpoint (lineage
-    # truncation + executor-loss survival), as min_label_components
-    # does.
+    # lazy localCheckpoint: the peel rounds re-read one edge list.  The
+    # call runs the shuffle-map stages below it at build (AQE), the rows
+    # are stored at the first action; why not reuse(): SCALE.md
+    # "Bounded-frame lazy localCheckpoint".  At 100 TB swap for a
+    # reliable checkpoint, as min_label_components does.
     sym = (
         und.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionAll(und.select(F.col("b").alias("n"), F.col("a").alias("m")))
@@ -817,9 +815,9 @@ def graph_random_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()
-    # lazy localCheckpoint, not cache — see graph_kcore: computed
-    # once per action, auto-released with the plan, no CacheManager
-    # pinning across a long session.
+    # lazy localCheckpoint, as in graph_kcore: the shuffle-map stages
+    # under it run at this call, its rows are stored at the first
+    # action, and every walk step re-reads them.
     sym = (
         und.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionAll(und.select(F.col("b").alias("n"), F.col("a").alias("m")))
@@ -1801,8 +1799,8 @@ def graph_eigenvector_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix).
 
     Same fixed-point discipline as graph_pagerank: x' = W·x folds as
-    BIGINT sums (order-free), each iteration rescales by the max via
-    one broadcast 1-row frame (integer DIV), and the iteration count
+    BIGINT sums (order-free), each iteration rescales by a window max
+    over the bounded nation state (integer DIV), and the iteration count
     is plan-time unrolled so the whole algorithm is ONE Catalyst plan
     with no driver loop actions. At true scale, pre-normalize w per
     node to keep x*w < 2^63 (module docstring).

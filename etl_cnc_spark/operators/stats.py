@@ -13868,9 +13868,10 @@ def stat_hoeffding_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     discount domains here are already 50x11).
 
     Scale shape: ONE map-side-combinable groupBy collapses the fact
-    table to the 50x11 value-domain cell grid (lazily
-    localCheckpoint'd — both cross sides replay the materialized
-    grid, so the fact table is scanned once); the dominance counts
+    table to the 50x11 value-domain cell grid, lazily
+    localCheckpoint'd (its shuffle-map stage, the one fact scan, runs
+    at build; SCALE.md "Bounded-frame lazy localCheckpoint"): both
+    cross sides replay the stored grid; the dominance counts
     (2-D prefix sums) run on the broadcast bounded grid squared
     (<=550^2 metadata rows, never data x data); the D sums are one
     tiny aggregate.  The same shape serves any pair of bounded or

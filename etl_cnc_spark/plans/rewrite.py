@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import table
+from ..catalog import footer_row_count, table
 from ..registry import REGISTRY, register
 from ..llm import similarity as _sim
 
@@ -53,11 +53,14 @@ def choose_strategy(n_candidates: int, n_queries: int) -> str:
 )
 def sim_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cardinality-driven similarity search: counts the candidate set
-    (parquet metadata count — no scan), then dispatches to the exact
-    broadcast scan, IVF cell-restricted scan, or LSH bucket join.
-    One API, three physical plans — the library-level analogue of a
-    Catalyst auto-LSH rewrite rule."""
-    n = table(spark, sf_dir, "embeddings").count()
+    from the parquet footer on the driver (no scan, no Spark job; a
+    table stored as a directory falls back to ``count()``), then
+    dispatches to the exact broadcast scan, IVF cell-restricted scan,
+    or LSH bucket join.  One API, three physical plans — the
+    library-level analogue of a Catalyst auto-LSH rewrite rule."""
+    n = footer_row_count(spark, f"{sf_dir}/embeddings.parquet")
+    if n is None:
+        n = table(spark, sf_dir, "embeddings").count()
     strategy = choose_strategy(n, _sim.N_QUERIES)
     impl = {
         "brute": _sim.sim_topk_exact,

@@ -1,9 +1,10 @@
-"""A flagship build fires no Spark job.
+"""A flagship build fires no Spark job, nor does sim_auto's.
 
 Building a key only constructs a plan: table schemas come from parquet
 footers read on the driver (``catalog.footer_schema``) and every
-strategy choice comes from metadata, so all jobs run at collect.  Each
-of the flagship keys is built under its own job group, and the status
+strategy choice comes from metadata (sim_auto's candidate count is the
+footer's row count, ``catalog.footer_row_count``), so all jobs run at
+collect.  Each key is built under its own job group, and the status
 tracker (live with the UI off) must report no job in any of them.
 """
 
@@ -15,6 +16,7 @@ from etl_cnc_spark.registry import load_all, release_caches
 
 REGISTRY = load_all()
 FLAGSHIP = [k for k, q in REGISTRY.items() if q.bench]
+KEYS = FLAGSHIP + ["sim_auto"]
 
 
 def test_flagship_builds_fire_no_job(spark, sf_dir):
@@ -23,7 +25,7 @@ def test_flagship_builds_fire_no_job(spark, sf_dir):
     tracker = sc.statusTracker()
     control = "build-jobs-pin:control"
     try:
-        for key in FLAGSHIP:
+        for key in KEYS:
             # resolve every table afresh, so a schema-inference job
             # cannot hide behind a handle an earlier test memoized
             spark.__dict__.pop("_etlcnc_tables", None)
@@ -43,6 +45,6 @@ def test_flagship_builds_fire_no_job(spark, sf_dir):
         release_caches(spark)
     fired = {
         key: list(tracker.getJobIdsForGroup(f"build-jobs-pin:{key}"))
-        for key in FLAGSHIP
+        for key in KEYS
     }
     assert not {k: v for k, v in fired.items() if v}, fired

@@ -1,7 +1,9 @@
 """``catalog.table`` takes each table's schema from its parquet footer,
 read on the driver: the footer schema must equal the schema Spark's own
 inference job returns, for every fixture table at every fixture scale,
-and the ``events.ts`` branch must follow it."""
+and the ``events.ts`` branch must follow it.  The footer's row count,
+which sim_auto reads instead of running ``count()``, must equal the
+count a Spark job returns."""
 
 from __future__ import annotations
 
@@ -10,7 +12,13 @@ import os
 import pytest
 from pyspark.sql.types import LongType, TimestampType
 
-from etl_cnc_spark.catalog import TABLES, events_ts_is_long, footer_schema, table
+from etl_cnc_spark.catalog import (
+    TABLES,
+    events_ts_is_long,
+    footer_row_count,
+    footer_schema,
+    table,
+)
 
 SCALES = ("sf0.001", "sf0.01", "sf0.1")
 
@@ -28,6 +36,17 @@ def test_footer_schema_matches_inference(spark, sf_dir, scale):
     for name in TABLES:
         path = f"{d}/{name}.parquet"
         assert footer_schema(spark, path) == spark.read.parquet(path).schema, (
+            scale,
+            name,
+        )
+
+
+@pytest.mark.parametrize("scale", SCALES)
+def test_footer_row_count_matches_count(spark, sf_dir, scale):
+    d = _scale_dir(sf_dir, scale)
+    for name in TABLES:
+        path = f"{d}/{name}.parquet"
+        assert footer_row_count(spark, path) == spark.read.parquet(path).count(), (
             scale,
             name,
         )
@@ -56,4 +75,6 @@ def test_spark_written_table_directory_and_part_file(spark, tmp_path):
     part = next(str(p) for p in tmp_path.glob("region.parquet/part-*.parquet"))
     assert footer_schema(spark, part) == spark.read.parquet(part).schema
     assert footer_schema(spark, out) is None
+    assert footer_row_count(spark, part) == 3
+    assert footer_row_count(spark, out) is None
     assert sorted(r.r_regionkey for r in table(spark, sf, "region").collect()) == [0, 1, 2]

@@ -32,6 +32,38 @@ def test_every_query_has_check_declared():
             assert q.notes, f"{key} is rows-only but doesn't document why"
 
 
+# SURVEY.md §2 contract keys: the operator inventory the engine must
+# keep registered, whatever else is added or retired.
+CONTRACT_KEYS = [
+    "source_stream_files", "sink_stream", "agg_pivot", "win_ranking",
+    "win_lag_lead", "win_running", "win_moving", "win_first_last",
+    "win_pct", "topk_per_group", "sort_multi", "limit_k", "topk_global",
+    "set_union_all", "set_union", "set_intersect", "set_except",
+    "fn_string", "fn_regex", "fn_datetime", "fn_math", "fn_conditional",
+    "fn_cast", "fn_hash", "fn_array", "fn_map", "fn_json",
+    "stream_tumbling", "stream_sliding", "stream_session",
+    "stream_watermark", "stream_dedup", "stream_stateful", "stream_join",
+    "dedup_exact", "dedup_minhash", "sim_topk_exact", "sim_ann_lsh",
+    "text_stats", "text_tfidf", "text_lang_profile", "multimodal_cols",
+    "udf_python", "udf_pandas_scalar", "udaf_pandas_agg",
+    "udtf_grouped_map", "udtf_python", "udf_arrow_batch",
+    "scan_parquet", "scan_parquet_pruned", "source_csv", "source_json",
+    "sink_parquet", "sink_csv_json", "project_cols", "project_expr",
+    "filter_simple", "filter_compound", "filter_null", "distinct_rows",
+    "filter_subquery", "join_inner", "join_left", "join_right",
+    "join_full", "join_semi", "join_anti", "join_cross", "join_broadcast",
+    "join_range", "join_asof", "join_multiway", "join_skew_salted",
+    "agg_global", "agg_groupby", "agg_having", "agg_count_distinct",
+    "agg_approx_distinct", "agg_stats", "agg_collect", "agg_rollup",
+    "agg_cube", "agg_grouping_sets", "agg_partial_final",
+]
+
+
+def test_contract_keys_registered():
+    missing = [k for k in CONTRACT_KEYS if k not in REGISTRY]
+    assert not missing, f"contract keys not registered: {missing}"
+
+
 def test_entry_contract(spark):
     import __spark_entry__ as entry_mod
 

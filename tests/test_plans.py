@@ -754,6 +754,22 @@ def test_adamic_adar_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_eigenvector_rescale_is_a_window_not_a_cross_join(spark, sf_dir):
+    """graph_eigenvector_centrality folds each iteration's max rescale,
+    and the final share total, into a window over the bounded nation
+    state: one Window per iteration plus one for the share, and no
+    crossJoin of a 1-row max frame, no per-iteration persist (the r15
+    shape) and no parquet re-scan under the checkpointed inputs."""
+    from etl_cnc_spark.operators.graph import _EV_ITER
+
+    plan = plan_of("graph_eigenvector_centrality", spark, sf_dir)
+    assert node_count(plan, "BroadcastNestedLoopJoin") == 0, plan
+    assert node_count(plan, "CartesianProduct") == 0, plan
+    assert node_count(plan, "InMemoryTableScan") == 0, plan
+    assert node_count(plan, "Scan parquet") == 0, plan
+    assert node_count(plan, "Window") == _EV_ITER + 1, plan
+
+
 def test_sprt_uses_prefix_machine_not_global_window(spark, sf_dir):
     """stat_sprt_ab's running conversion count must come from the
     bucketed prefix machine — a single-partition global Window over
