@@ -1,29 +1,20 @@
 #!/usr/bin/env python
-"""Benchmark harness (SURVEY.md §6, BASELINE.md protocol).
+"""Flagship timing harness.
 
-Runs the flagship query set at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``; per query:
-1 warm-up + 3 timed runs, median wall-clock around ``.collect()``.
-Prints exactly ONE JSON line:
+Runs the flagship query set (registry keys with ``bench=True``) at
+``$SPARK_GRAFT_SF_DIR`` (default ``SF_DIR``, the sf0.1 fixture) on
+``local[$SPARK_GRAFT_CPUS]``; per query: 1 warm-up + 3 timed runs,
+median wall-clock around ``.collect()``.  Prints exactly ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``--probe`` (VERDICT r14 item 8) additionally writes per-query host
-forensics to STDERR — 1-minute load average sampled right before each
-query's timed runs plus the individual run times — so a contended
-bench run carries its own steal attribution instead of needing
-interleaved by-hand reruns.  Stdout stays the one JSON line either
-way (the driver's contract).
+Every timed run is cold at the Spark cache layer: the cache entries a
+build registers are released (``registry.release_caches``) before each
+timed run, so it recomputes its persisted subtrees from the parquet
+inputs instead of reading the warm-up's cache.  The warm-up still pays
+for JIT, the code cache and the FS page cache.
 
-r16 protocol fix (VERDICT r15 "what's wrong" #1, additions-only):
-every timed run is now COLD at the Spark cache layer — the tracked
-persist()/cache()/CACHE TABLE entries a build registers are released
-(``registry.release_caches``) between the warm-up and each timed run,
-so a timed run recomputes its persisted subtrees from the parquet
-inputs instead of reading the warm-up's materialized cache.  The
-warm-up still serves its original purpose (JIT, code cache, FS page
-cache).  Queries, timing methodology (median of 3 ``.collect()``
-wall-clocks), env contract and the one-line stdout JSON are
-unchanged; the re-freeze note is in BASELINE.md.
+The repo benchmark, with per-layer metrics and oracle-checked results,
+is ``perfbench/run.py`` (workloads in BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -43,7 +34,6 @@ N_TIMED = 3
 
 
 def main() -> int:
-    probe = "--probe" in sys.argv[1:]
     reg = load_all()
     bench_keys = [k for k, q in sorted(reg.items()) if q.bench]
     spark = get_spark("etl-cnc-bench")
@@ -53,7 +43,6 @@ def main() -> int:
     for key in bench_keys:
         build = reg[key].build
         build(spark, SF_DIR).collect()  # warm-up (JIT, code cache, FS cache)
-        load1 = os.getloadavg()[0]
         runs = []
         for _ in range(N_TIMED):
             # cold-run discipline (r16): drop the tracked cache entries
@@ -64,17 +53,6 @@ def main() -> int:
             build(spark, SF_DIR).collect()
             runs.append(time.perf_counter() - t0)
         timings[key] = round(statistics.median(runs), 3)
-        if probe:
-            print(
-                json.dumps(
-                    {
-                        "query": key,
-                        "load1_before": round(load1, 2),
-                        "runs": [round(r, 3) for r in runs],
-                    }
-                ),
-                file=sys.stderr,
-            )
 
     m = re.search(r"sf([0-9.]+)", SF_DIR)
     sf = float(m.group(1)) if m else None

@@ -793,10 +793,10 @@ def pipeline_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the same algebra as a plain SQL window."""
     from ..operators.prefix import global_ordered
 
-    d = reuse(table(spark, sf_dir, "documents").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("tokens"),
-    ))
+    )
     run = global_ordered(
         d,
         [F.col("doc_id")],
@@ -959,11 +959,11 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-rank machinery (`global_ordered` + exact ntile-from-rank
     arithmetic) — no single-partition window at any corpus size; the
     oracle keeps the standard ntile formulation."""
-    from ..operators.prefix import global_ordered, ntile_from_rank
+    from ..operators.prefix import global_ordered, sql_ntile_from_rank
 
     d = table(spark, sf_dir, "documents")
     words = F.size(F.split("text", " ")).cast("long")
-    scored = reuse(d.select(
+    scored = d.select(
         "doc_id",
         words.alias("words"),
         F.expr("CAST(n_chars AS BIGINT) * 1000").alias("_c1000"),
@@ -971,7 +971,7 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "words",
         F.expr("_c1000 DIV words").alias("difficulty"),
-    ))
+    )
     ranked = global_ordered(
         scored,
         [F.col("difficulty"), F.col("doc_id")],
@@ -980,7 +980,7 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_df = scored.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     phased = ranked.crossJoin(F.broadcast(n_df)).select(
-        ntile_from_rank(F.col("_rk"), F.col("_n"), N_PHASES).alias("phase"),
+        F.expr(sql_ntile_from_rank("_rk", "_n", N_PHASES)).alias("phase"),
         "words",
         "difficulty",
     )
@@ -2232,7 +2232,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.prefix import global_ordered
 
     d = table(spark, sf_dir, "documents")
-    freq = reuse(
+    freq = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
@@ -4742,7 +4742,7 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.prefix import global_ordered
 
     d = table(spark, sf_dir, "documents")
-    uni = reuse(
+    uni = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))

@@ -24,7 +24,7 @@ from ..utils import (
     sql_q4,
     ts_us,
 )
-from .prefix import global_ordered, ntile_from_rank, sql_ntile_from_rank
+from .prefix import global_ordered, sql_ntile_from_rank
 
 
 @register(
@@ -391,10 +391,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     (delta, event_id) so ends sort before starts at equal instants
     deterministically."""
     e = table(spark, sf_dir, "events")
-    # 2x|events| boundary rows feeding global_ordered's three passes
-    # — DATA-SCALED, persist() per the SCALE.md r13 rule (8 events
-    # scans before r13)
-    bounds = reuse(e.select(
+    bounds = e.select(
         F.col("ts").alias("t"), F.lit(1).alias("delta"), "event_id"
     ).unionAll(
         e.select(
@@ -402,7 +399,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).alias("delta"),
             "event_id",
         )
-    ))
+    )
     running = global_ordered(
         bounds,
         [F.col("t"), F.col("delta"), F.col("event_id")],
@@ -514,11 +511,11 @@ def events_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events").where(
         F.col("event_type") == "purchase"
     )
-    per_user = reuse(e.groupBy("user_id").agg(
+    per_user = e.groupBy("user_id").agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("cents")
-    ))
+    )
     total = per_user.agg(
         F.sum("cents").cast("long").alias("total_cents")
     )
@@ -819,12 +816,8 @@ def events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # high bits, normalized value ∈ [0, grid) in the low bits — so the
     # key spans [0, 3·grid).  Passing static bounds lets the prefix
     # machine skip its global min/max pass + broadcast (one fewer
-    # stage wave; small-input latency is stage-bound).
-    # r16 (ADVICE r15, low): the r15 keyed.persist() here is GONE —
-    # since r15 the prefix machine persists its own derived bucketed
-    # frame, and `keyed`'s ONLY consumer is that machine, so a second
-    # cache of the same data-scaled 3N-row melt double-held executor
-    # memory (and paid an extra cache-write pass) for zero sharing.
+    # stage wave; small-input latency is stage-bound).  `keyed` is not
+    # cached: no global_ordered input is (the rule in prefix.py).
     ranked = global_ordered(
         keyed,
         [F.col("_ck"), F.col("_v"), F.col("user_id")],
@@ -1080,7 +1073,7 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel prefix ranks over the |users| rollup — no
     single-partition window), same discipline as events_pareto."""
     e = table(spark, sf_dir, "events")
-    per_user = reuse(e.groupBy("user_id").agg(
+    per_user = e.groupBy("user_id").agg(
         F.sum(
             F.when(
                 F.col("event_type") == "purchase",
@@ -1089,7 +1082,7 @@ def events_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("cents")
-    ))
+    )
     ranked = global_ordered(
         per_user, [F.col("cents"), F.col("user_id")], bucket_key="cents"
     ).select("cents", "rk")
@@ -4144,9 +4137,9 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate, and the share math is integer (cents × 10⁴ DIV
     total) so the class boundary is bit-exact, no float drift."""
     o = table(spark, sf_dir, "orders")
-    rev = reuse(o.groupBy("o_custkey").agg(
+    rev = o.groupBy("o_custkey").agg(
         F.sum(cents(F.col("o_totalprice"))).cast("long").alias("revenue_cents")
-    ))
+    )
     tot = rev.agg(F.sum("revenue_cents").cast("long").alias("total_cents"))
     ranked = global_ordered(
         rev,
@@ -5770,16 +5763,16 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: per-user rollup (one hash aggregate) → global ranks
     through the bucketed prefix machine (value-derived buckets, never
-    an unpartitioned window over users) → exact ntile_from_rank
+    an unpartitioned window over users) → exact sql_ntile_from_rank
     deciles → 10-row epilogue; the only window over an unpartitioned
     spec runs on the 10-row decile table.  All sums are integer
     cents; shares are exact floor-division basis points."""
     e = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
-    per_user = reuse(e.groupBy("user_id").agg(
+    per_user = e.groupBy("user_id").agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("cents")
-    ))
+    )
     ranked = global_ordered(
         per_user,
         [F.col("cents"), F.col("user_id")],
@@ -5788,7 +5781,7 @@ def events_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n1 = per_user.agg(F.count(F.lit(1)).cast("long").alias("n"))
     dec = ranked.crossJoin(F.broadcast(n1)).select(
-        ntile_from_rank(F.col("rk"), F.col("n"), 10).alias("decile"),
+        F.expr(sql_ntile_from_rank("rk", "n", 10)).alias("decile"),
         "cents",
     )
     agg = dec.groupBy("decile").agg(
@@ -8018,9 +8011,9 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def period_classes(pred, alias):
         o = table(spark, sf_dir, "orders").where(pred)
-        rev = reuse(o.groupBy("o_custkey").agg(
+        rev = o.groupBy("o_custkey").agg(
             F.sum(cents(F.col("o_totalprice"))).cast("long").alias("revenue_cents")
-        ))
+        )
         tot = rev.agg(F.sum("revenue_cents").cast("long").alias("total_cents"))
         ranked = global_ordered(
             rev,

@@ -26,7 +26,7 @@ from ..catalog import table
 from ..registry import register, reuse
 from ..llm.text import EN_STOPWORDS
 from ..utils import cents, q4, sql_q4
-from .prefix import global_ordered, ntile_from_rank
+from .prefix import global_ordered, sql_ntile_from_rank
 
 # ------------------------------------------------- target encoding
 
@@ -237,16 +237,13 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetically from (rank, n). Decile stats are integer
     mergeable sums; the cumulative fold runs over 10 metadata rows."""
     e = table(spark, sf_dir, "events")
-    # per-event scored frame feeding the totals row and the prefix
-    # machine's three passes — DATA-SCALED, persist() per the SCALE.md
-    # r13 rule (6 events scans before r13)
-    scored = reuse(e.select(
+    scored = e.select(
         (F.floor(F.col("value") * 100 + 0.5)).cast("long").alias(
             "score_cents"
         ),
         "event_id",
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("y"),
-    ))
+    )
     tot = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_all"),
         F.sum("y").cast("long").alias("pos_all"),
@@ -262,9 +259,7 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.crossJoin(F.broadcast(tot))
         .select(
             "y",
-            ntile_from_rank(
-                F.col("rk"), F.col("n_all"), LIFT_K
-            ).alias("decile"),
+            F.expr(sql_ntile_from_rank("rk", "n_all", LIFT_K)).alias("decile"),
         )
         .groupBy("decile")
         .agg(
@@ -2679,13 +2674,13 @@ def ml_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-node DuckDB, where that is fine)."""
     d = table(spark, sf_dir, "documents")
     words = F.split("text", " ")
-    feat = reuse(d.select(
+    feat = d.select(
         "doc_id",
         F.col("n_chars").cast("long").alias("s1"),
         F.size(words).cast("long").alias("s2"),
         F.size(F.array_distinct(words)).cast("long").alias("s3"),
-    ))
-    melted = reuse(feat.select(
+    )
+    melted = feat.select(
         "doc_id",
         F.explode(
             F.array(
@@ -2694,7 +2689,7 @@ def ml_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(F.lit(2).alias("rk_id"), F.col("s3").alias("s")),
             )
         ).alias("e"),
-    ).select("doc_id", F.col("e.rk_id").alias("rk_id"), F.col("e.s").alias("s")))
+    ).select("doc_id", F.col("e.rk_id").alias("rk_id"), F.col("e.s").alias("s"))
     ranked = global_ordered(
         melted,
         [F.col("rk_id"), F.col("s"), F.col("doc_id")],

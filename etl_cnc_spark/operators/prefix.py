@@ -32,9 +32,17 @@ the bucket column.
 Trade-off: value-linear buckets are balanced only for roughly
 uniform keys; a skewed key distribution makes some buckets larger
 (still correct — the per-bucket window just has more rows).  For
-heavy skew pass a larger ``num_parts`` or pre-transform the bucket
-key (e.g. a CDF-ish monotone map); balance is a performance knob,
-never a correctness one.
+heavy skew raise ``spark.sql.shuffle.partitions`` (the bucket count)
+or pre-transform the bucket key (e.g. a CDF-ish monotone map);
+balance is a performance knob, never a correctness one.
+
+Caching rule: nothing here is materialized, and no caller caches the
+frame it passes in.  A frame whose consumers sit above one shared
+exchange is not cached: the consumers already share that exchange's
+output (AQE reuses it), and a cache between them would hide it from
+exchange reuse and cost a job of its own.  The bucketed input feeds
+two consumers, the per-bucket window and the per-bucket totals; each
+replays only the caller's lineage above its last exchange.
 """
 
 from __future__ import annotations
@@ -42,15 +50,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..registry import reuse
-
-__all__ = ["global_ordered", "ntile_from_rank"]
+__all__ = ["global_ordered", "sql_ntile_from_rank"]
 
 _BUCKET = 1024  # bucket-group width for the hierarchical offset fold
 
 
 def _exclusive_offsets(
-    totals: DataFrame, cols: list[str], num_parts: int | None = None
+    totals: DataFrame, cols: list[str], num_parts: int
 ) -> DataFrame:
     """Exclusive prefix sums of ``cols`` over the per-bucket totals
     table, ordered by ``_pid`` — output columns ``_off_<c>``.
@@ -78,7 +84,7 @@ def _exclusive_offsets(
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    if num_parts is not None and num_parts <= _BUCKET:
+    if num_parts <= _BUCKET:
         return totals.select(
             "_pid",
             *[
@@ -132,7 +138,6 @@ def global_ordered(
     bucket_desc: bool = False,
     sums: dict[str, str] | None = None,
     rank_col: str | None = "rk",
-    num_parts: int | None = None,
     bounds: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Append a global 1-based row number (``rank_col``) and, for each
@@ -141,14 +146,15 @@ def global_ordered(
     with bucketed prefix sums (see module docstring), never a
     single-partition window.
 
-    ``bucket_key`` must be an integral-valued expression monotone in
-    the LEADING sort column (pass ``bucket_desc=True`` when that
-    column sorts descending); rows with equal leading keys land in
-    the same bucket, so secondary tie-break columns never cross a
-    bucket boundary.  ``order_cols`` must be a total order (tie-break
-    with a unique key) for the rank to be deterministic.  Sum columns
-    must be integral (exact BIGINT running sums — the money/cents
-    discipline).
+    ``bucket_key`` (a column name or an expression) must be
+    integral-valued and monotone in the LEADING sort column (pass
+    ``bucket_desc=True`` when that column sorts descending); rows with
+    equal leading keys land in the same bucket, so secondary tie-break
+    columns never cross a bucket boundary.  ``order_cols`` must be a
+    total order (tie-break with a unique key) for the rank to be
+    deterministic.  Sum columns must be integral (exact BIGINT running
+    sums — the money/cents discipline).  The bucket count is the
+    session's ``spark.sql.shuffle.partitions``.
 
     ``bounds``: optional STATIC ``(lo, hi)`` for the bucket key.  When
     the caller can bound the key by construction (e.g. a composite key
@@ -156,81 +162,32 @@ def global_ordered(
     min/max aggregate + broadcast — one fewer full pass over the input
     and one fewer AQE stage wave, which dominates small-input latency.
     Bounds need only be a superset of the true range (bucket balance
-    degrades gracefully; ``_pid`` stays in ``[0, num_parts-1]``), but
+    degrades gracefully; ``_pid`` stays below the bucket count), but
     every key value MUST lie inside them for ranks to be correct.
     """
     sums = sums or {}
     out_cols = df.columns
-    if num_parts is None:
-        num_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    key = (
-        F.col(bucket_key) if isinstance(bucket_key, str) else bucket_key
-    ).cast("long")
+    num_parts = int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    # ``bigint(x)`` is CAST(x AS BIGINT) and takes a name or a Column
+    key = F.call_function("bigint", bucket_key)
+    if bounds is None:
+        mm = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
+        base, lo, hi = df.crossJoin(F.broadcast(mm)), F.col("_lo"), F.col("_hi")
+    else:
+        base = df
+        lo, hi = (F.lit(int(b)).cast("long") for b in bounds)
     # ordered bucket id from the row's own key value: a pure function
     # of (key, lo, hi, num_parts) — identical in every plan branch.
     # width = ceil(span / num_parts) ≥ 1, so _pid ∈ [0, num_parts-1].
-    #
-    # r16: a STRING bucket_key (the common case — ~40 of the ~50 call
-    # sites) takes a single-select path with the bucket id as one SQL
-    # expression; the old shape added two withColumns, and every
-    # DataFrame op here re-analyzes the caller's whole lineage (pure
-    # driver latency at any scale — guide §7.3 "query planning").
-    # The SQL string computes the IDENTICAL integer arithmetic on the
-    # same casts, so _pid is bit-equal; a Column bucket_key keeps the
-    # two-step shape (a Column can't be inlined into a SQL string).
-    key_sql = (
-        f"CAST(`{bucket_key}` AS BIGINT)"
-        if isinstance(bucket_key, str)
-        else None
+    width = F.call_function("div", hi - lo + num_parts, F.lit(num_parts))
+    pos = (hi - key) if bucket_desc else (key - lo)
+    bucketed = base.select(
+        "*", F.call_function("div", pos, width).alias("_pid")
     )
-    if bounds is not None:
-        lo, hi = int(bounds[0]), int(bounds[1])
-        width = (hi - lo + num_parts) // num_parts
-        if key_sql is not None:
-            pos_sql = (
-                f"CAST(({hi}L - {key_sql}) AS BIGINT)"
-                if bucket_desc
-                else f"CAST(({key_sql} - {lo}L) AS BIGINT)"
-            )
-            bucketed = df.select(
-                "*", F.expr(f"{pos_sql} DIV {width}").alias("_pid")
-            )
-        else:
-            pos = (F.lit(hi) - key) if bucket_desc else (key - F.lit(lo))
-            bucketed = df.withColumn("_pos", pos.cast("long")).withColumn(
-                "_pid", F.expr(f"_pos DIV {width}")
-            )
-    else:
-        mm = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
-        wid_sql = f"((_hi - _lo + {num_parts}) DIV {num_parts})"
-        if key_sql is not None:
-            pos_sql = (
-                f"CAST((_hi - {key_sql}) AS BIGINT)"
-                if bucket_desc
-                else f"CAST(({key_sql} - _lo) AS BIGINT)"
-            )
-            bucketed = df.crossJoin(F.broadcast(mm)).select(
-                "*", F.expr(f"{pos_sql} DIV {wid_sql}").alias("_pid")
-            )
-        else:
-            pos = (F.col("_hi") - key) if bucket_desc else (key - F.col("_lo"))
-            bucketed = (
-                df.crossJoin(F.broadcast(mm))
-                .withColumn("_pos", pos.cast("long"))
-                .withColumn("_pid", F.expr(f"_pos DIV {wid_sql}"))
-            )
-    # r15: the bucketed frame has TWO consumers (the per-bucket window
-    # below and the per-bucket totals) — uncached, both replay the
-    # caller's whole upstream lineage, so every prefix-machine user
-    # paid its input twice (and the no-bounds path a third time for
-    # the min/max pass).
-    bucketed = reuse(bucketed)
-    # single-select stages (r16): the old withColumn-per-column chains
-    # re-analyzed the full caller lineage once per column — with ~50
-    # call sites that was the engine's largest block of driver-side
-    # planning time (events_rfm/wasserstein builds ~0.5 s each).
+    # each stage is one select: every DataFrame op re-analyzes the
+    # caller's whole lineage, which is driver-side planning time
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     local = bucketed.select(
@@ -266,12 +223,18 @@ def global_ordered(
 
 
 def sql_ntile_from_rank(rk: str, n: str, k: int) -> str:
-    """Spark-SQL string mirror of :func:`ntile_from_rank` — the exact
-    same expression tree built from one JVM-side parse instead of ~15
-    py4j Column calls per use (r16 build-latency work).  The idiv form
-    ``CAST((a - a % b) / b AS BIGINT)`` matches the Column helper's
-    double-division-after-exact-remainder shape bit for bit."""
+    """Exact SQL-standard ``ntile(k)`` bucket, as a Spark-SQL
+    expression string, from a 1-based global rank ``rk`` and the total
+    row count ``n`` (both BIGINT expressions): the first ``n % k``
+    buckets take ``n DIV k + 1`` rows, the rest ``n DIV k``.  Matches
+    Spark's and DuckDB's ntile bit for bit, so an oracle can keep using
+    ``ntile(k)`` while the Spark side stays free of the
+    single-partition global window ntile would need.  A string because
+    one JVM-side parse is cheaper than ~15 py4j Column calls per use;
+    wrap it in ``F.expr``."""
 
+    # exact non-negative integer division: the numerator is made
+    # exactly divisible first, so the double division is lossless
     def idiv(a: str, b: str) -> str:
         return f"CAST((({a}) - ({a}) % ({b})) / ({b}) AS BIGINT)"
 
@@ -282,28 +245,4 @@ def sql_ntile_from_rank(rk: str, n: str, k: int) -> str:
         f"CAST(CASE WHEN ({rk}) <= {big}"
         f" THEN {idiv(f'({rk}) - 1', f'{q} + 1')} + 1"
         f" ELSE {r} + {idiv(f'({rk}) - {big} - 1', q)} + 1 END AS BIGINT)"
-    )
-
-
-def ntile_from_rank(rk: Column, n: Column, k: int) -> Column:
-    """Exact SQL-standard ``ntile(k)`` bucket from a 1-based global
-    rank ``rk`` and total row count ``n`` (both BIGINT): the first
-    ``n % k`` buckets take ``n DIV k + 1`` rows, the rest ``n DIV k``.
-    Matches Spark's and DuckDB's ntile bit-for-bit, so an oracle can
-    keep using ``ntile(k)`` while the Spark side stays free of the
-    single-partition global window ntile would need.
-    """
-
-    def idiv(a: Column, b: Column) -> Column:
-        # exact non-negative integer division (numerator made exactly
-        # divisible first, so the double division is lossless)
-        return ((a - a % b) / b).cast("long")
-
-    q = idiv(n, F.lit(k).cast("long"))
-    r = n % k
-    big = r * (q + 1)
-    return (
-        F.when(rk <= big, idiv(rk - 1, q + 1) + 1)
-        .otherwise(r + idiv(rk - big - 1, q) + 1)
-        .cast("long")
     )

@@ -13,9 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..registry import register, reuse
+from ..registry import register
 from ..utils import q2, sql_q2
-from .prefix import global_ordered, ntile_from_rank
+from .prefix import global_ordered, sql_ntile_from_rank
 
 
 @register(
@@ -158,9 +158,9 @@ def sort_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_size").cast("long").alias("x"),
         (F.col("p_partkey") % 64).cast("long").alias("y"),
     )
-    zed = reuse(pts.select(
+    zed = pts.select(
         "p_partkey", "x", "y", _z_spark(F.col("x"), F.col("y")).alias("z")
-    ))
+    )
     n_df = zed.agg(F.count(F.lit(1)).cast("long").alias("_n"))
     filed = (
         global_ordered(
@@ -170,9 +170,7 @@ def sort_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "x",
             "y",
-            ntile_from_rank(F.col("rk"), F.col("_n"), _ZFILES).alias(
-                "file_id"
-            ),
+            F.expr(sql_ntile_from_rank("rk", "_n", _ZFILES)).alias("file_id"),
         )
     )
     return filed.groupBy("file_id").agg(

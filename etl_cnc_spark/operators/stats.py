@@ -12944,13 +12944,13 @@ def stat_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the 1-row decision frame back to the ranked stream. At
     100 TB the stream ranks once and everything after is metadata."""
     e = table(spark, sf_dir, "events")
-    seq = reuse(e.select(
+    seq = e.select(
         "event_id",
         F.when(F.col("event_type") == "purchase", 1)
         .otherwise(0)
         .cast("long")
         .alias("x"),
-    ))
+    )
     ranked = global_ordered(
         seq,
         [F.col("event_id")],

@@ -73,11 +73,17 @@ _OP_MODULES = [
 # --- build scope: the one release point for build caches -----------
 #
 # Rule: a build persists a frame it reads more than once through
-# ``reuse()``.  The DataFrame a build returns is lazy, so the build
-# cannot unpersist; the next top-level registered build on the same
-# thread (or ``release_caches``) unpersists what the previous one
-# recorded.  A composed build runs inside its caller's scope and never
-# releases mid-build; outside any build ``reuse()`` does not persist.
+# ``reuse()`` — except a frame whose consumers sit above one shared
+# exchange, which is not cached: they already share that exchange's
+# output, and a cache between them hides it from AQE exchange reuse
+# and costs a job of its own.  No ``global_ordered`` input is cached
+# (operators/prefix.py; tests/test_build_scope_pin.py).
+#
+# The DataFrame a build returns is lazy, so the build cannot
+# unpersist; the next top-level registered build on the same thread
+# (or ``release_caches``) unpersists what the previous one recorded.
+# A composed build runs inside its caller's scope and never releases
+# mid-build; outside any build ``reuse()`` does not persist.
 # Thread scope: each thread has its own scope, so a build on one
 # thread never releases frames another thread's build recorded.
 

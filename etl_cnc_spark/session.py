@@ -28,11 +28,14 @@ def _cpus() -> int:
     return os.cpu_count() or 8
 
 
-def get_spark(app_name: str = "etl-cnc-spark") -> SparkSession:
-    """Create (or reuse) a tuned local SparkSession."""
+def get_spark(
+    app_name: str = "etl-cnc-spark", *, master: str | None = None
+) -> SparkSession:
+    """Create (or reuse) a tuned local SparkSession on ``master``
+    (default ``local[$SPARK_GRAFT_CPUS]``)."""
     cpus = _cpus()
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(8, cpus // 2)))
         .config("spark.sql.session.timeZone", "UTC")

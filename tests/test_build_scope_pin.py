@@ -51,3 +51,66 @@ def test_only_registry_persists():
         "persist through registry.reuse(), which the build scope releases: "
         + ", ".join(offenders)
     )
+
+
+def _is_reuse_call(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "reuse"
+    )
+
+
+def test_no_global_ordered_input_is_reused():
+    """No frame passed into ``global_ordered`` is a ``reuse()`` result
+    (inline, or the latest assignment of the name before the call):
+    the prefix machine's consumers share the exchanges below its
+    input, and a cache there only hides them from exchange reuse."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            aliases = {
+                a.asname or a.name
+                for node in ast.walk(tree)
+                if isinstance(node, ast.ImportFrom)
+                for a in node.names
+                if a.name == "global_ordered"
+            }
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                # (line, name, assigned from reuse()) for every assignment
+                assigns = [
+                    (node.lineno, t.id, _is_reuse_call(node.value))
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Assign)
+                    for t in node.targets
+                    if isinstance(t, ast.Name)
+                ]
+                for call in ast.walk(fn):
+                    if not (
+                        isinstance(call, ast.Call)
+                        and isinstance(call.func, ast.Name)
+                        and call.func.id in aliases
+                    ):
+                        continue
+                    for arg in call.args + [k.value for k in call.keywords]:
+                        reused = _is_reuse_call(arg)
+                        if isinstance(arg, ast.Name):
+                            prior = [
+                                a
+                                for a in assigns
+                                if a[1] == arg.id and a[0] < call.lineno
+                            ]
+                            reused = bool(prior) and max(prior)[2]
+                        if reused:
+                            rel = os.path.relpath(path, PKG)
+                            offenders.append(f"{rel}:{call.lineno}")
+    assert not offenders, "global_ordered input cached with reuse(): " + ", ".join(
+        sorted(set(offenders))
+    )

@@ -770,6 +770,19 @@ def test_eigenvector_rescale_is_a_window_not_a_cross_join(spark, sf_dir):
     assert node_count(plan, "Window") == _EV_ITER + 1, plan
 
 
+def test_prefix_machine_plans_read_no_cache(spark, sf_dir):
+    """global_ordered materializes nothing, and neither do these
+    callers in front of it: the executed plans hold no
+    InMemoryTableScan, and the branches share their exchanges through
+    AQE exchange reuse instead."""
+    for key in ("events_rfm", "sort_zorder", "stat_ks_test"):
+        df = REGISTRY[key].build(spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" not in plan, (key, plan)
+        assert "ReusedExchange" in plan, (key, plan)
+
+
 def test_sprt_uses_prefix_machine_not_global_window(spark, sf_dir):
     """stat_sprt_ab's running conversion count must come from the
     bucketed prefix machine — a single-partition global Window over

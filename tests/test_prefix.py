@@ -11,12 +11,13 @@ partition count — while never itself using an unpartitioned window.
 
 from __future__ import annotations
 
+import contextlib
 import random
 
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 
-from etl_cnc_spark.operators.prefix import global_ordered, ntile_from_rank
+from etl_cnc_spark.operators.prefix import global_ordered, sql_ntile_from_rank
 
 
 def _data(n: int, seed: int) -> list[Row]:
@@ -26,6 +27,18 @@ def _data(n: int, seed: int) -> list[Row]:
         Row(id=i, val=rng.randint(0, 5), amt=rng.randint(-50, 100))
         for i in range(n)
     ]
+
+
+@contextlib.contextmanager
+def _shuffle_partitions(spark, n: int):
+    """The bucket count is the session's shuffle-partition count."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_global_rank_and_running_sum_match_reference(spark):
@@ -55,11 +68,11 @@ def test_rank_invariant_to_partition_count(spark):
     df = spark.createDataFrame(_data(333, seed=13))
     outs = []
     for parts in (1, 3, 32):
-        got = global_ordered(
-            df, [F.col("val"), F.col("id")], bucket_key="val",
-            num_parts=parts,
-        )
-        outs.append({r["id"]: r["rk"] for r in got.collect()})
+        with _shuffle_partitions(spark, parts):
+            got = global_ordered(
+                df, [F.col("val"), F.col("id")], bucket_key="val"
+            )
+            outs.append({r["id"]: r["rk"] for r in got.collect()})
     assert outs[0] == outs[1] == outs[2]
 
 
@@ -74,9 +87,9 @@ def test_ntile_from_rank_matches_builtin_ntile(spark):
         )
         got = global_ordered(df, [F.col("id")], bucket_key="id").select(
             "id",
-            ntile_from_rank(
-                F.col("rk"), F.lit(n).cast("long"), k
-            ).alias("t"),
+            F.expr(sql_ntile_from_rank("rk", f"CAST({n} AS BIGINT)", k)).alias(
+                "t"
+            ),
         )
         assert {r["id"]: r["t"] for r in got.collect()} == {
             r["id"]: r["t"] for r in ref.collect()
@@ -105,13 +118,13 @@ def test_hierarchical_offsets_multi_bucket(spark, monkeypatch):
 
     monkeypatch.setattr(prefix, "_BUCKET", 4)
     df = spark.createDataFrame(_data(500, seed=21))
-    got = global_ordered(
-        df,
-        [F.col("val"), F.col("id")],
-        bucket_key="val",
-        sums={"amt": "run"},
-        num_parts=32,
-    )
+    with _shuffle_partitions(spark, 32):
+        got = global_ordered(
+            df,
+            [F.col("val"), F.col("id")],
+            bucket_key="val",
+            sums={"amt": "run"},
+        )
     w = Window.orderBy(F.col("val"), F.col("id"))
     ref = df.select(
         "id",

@@ -172,27 +172,6 @@ def test_sql_cache_table_released_at_next_key(spark, sf_dir):
     assert not spark.catalog.isCached("etlcnc_hot_orders")
 
 
-# ------------------------------------ 4. bench gate completeness (VERDICT)
-
-
-def test_bench_compare_baseline_matches_registry_bench_set():
-    """Every registry key flagged bench=True must carry a frozen gate
-    in tools/bench_compare.py and vice versa — VERDICT r14 caught
-    ml_survival_cindex silently ungated (and the 15-query total being
-    divided by a 14-query baseline).  This pin makes the comparator
-    drift-proof against future bench-set changes."""
-    import importlib
-
-    bc = importlib.import_module("tools.bench_compare")
-    bench_keys = {k for k, q in REGISTRY.items() if q.bench}
-    assert set(bc.BASELINE) == bench_keys
-    # the documented comparable baseline (BASELINE.md round-9
-    # re-freeze): derived as the sum of the per-query freezes, and its
-    # rendered value is pinned in BASELINE.md prose
-    assert bc.BASELINE_TOTAL == round(sum(bc.BASELINE.values()), 3)
-    assert abs(bc.BASELINE_TOTAL - 16.540) < 1e-9
-
-
 # ------------------------- 5. sequence-match cap (VERDICT r14 item 4)
 
 

@@ -96,37 +96,39 @@ def test_topk_exact_fold_is_spread(spark, sf_dir):
 
 
 def test_rfm_melts_with_one_generate(spark, sf_dir):
-    """r15: the metric melt is ONE explode of a 3-struct array (a
-    single Generate node over one cache read), not a 3-way union of
-    per-metric selects that tripled the rollup lineage in the plan."""
+    """The metric melt is ONE explode of a 3-struct array, not a 3-way
+    union of per-metric selects that tripled the rollup lineage in the
+    plan.  The prefix machine caches nothing, so each of its two
+    branches (the per-bucket window and the per-bucket totals) holds
+    one Generate above the shared rollup exchange."""
     plan = plan_of("events_rfm", spark, sf_dir)
-    assert node_count(plan, "Generate") == 1, plan
+    assert node_count(plan, "Generate") == 2, plan
     assert node_count(plan, "Union") == 0, plan
 
 
-def test_global_ordered_direct_call_leaks_no_cache(spark, sf_dir):
-    """r15: global_ordered persists its bucketed frame ONLY inside a
-    registered build (where the build scope releases it) — a
-    direct call has no release point, so persisting there would leave
-    a CacheManager entry for the session's lifetime and break the r14
-    release invariant for every later key."""
+def test_global_ordered_adds_no_cache_entry(spark, sf_dir):
+    """The prefix machine materializes nothing: neither a direct call
+    nor a call inside a registered build (where ``reuse()`` would
+    persist) leaves a CacheManager entry after the result is
+    collected."""
     from pyspark.sql import functions as F
 
+    from etl_cnc_spark import registry as R
     from etl_cnc_spark.operators.prefix import global_ordered
-    from etl_cnc_spark.registry import REGISTRY
 
-    before_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    df = spark.range(50).select(F.col("id").alias("k"))
-    global_ordered(df, [F.col("k")], bucket_key="k").collect()
-    if before_empty:
-        assert (
-            spark._jsparkSession.sharedState().cacheManager().isEmpty()
-        ), "direct global_ordered call must not register a cache entry"
-    # inside a registered build the persist IS taken and released at
-    # the next key's top-level build (the r14 invariant end-to-end)
-    REGISTRY["topk_global"].build(spark, sf_dir).collect()
-    REGISTRY["agg_global"].build(spark, sf_dir).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    def entries() -> int:
+        return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+    def build(spark, sf_dir):
+        df = spark.range(50).select(F.col("id").alias("k"))
+        return global_ordered(df, [F.col("k")], bucket_key="k", sums={"k": "run"})
+
+    R.release_caches(spark)
+    before = entries()
+    assert len(build(spark, sf_dir).collect()) == 50
+    assert entries() == before, "direct call cached a frame"
+    assert len(R._build_scope(build)(spark, sf_dir).collect()) == 50
+    assert entries() == before, "call inside a registered build cached a frame"
 
 
 def test_minhash_estimate_single_join(spark, sf_dir):

@@ -25,7 +25,7 @@ def test_release_caches_makes_timed_runs_cold(spark, sf_dir):
     from etl_cnc_spark import registry as R
 
     reg = R.load_all()
-    build = reg["events_rfm"].build  # the prefix machine caches its frame
+    build = reg["events_funnel"].build  # reuse()s its per-user frames
     R.release_caches(spark)
     before = _cache_entries(spark)
     build(spark, sf_dir).collect()  # warm-up materializes the caches

@@ -36,10 +36,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from etl_cnc_spark.oracle import compare  # noqa: E402
 from etl_cnc_spark.registry import load_all  # noqa: E402
+from etl_cnc_spark.session import get_spark, tune  # noqa: E402
 
 AXES = {
     "cpus": {
@@ -81,17 +80,11 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     axis = AXES[args.axis]
-    b = (
-        SparkSession.builder.master(axis["master"])
-        .appName(f"invariance-{args.axis}")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-    )
+    # tune() runs once per session, on the first table read, and would
+    # reset the axis' shuffle partitions and AQE: run it first
+    spark = tune(get_spark(f"invariance-{args.axis}", master=axis["master"]))
     for k, v in axis["conf"].items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+        spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
 
     fails = 0
