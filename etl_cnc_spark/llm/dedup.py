@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import REGISTRY, register, reuse
-from ..utils import q4, sql_q4, tmpdir
+from ..utils import checkpoint_round, q4, sql_q4
 
 HEX_HIGH = ["8", "9", "a", "b", "c", "d", "e", "f"]
 
@@ -595,25 +595,18 @@ def min_label_components(
     information travels 2^round hops and a component of diameter D
     converges in O(log D) rounds (a 40-hop path needs 6 rounds, not
     40). The driver only ever sees the edge count and per-round
-    changed COUNTS; labels stay on executors.
-
-    Fault tolerance on a real cluster: every 3rd round the frame is
-    checkpointed RELIABLY (``setCheckpointDir`` storage survives
-    executor loss), with cheap ``localCheckpoint`` in between to
-    truncate lineage. Non-convergence within ``max_rounds`` raises
-    instead of silently returning partial labels."""
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tmpdir(prefix="etlcnc_ckpt_"))
-    edges = edges.localCheckpoint(eager=True)
-    if edges.count() <= local_max_edges:
+    changed COUNTS, each observed in the ``checkpoint_round`` job that
+    truncates the frame's lineage (reliable every 3rd round, so a
+    real cluster survives executor loss); labels stay on executors.
+    Non-convergence within ``max_rounds`` raises instead of silently
+    returning partial labels."""
+    edges, m = checkpoint_round(edges, 0, n=F.count(F.lit(1)))
+    if m["n"] <= local_max_edges:
         return _local_union_find(edges)
     labels = (
         edges.select(F.col("u").alias("nid"))
         .distinct()
         .select("nid", F.col("nid").alias("label"))
-        .localCheckpoint(eager=True)
     )
     for rnd in range(max_rounds):
         nbr_min = (
@@ -633,21 +626,19 @@ def min_label_components(
         jump = stepped.select(
             F.col("nid").alias("pj_nid"), F.col("label").alias("pj_label")
         )
-        updated = stepped.join(
-            jump, stepped["label"] == jump["pj_nid"], "left"
-        ).select(
-            "nid",
-            "old_label",
-            F.coalesce("pj_label", "label").alias("label"),
+        updated, m = checkpoint_round(
+            stepped.join(
+                jump, stepped["label"] == jump["pj_nid"], "left"
+            ).select(
+                "nid",
+                "old_label",
+                F.coalesce("pj_label", "label").alias("label"),
+            ),
+            rnd,
+            changed=F.count(F.when(F.col("label") != F.col("old_label"), 1)),
         )
-        updated = (
-            updated.checkpoint(eager=True)
-            if rnd % 3 == 2
-            else updated.localCheckpoint(eager=True)
-        )
-        changed = updated.where(F.col("label") != F.col("old_label")).count()
         labels = updated.select("nid", "label")
-        if changed == 0:
+        if m["changed"] == 0:
             return labels
     raise RuntimeError(
         f"min_label_components did not converge in {max_rounds} rounds "

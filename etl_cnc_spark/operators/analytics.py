@@ -5517,9 +5517,10 @@ def events_grid_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins back — never a distance predicate over points); the
     component labels come from the same O(log D) pointer-jumping
     min-label loop the dedup clusterers use (llm/dedup.py
-    ``min_label_components``: scoped checkpoints, convergence
-    guard).  The DuckDB oracle proves the labels with a recursive
-    transitive closure — tractable because the cell table is tiny."""
+    ``min_label_components``: ``checkpoint_round`` lineage cuts,
+    convergence guard).  The DuckDB oracle proves the labels with a
+    recursive transitive closure — tractable because the cell table
+    is tiny."""
     from ..llm.dedup import min_label_components
 
     e = table(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
@@ -9571,150 +9572,57 @@ _HMM_START = -693147181  # ln 0.5
 )
 def events_hmm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Viterbi best-path score of a 2-state HMM (quiet/busy) over the
-    daily activity sequence, computed as an ASSOCIATIVE SCAN: each
-    day becomes a 2×2 tropical (max,+) matrix of quantized-integer
-    log-probs, and the sequential Viterbi recurrence — inherently a
-    left fold — parallelizes because tropical matrix product is
-    associative: ⌈log₂ T⌉ rounds of pairwise combination over the
-    day grid replace the T-step chain. Every entry is an EXACT int64
-    (max and + preserve the 1e-9 quantization), so the parallel
-    combination order cannot change the result — the property that
-    makes the scan safe on a 1000-executor cluster. The oracle runs
-    the same recurrence as a sequential recursive CTE over identical
-    integers; hash parity across the two evaluation orders is itself
-    the associativity proof.
+    daily activity sequence, computed as the SEQUENTIAL left fold of
+    the exact tropical (max,+) recurrence
+    v_s(t) = max_s' (v_s'(t-1) + trans(s',s)) + emit(s, hi_t)
+    over quantized-integer log-probs, the same integers the oracle's
+    recursive CTE folds: every entry is an exact int64, so the two
+    engines agree to the bit.
 
-    Scale shape at 100 TB: one hash aggregate to the calendar day
-    grid, then ~⌈log₂|days|⌉ (~9 for a year) self-joins over a frame
-    that HALVES each round — the same pointer-doubling discipline as
-    the connected-components family; no per-row sequential state."""
+    Scale shape: ONE hash aggregate to the calendar day grid, then a
+    single 1-row aggregate collects the day-ordered counts (a BOUNDED
+    frame: ≤|days| rows at any SF, ~365 a year), takes their lower
+    median for the busy/quiet binarization, and folds the 2-long state
+    vector from day 1 over the remaining days with ``aggregate``. The
+    build fires no job and the fold runs in one task."""
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    grid = daily.groupBy("y").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    w = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wt = Window.partitionBy()
-    med = (
-        grid.select(
-            "y",
-            F.sum("cnt").over(w).alias("cum"),
-            F.sum("cnt").over(wt).alias("n"),
-        )
-        .where(2 * F.col("cum") >= F.col("n"))
-        .agg(F.min("y").alias("m"))
     )
-    from ..operators.prefix import global_ordered as _go
+    obs = daily.agg(
+        F.array_sort(F.collect_list(F.struct("day", "y"))).alias("s"),
+        # lower median: the smallest count with cumulative share >= 1/2
+        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY y)").alias("m"),
+    ).where(F.size("s") > 0).select(
+        F.size("s").cast("long").alias("n_days"),
+        F.transform("s", lambda x: (x["y"] > F.col("m")).cast("int")).alias("hi"),
+    )
 
-    obs = (
-        _go(
-            daily,
-            [F.col("day")],
-            bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-            rank_col="t",
-        )
-        .crossJoin(F.broadcast(med))
-        .select(
-            "t",
-            F.when(F.col("y") > F.col("m"), 1).otherwise(0).alias("hi"),
-        ).localCheckpoint(eager=False)
-    )
-    # per-day tropical matrix M_t[i][j] = trans(i->j) + emit(j, hi_t)
-    emit0 = F.when(F.col("hi") == 0, _HMM_MATCH).otherwise(_HMM_MISS)
-    emit1 = F.when(F.col("hi") == 1, _HMM_MATCH).otherwise(_HMM_MISS)
-    mats = obs.select(
-        "t",
-        (F.lit(_HMM_STAY) + emit0).cast("long").alias("m00"),
-        (F.lit(_HMM_SWITCH) + emit1).cast("long").alias("m01"),
-        (F.lit(_HMM_SWITCH) + emit0).cast("long").alias("m10"),
-        (F.lit(_HMM_STAY) + emit1).cast("long").alias("m11"),
-        emit0.cast("long").alias("e0"),
-        emit1.cast("long").alias("e1"),
-    )
-    # Blelloch-style doubling over the TAIL matrices M_2..M_T (the
-    # chain is v_1 ⊗ M_2 ⊗ ... ⊗ M_T with v_1 = start + emit(day 1)):
-    # combine adjacent (odd, even) pairs with the tropical product —
-    # pairing preserves left-to-right order, associativity does the
-    # rest — until at most one matrix remains.
-    cur = (
-        mats.where(F.col("t") >= 2)
-        .select(
-            (F.col("t") - 1).alias("t"), "m00", "m01", "m10", "m11"
-        )
-        .localCheckpoint()
-    )
-    n_rows = cur.count()
-    while n_rows > 1:
-        a = cur.select(
-            F.floor((F.col("t") + 1) / 2).cast("long").alias("g"),
-            (F.col("t") % 2).alias("side"),
-            "m00",
-            "m01",
-            "m10",
-            "m11",
-        )
-        left = a.where(F.col("side") == 1).select(
-            "g",
-            F.col("m00").alias("a00"),
-            F.col("m01").alias("a01"),
-            F.col("m10").alias("a10"),
-            F.col("m11").alias("a11"),
-        )
-        right = a.where(F.col("side") == 0).select(
-            "g",
-            F.col("m00").alias("b00"),
-            F.col("m01").alias("b01"),
-            F.col("m10").alias("b10"),
-            F.col("m11").alias("b11"),
+    def emit(state: int, hi):
+        return F.when(hi == state, _HMM_MATCH).otherwise(_HMM_MISS).cast("long")
+
+    def step(v, hi):
+        return F.struct(
+            (F.greatest(v["v0"] + _HMM_STAY, v["v1"] + _HMM_SWITCH)
+             + emit(0, hi)).cast("long").alias("v0"),
+            (F.greatest(v["v1"] + _HMM_STAY, v["v0"] + _HMM_SWITCH)
+             + emit(1, hi)).cast("long").alias("v1"),
         )
 
-        def _combine(ai: str, aj: str, bi: str, bj: str, alone: str):
-            return F.coalesce(
-                F.greatest(
-                    F.col(ai) + F.col(bi), F.col(aj) + F.col(bj)
-                ),
-                F.col(alone),
-            ).cast("long")
-
-        cur = (
-            left.join(right, "g", "left")
-            .select(
-                F.col("g").alias("t"),
-                _combine("a00", "a01", "b00", "b10", "a00").alias("m00"),
-                _combine("a00", "a01", "b01", "b11", "a01").alias("m01"),
-                _combine("a10", "a11", "b00", "b10", "a10").alias("m10"),
-                _combine("a10", "a11", "b01", "b11", "a11").alias("m11"),
-            )
-            .localCheckpoint()
-        )
-        n_rows = cur.count()
-    v1 = mats.where(F.col("t") == 1).select(
-        (F.lit(_HMM_START) + F.col("e0")).cast("long").alias("v0"),
-        (F.lit(_HMM_START) + F.col("e1")).cast("long").alias("v1"),
+    day1 = F.col("hi")[0]
+    start = F.struct(
+        (emit(0, day1) + _HMM_START).alias("v0"),
+        (emit(1, day1) + _HMM_START).alias("v1"),
     )
-    nfold = obs.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
-    if n_rows == 0:  # single-day series: no tail product
-        vt = v1
-    else:
-        tail = cur.select("m00", "m01", "m10", "m11")
-        vt = v1.crossJoin(F.broadcast(tail)).select(
-            F.greatest(
-                F.col("v0") + F.col("m00"), F.col("v1") + F.col("m10")
-            )
-            .cast("long")
-            .alias("v0"),
-            F.greatest(
-                F.col("v0") + F.col("m01"), F.col("v1") + F.col("m11")
-            )
-            .cast("long")
-            .alias("v1"),
-        )
-    return vt.crossJoin(F.broadcast(nfold)).select(
+    return obs.select(
         "n_days",
-        q4(
-            F.greatest(F.col("v0"), F.col("v1")).cast("double") / _HMM_Q
-        ).alias("viterbi_loglik"),
-        F.when(F.col("v1") > F.col("v0"), 1).otherwise(0).alias(
+        F.aggregate(F.slice("hi", 2, F.size("hi")), start, step).alias("v"),
+    ).select(
+        "n_days",
+        q4(F.greatest("v.v0", "v.v1").cast("double") / _HMM_Q).alias(
+            "viterbi_loglik"
+        ),
+        F.when(F.col("v.v1") > F.col("v.v0"), 1).otherwise(0).alias(
             "final_state_busy"
         ),
     )

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register, reuse
-from ..utils import q4, sql_q4
+from ..utils import checkpoint_round, q4, sql_q4
 
 SCALE = 100_000_000  # 1e8 fixed-point
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85
@@ -213,6 +213,28 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _part_parents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(p, cents, par)`` of the deterministic part hierarchy shared by
+    the hierarchy keys: part 1 is the root, parent(p) = 1 +
+    (int(md5(p)[:6 hex]) mod (p-1)) < p, so the tree is acyclic."""
+    p = table(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("p"),
+        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
+        .cast("long")
+        .alias("cents"),
+    )
+    hexval = F.conv(
+        F.substring(F.md5(F.col("p").cast("string")), 1, 6), 16, 10
+    ).cast("long")
+    return p.select(
+        "p",
+        "cents",
+        F.when(F.col("p") == 1, F.lit(None).cast("long"))
+        .otherwise(1 + hexval % (F.col("p") - 1))
+        .alias("par"),
+    )
+
+
 @register(
     "graph_hierarchy_walk",
     oracle="""
@@ -248,48 +270,33 @@ def graph_hierarchy_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (anc ← anc's ancestor, steps add), so a depth-D tree finishes in
     ceil(log2 D) rounds — ~5 rounds for the ~e·ln(N) expected max
     depth of this random tree, not D level-wise passes. The driver
-    sees only per-round remaining counts; non-convergence raises.
+    sees only each round's remaining count, observed in the round's
+    ``checkpoint_round`` job; non-convergence raises.
     Same O(log) shape as min_label_components — transitive closure
     machinery, reused for directed ancestry with exact depths."""
-    from ..utils import tmpdir
-
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(tmpdir(prefix="etlcnc_ckpt_"))
-    p = table(spark, sf_dir, "part").select(F.col("p_partkey").alias("p"))
-    hexval = F.conv(
-        F.substring(F.md5(F.col("p").cast("string")), 1, 6), 16, 10
-    ).cast("long")
-    pm = p.select(
-        "p",
-        F.when(F.col("p") == 1, F.lit(None).cast("long"))
-        .otherwise(1 + hexval % (F.col("p") - 1))
-        .alias("par"),
-    ).localCheckpoint(eager=True)
+    pm = _part_parents(spark, sf_dir)
     # state: ancestor reached from each non-root node and the exact
     # step count to it; roots carry depth 0 directly
     state = pm.where(F.col("par").isNotNull()).select(
         "p", F.col("par").alias("anc"), F.lit(1).cast("long").alias("d")
-    ).localCheckpoint(eager=True)
+    )
     for rnd in range(12):
         jump = state.select(
             F.col("p").alias("j_p"), F.col("anc").alias("j_anc"),
             F.col("d").alias("j_d"),
         )
-        state = state.join(
-            jump, state["anc"] == jump["j_p"], "left"
-        ).select(
-            "p",
-            F.coalesce("j_anc", "anc").alias("anc"),
-            (F.col("d") + F.coalesce("j_d", F.lit(0))).alias("d"),
-        )
-        state = (
-            state.checkpoint(eager=True)
-            if rnd % 3 == 2
-            else state.localCheckpoint(eager=True)
+        state, m = checkpoint_round(
+            state.join(jump, state["anc"] == jump["j_p"], "left").select(
+                "p",
+                F.coalesce("j_anc", "anc").alias("anc"),
+                (F.col("d") + F.coalesce("j_d", F.lit(0))).alias("d"),
+            ),
+            rnd,
+            left=F.count(F.when(F.col("anc") != 1, 1)),
         )
         # convergence measured AFTER the jump, so finishing exactly on
         # the final round cannot false-raise
-        if state.where(F.col("anc") != 1).count() == 0:
+        if m["left"] == 0:
             break
     else:
         raise RuntimeError(
@@ -344,46 +351,27 @@ def graph_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a depth-D tree closes in ceil(log2 D) rounds and the pair count
     is Σdepths (~N·ln N for this random tree) — never N². One
     aggregate over the pairs + a left join back finishes the rollup;
-    the oracle is DuckDB's recursive ancestry CTE."""
-    from ..utils import tmpdir
-
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(tmpdir(prefix="etlcnc_ckpt_"))
-    base = table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("p"),
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    hexval = F.conv(
-        F.substring(F.md5(F.col("p").cast("string")), 1, 6), 16, 10
-    ).cast("long")
-    pm = base.select(
-        "p",
-        "cents",
-        F.when(F.col("p") == 1, F.lit(None).cast("long"))
-        .otherwise(1 + hexval % (F.col("p") - 1))
-        .alias("par"),
-    ).localCheckpoint(eager=True)
+    the oracle is DuckDB's recursive ancestry CTE. Each round's pair
+    count is observed in its ``checkpoint_round`` job: an unchanged
+    count is the fixed point."""
+    pm = _part_parents(spark, sf_dir)
     pairs = pm.where(F.col("par").isNotNull()).select(
         "p", F.col("par").alias("a")
-    ).localCheckpoint(eager=True)
+    )
+    n_before = None
     for rnd in range(12):
         left = pairs.select(F.col("p").alias("l_p"), F.col("a").alias("l_a"))
         right = pairs.select(F.col("p").alias("r_p"), F.col("a").alias("r_a"))
         composed = left.join(
             right, F.col("l_a") == F.col("r_p")
         ).select(F.col("l_p").alias("p"), F.col("r_a").alias("a"))
-        grown = pairs.unionByName(composed).distinct()
-        grown = (
-            grown.checkpoint(eager=True)
-            if rnd % 3 == 2
-            else grown.localCheckpoint(eager=True)
+        pairs, m = checkpoint_round(
+            pairs.unionByName(composed).distinct(), rnd,
+            n=F.count(F.lit(1)),
         )
-        n_before, n_after = pairs.count(), grown.count()
-        pairs = grown
-        if n_after == n_before:
+        if m["n"] == n_before:
             break
+        n_before = m["n"]
     else:
         raise RuntimeError(
             "transitive closure did not stabilize in 12 doubling rounds"
@@ -710,7 +698,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # call runs the shuffle-map stages below it at build (AQE), the rows
     # are stored at the first action; why not reuse(): SCALE.md
     # "Bounded-frame lazy localCheckpoint".  At 100 TB swap for a
-    # reliable checkpoint, as min_label_components does.
+    # reliable checkpoint via utils.checkpoint_round.
     sym = (
         und.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionAll(und.select(F.col("b").alias("n"), F.col("a").alias("m")))

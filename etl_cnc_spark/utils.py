@@ -30,7 +30,7 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -136,6 +136,32 @@ def tmpdir(prefix: str, *, stable: bool = False, key: str = "") -> str:
     if stable:
         _STABLE_DIRS[(prefix, key)] = d
     return d
+
+
+def checkpoint_round(
+    df: DataFrame, rnd: int, **metrics: Column
+) -> tuple[DataFrame, dict]:
+    """Truncate an iterative loop's lineage at round ``rnd`` and read
+    its convergence numbers in the same job.
+
+    The one lineage policy of the engine's iterative loops: every 3rd
+    round is checkpointed RELIABLY (``setCheckpointDir`` storage
+    survives executor loss; a temp dir is set when the session has
+    none), the rounds between take a cheap ``localCheckpoint``.  Both
+    are eager, so the frame's ``metrics`` (name=aggregate column) ride
+    along as an ``observe`` that the checkpoint job fills: the driver
+    gets e.g. a changed count without a separate ``count()`` job.
+    Returns the checkpointed frame and the ``{name: value}`` dict."""
+    obs = Observation()
+    df = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
+    if rnd % 3 == 2:
+        sc = df.sparkSession.sparkContext
+        if sc.getCheckpointDir() is None:
+            sc.setCheckpointDir(tmpdir(prefix="etlcnc_ckpt_"))
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=True)
+    return df, obs.get
 
 
 def ts_us(col: Column) -> Column:

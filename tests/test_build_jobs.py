@@ -1,50 +1,134 @@
-"""A flagship build fires no Spark job, nor does sim_auto's.
+"""Build-time Spark jobs, pinned per key.
 
-Building a key only constructs a plan: table schemas come from parquet
-footers read on the driver (``catalog.footer_schema``) and every
-strategy choice comes from metadata (sim_auto's candidate count is the
-footer's row count, ``catalog.footer_row_count``), so all jobs run at
-collect.  Each key is built under its own job group, and the status
-tracker (live with the UI off) must report no job in any of them.
+A flagship build fires no Spark job, nor do sim_auto's and
+events_hmm_viterbi's.  Building a key only constructs a plan: table
+schemas come from parquet footers read on the driver
+(``catalog.footer_schema``) and every strategy choice comes from
+metadata (sim_auto's candidate count is the footer's row count,
+``catalog.footer_row_count``), so all jobs run at collect.
+
+The iterative keys do run jobs at build: each loop round is one eager
+``utils.checkpoint_round``, whose job also fills the round's
+convergence numbers.  Their counts are pinned by an upper bound that
+may only go down.
+
+Each key is built under its own job group, and the status tracker
+(live with the UI off) reports the jobs of each group.
 """
 
 from __future__ import annotations
 
 import time
 
+from pyspark.sql import functions as F
+
 from etl_cnc_spark.registry import load_all, release_caches
+from etl_cnc_spark.utils import checkpoint_round
 
 REGISTRY = load_all()
 FLAGSHIP = [k for k, q in REGISTRY.items() if q.bench]
-KEYS = FLAGSHIP + ["sim_auto"]
+KEYS = FLAGSHIP + ["sim_auto", "events_hmm_viterbi"]
+# build jobs at sf0.001: one checkpoint_round per loop round (the
+# three min_label_components callers pay one observed edge checkpoint)
+MAX_BUILD_JOBS = {
+    "graph_hierarchy_walk": 12,
+    "graph_hierarchy_rollup": 21,
+    "dedup_cluster": 2,
+    "events_grid_cluster": 4,
+    "graph_copurchase_components": 4,
+}
 
 
-def test_flagship_builds_fire_no_job(spark, sf_dir):
-    assert len(FLAGSHIP) == 15, FLAGSHIP
+def _wait_for_listener(spark, group: str) -> None:
+    """The tracker is fed by the listener bus, in order: once a control
+    job run under ``group`` is visible, every earlier job is too."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    control = "build-jobs-pin:control"
+    sc.setJobGroup(group, "control")
+    spark.range(1).collect()
+    deadline = time.time() + 60
+    while not sc.statusTracker().getJobIdsForGroup(group):
+        assert time.time() < deadline, "control job never reached the tracker"
+        time.sleep(0.1)
+
+
+def _build_jobs(spark, sf_dir, keys, tag: str) -> dict[str, list[int]]:
+    """Job ids each key's build fired, one job group per key."""
+    sc = spark.sparkContext
     try:
-        for key in KEYS:
+        for key in keys:
             # resolve every table afresh, so a schema-inference job
             # cannot hide behind a handle an earlier test memoized
             spark.__dict__.pop("_etlcnc_tables", None)
-            sc.setJobGroup(f"build-jobs-pin:{key}", key)
+            sc.setJobGroup(f"{tag}:{key}", key)
             REGISTRY[key].build(spark, sf_dir)
-        # The tracker is fed by the listener bus, in order: once the
-        # control job is visible, any job a build fired is visible too.
-        sc.setJobGroup(control, "control")
-        spark.range(1).collect()
-        deadline = time.time() + 60
-        while not tracker.getJobIdsForGroup(control):
-            assert time.time() < deadline, "control job never reached the tracker"
-            time.sleep(0.1)
+        _wait_for_listener(spark, f"{tag}:control")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         release_caches(spark)
-    fired = {
-        key: list(tracker.getJobIdsForGroup(f"build-jobs-pin:{key}"))
-        for key in KEYS
-    }
+    tracker = sc.statusTracker()
+    return {k: list(tracker.getJobIdsForGroup(f"{tag}:{k}")) for k in keys}
+
+
+def test_flagship_builds_fire_no_job(spark, sf_dir):
+    assert len(FLAGSHIP) == 15, FLAGSHIP
+    fired = _build_jobs(spark, sf_dir, KEYS, "build-jobs-pin")
     assert not {k: v for k, v in fired.items() if v}, fired
+
+
+def test_iterative_build_jobs_bounded(spark, sf_dir):
+    fired = _build_jobs(spark, sf_dir, list(MAX_BUILD_JOBS), "build-jobs-bound")
+    over = {
+        k: len(v) for k, v in fired.items() if len(v) > MAX_BUILD_JOBS[k]
+    }
+    assert not over, (over, MAX_BUILD_JOBS)
+
+
+def _jobs_in(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _wait_for_listener(spark, group + ":control")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_round_observes_in_the_checkpoint_job(spark):
+    """A local round (0) and a reliable round (2): the observed metrics
+    equal count()/sum() of the returned frame, the round fires no job
+    beyond a bare checkpoint's own, and the reliable round sets a
+    checkpoint dir when the session has none."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    saved = jsc.checkpointDir()
+
+    def frame(k: int):
+        return spark.range(100 + k).groupBy((F.col("id") % 7).alias("g")).agg(
+            F.sum("id").alias("s")
+        )
+
+    try:
+        for rnd, bare in ((0, "localCheckpoint"), (2, "checkpoint")):
+            # no checkpoint dir: the reliable round must set its own
+            getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+            (out, m), jobs = _jobs_in(
+                spark,
+                f"ckpt-round:{rnd}",
+                lambda: checkpoint_round(
+                    frame(rnd), rnd, n=F.count(F.lit(1)), total=F.sum("s")
+                ),
+            )
+            if rnd == 2:
+                assert sc.getCheckpointDir() is not None
+            _, bare_jobs = _jobs_in(
+                spark,
+                f"ckpt-bare:{rnd}",
+                lambda: getattr(frame(rnd + 10), bare)(eager=True),
+            )
+            assert jobs == bare_jobs, (rnd, jobs, bare_jobs)
+            assert m["n"] == out.count() == 7
+            assert m["total"] == out.agg(F.sum("s")).first()[0]
+    finally:
+        getattr(jsc, "checkpointDir_$eq")(saved)

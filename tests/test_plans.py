@@ -681,9 +681,6 @@ def test_unpartitioned_window_census():
             "calendar-bounded (same shape as events_logrank_test)",
         ("operators/stats.py", "stat_runs_up_down"):
             "lag over the nonzero-sign day sequence — calendar-bounded",
-        ("operators/analytics.py", "events_hmm_viterbi"):
-            "median prefix over the distinct daily-count grid — "
-            "calendar-bounded (observation binarization)",
         ("operators/mlprep.py", "ml_qini_auuc"):
             "trapezoid lag over the integer click-count score grid — "
             "value-domain-bounded",

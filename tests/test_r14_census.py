@@ -45,6 +45,7 @@ ALLOWED: dict[tuple[str, str], str] = {
     ("operators/analytics.py", "events_sax_symbolic"): "grid: daily per type",
     ("operators/analytics.py", "events_holt_winters"): "grid: daily per type",
     ("operators/analytics.py", "events_croston"): "grid: daily",
+    ("operators/analytics.py", "events_hmm_viterbi"): "grid: daily (one sequence)",
     ("operators/analytics.py", "events_attribution_markov"): "grid: bounded transition matrix",
     ("operators/analytics.py", "events_dtw_daily"): "grid: daily arrays",
     ("llm/dedup.py", "dedup_simhash"): "grid: 32 signature bits",
