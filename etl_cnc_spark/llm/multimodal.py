@@ -14,14 +14,17 @@ byte-level feature extractor standing in — the distributed plumbing
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register, reuse
 from ..utils import q4, spread_scan
+
+if TYPE_CHECKING:  # imported where used, so loading the registry skips pandas
+    import pandas as pd
 
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,6 +88,8 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     except ImportError:
         have_media_libs = False
 
+    import pandas as pd
+
     for pdf in batches:
         rows = []
         for doc_id, payload, mime in zip(pdf["doc_id"], pdf["payload"], pdf["mime"]):
@@ -147,6 +152,8 @@ def _frame_sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
     FRAME_BYTES frames and emit every FRAME_STRIDE-th one — the video
     frame-sampling shape (a real decoder would seek keyframes; the
     byte-chunk stand-in keeps identical batch geometry)."""
+    import pandas as pd
+
     for pdf in batches:
         rows = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -405,6 +412,7 @@ def multimodal_byte_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
+    import pandas as pd
 
     p = _payloads(spark, sf_dir).where(F.col("doc_id") % ENT_DOC_MOD == 0)
 
@@ -527,8 +535,6 @@ def multimodal_energy_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF output is hash-exact. Scale: the Arrow pass is linear and
     partition-local; only (doc, frame, energy) triples shuffle, and
     the islands window partitions by doc."""
-    import pandas as pd  # noqa: F401 — imported for the UDF closure
-
     from pyspark.sql import Window
 
     p = _payloads(spark, sf_dir).where(

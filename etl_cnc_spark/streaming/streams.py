@@ -23,8 +23,6 @@ from __future__ import annotations
 import os
 import uuid
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -214,6 +212,9 @@ _STATE = StructType([StructField("n", LongType()), StructField("c", LongType())]
 def _per_user_totals(key, pdfs, state):
     """Arbitrary stateful logic: exact running count + integer-cent
     sum per user, kept in the state store across micro-batches."""
+    import numpy as np
+    import pandas as pd
+
     n, c = state.get if state.exists else (0, 0)
     for pdf in pdfs:
         n += len(pdf)

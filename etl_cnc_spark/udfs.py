@@ -5,15 +5,15 @@ reimplementation. Performance ordering (SURVEY §4): builtin exprs >
 Arrow-vectorized pandas UDFs > row-at-a-time Python UDFs — the
 row-at-a-time kind appears exactly once, as the demonstration of the
 slow path.
-"""
 
-from __future__ import annotations
+pandas, numpy and pyarrow are imported inside the keys that use them,
+so loading the registry does not import them.  No ``from __future__
+import annotations`` here: pandas_udf infers its kind from the nested
+functions' type hints, which must resolve against those local imports.
+"""
 
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
@@ -61,6 +61,8 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized scalar pandas UDF (Arrow batches, ~10-100x the
     row-at-a-time path). The numpy formula mirrors utils.q4 ops
     bitwise, so it hash-matches the SQL oracle exactly."""
+    import numpy as np
+    import pandas as pd
 
     @pandas_udf("double")
     def revenue(price: pd.Series, disc: pd.Series) -> pd.Series:
@@ -90,6 +92,8 @@ def udaf_pandas_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Inputs are quantized to integer cents inside the UDAF so the
     sums are exact (order-independent) and match the SQL oracle
     bitwise — the same discipline as utils.sum_money."""
+    import numpy as np
+    import pandas as pd
 
     @pandas_udf("double")
     def wavg(price: pd.Series, qty: pd.Series) -> float:
@@ -118,6 +122,8 @@ def udtf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score normalization within each market segment. numpy's
     mean/std(ddof=1) agree with the window-function oracle to ~1e-12
     relative; q4 quantization absorbs that."""
+    import numpy as np
+    import pandas as pd
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
         x = pdf["c_acctbal"]
@@ -178,9 +184,10 @@ def udf_arrow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow: zero-copy Arrow RecordBatch iterator per
     partition — the lowest-overhead Python extension point (no
     pandas conversion), for custom batch-level operators."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     def charge_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pc = pa.compute
         for batch in batches:
             price = batch.column(batch.schema.get_field_index("l_extendedprice"))
             disc = batch.column(batch.schema.get_field_index("l_discount"))
