@@ -1601,9 +1601,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_reciprocity",
     oracle=f"""
-    WITH e AS (
-        SELECT DISTINCT u, v FROM ({_EDGES_SQL}) s WHERE u <> v
-    )
+    WITH edges AS MATERIALIZED ({_EDGES_SQL}),
+    e AS (SELECT DISTINCT u, v FROM edges WHERE u <> v)
     SELECT CAST(count(*) AS BIGINT) AS n_edges,
            CAST(count(r.u) AS BIGINT) AS n_reciprocated,
            {sql_q4("CAST(count(r.u) AS DOUBLE) / count(*)")} AS reciprocity
@@ -1648,12 +1647,13 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_degree_gini",
     oracle=f"""
-    WITH sparse AS (
+    WITH edges AS MATERIALIZED ({_EDGES_SQL}),
+    sparse AS (
         SELECT u, v FROM (
             SELECT u, v,
                    row_number() OVER (PARTITION BY u
                                       ORDER BY w DESC, v) AS rk
-            FROM ({_EDGES_SQL}) s WHERE u <> v
+            FROM edges WHERE u <> v
         ) WHERE rk <= {BFS_TOPK}
     ), und AS (
         SELECT DISTINCT least(u, v) AS a, greatest(u, v) AS b FROM sparse

@@ -416,40 +416,154 @@ KS_G2 = "purchase"
 # Two-sample KS critical value at alpha = 0.05: c(alpha) = 1.358.
 KS_CALPHA = "1.358"
 
+# The pooled click/purchase ECDF on the integer-cents grid, one row per
+# distinct value: c1/c2 the per-value counts, cum1/cum2 the inclusive
+# cumulative counts, v_next the next grid value (NULL on the last) and
+# n1/n2 the group totals in every row.  Every two-sample test below
+# reads it and keeps its own statistic (``_two_sample_ecdf`` is the
+# Spark side).
+_TWO_SAMPLE_ECDF_SQL = f"""
+    SELECT v_cents, c1, c2,
+           sum(c1) OVER w AS cum1, sum(c2) OVER w AS cum2,
+           lead(v_cents) OVER (ORDER BY v_cents) AS v_next,
+           CAST(sum(c1) OVER () AS BIGINT) AS n1,
+           CAST(sum(c2) OVER () AS BIGINT) AS n2
+    FROM (
+        SELECT CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents,
+               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
+               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
+        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
+        GROUP BY 1
+    ) grid
+    WINDOW w AS (ORDER BY v_cents
+        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+"""
+
+
+def _two_sample_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pooled click/purchase ECDF as ``_TWO_SAMPLE_ECDF_SQL``
+    defines it: columns v_cents, c1, c2, cum1, cum2, v_next, n1, n2.
+
+    Scale shape: values are quantized to integer cents and hash-
+    aggregated FIRST, so every fold runs over the bounded value DOMAIN
+    (≤ |price grid| rows), never the input rows.  Each grid point gets
+    an ordered bucket id from its own value (the prefix machine's
+    value-derived ``_pid``, see operators/prefix.py), then ONE window
+    wave partitioned by ``_pid`` yields both the bucket-local running
+    counts and ``lead(v_cents)`` — never a window over an unpartitioned
+    grid (cents grids can reach 10⁷+ points at 100 TB).  n1/n2 come
+    from the same 1-row aggregate as the bucket bounds.  Per-bucket
+    metadata (≤ 1024 rows) carries the exclusive offsets and the next
+    non-empty bucket's first value (the ``lead`` of a bucket's last
+    point), so one broadcast join completes every row: nothing is
+    cached or checkpointed, and a build fires no job.  Counts stay
+    exact BIGINTs."""
+    e = table(spark, sf_dir, "events").where(
+        F.col("event_type").isin(KS_G1, KS_G2)
+    )
+    # (r16: expressions as JVM-parsed SQL strings — the profile showed
+    # ~half of a cold build was driver-side plan construction)
+    grid = (
+        e.selectExpr(
+            "event_type",
+            "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
+        )
+        .groupBy("v_cents")
+        .agg(
+            F.expr(f"CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1"),
+            F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
+        )
+    )
+    # ≤ 1024 buckets keeps the metadata fold in ONE `_pid DIV 1024`
+    # window partition (a few hundred rows at most); the grid is
+    # cents-domain-bounded, so more buckets would buy nothing.
+    parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 1024)
+    # One 1-row aggregate gives the bucket bounds AND n1/n2.  It reads
+    # every grid column, so its grid exchange is the same plan as the
+    # bucketed branch's and AQE runs it once.
+    stats = grid.selectExpr(
+        "min(v_cents) AS _lo",
+        "max(v_cents) AS _hi",
+        "CAST(sum(c1) AS BIGINT) AS n1",
+        "CAST(sum(c2) AS BIGINT) AS n2",
+    )
+    w = "PARTITION BY _pid ORDER BY v_cents"
+    run = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    local = grid.crossJoin(F.broadcast(stats)).selectExpr(
+        "v_cents",
+        "c1",
+        "c2",
+        "n1",
+        "n2",
+        f"(v_cents - _lo) DIV ((_hi - _lo + {parts}) DIV {parts}) AS _pid",
+    ).selectExpr(
+        "_pid",
+        "v_cents",
+        "c1",
+        "c2",
+        "n1",
+        "n2",
+        f"sum(c1) OVER ({w} {run}) AS _run1",
+        f"sum(c2) OVER ({w} {run}) AS _run2",
+        f"lead(v_cents) OVER ({w}) AS _next",
+    )
+    # Per-bucket metadata from the same windowed frame (a bucket's
+    # total is its last running count).  It groups by _pid, n1, n2:
+    # n1/n2 are constants, and as grouping keys they cannot be pruned,
+    # so both branches read the same columns under the window exchange
+    # and AQE runs that exchange once.  A plain groupBy("_pid") lets
+    # the optimizer drop them from this branch, and the two exchanges
+    # then differ (stat_wasserstein_1d: 8 → 11 jobs, 22 → 27 stages).
+    wm = "PARTITION BY _pid DIV 1024 ORDER BY _pid"
+    excl = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    meta = (
+        local.groupBy("_pid", "n1", "n2")
+        .agg(
+            F.expr("max(_run1) AS _t1"),
+            F.expr("max(_run2) AS _t2"),
+            F.expr("min(v_cents) AS _first"),
+        )
+        .selectExpr(
+            "_pid",
+            f"coalesce(sum(_t1) OVER ({wm} {excl}), 0) AS _off1",
+            f"coalesce(sum(_t2) OVER ({wm} {excl}), 0) AS _off2",
+            f"lead(_first) OVER ({wm}) AS _next_first",
+        )
+    )
+    # Every row finds its bucket's metadata, so a left join returns
+    # what an inner one would; an inner join would also push an
+    # inferred `_pid IS NOT NULL` below the rows' window exchange,
+    # making it differ from the metadata branch's copy, which AQE then
+    # could not reuse.  For the same reason a caller reads both cum1
+    # and cum2: dropping one prunes c1 or c2 from the metadata branch
+    # only (stat_cliffs_delta: 10 jobs instead of 8).
+    return local.join(F.broadcast(meta), "_pid", "left").selectExpr(
+        "v_cents",
+        "c1",
+        "c2",
+        "_off1 + _run1 AS cum1",
+        "_off2 + _run2 AS cum2",
+        "coalesce(_next, _next_first) AS v_next",
+        "n1",
+        "n2",
+    )
+
 
 @register(
     "stat_ks_test",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents,
-               sum(c1) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-               sum(c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), d AS (
-        SELECT max(abs(CAST(cum1 AS DOUBLE)/n1 - CAST(cum2 AS DOUBLE)/n2))
+    WITH d AS (
+        SELECT n1, n2,
+               max(abs(CAST(cum1 AS DOUBLE)/n1 - CAST(cum2 AS DOUBLE)/n2))
                AS ks_d
-        FROM cum CROSS JOIN totals
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     )
     SELECT n1, n2, {sql_q4("ks_d")} AS ks_d,
            {sql_q4(f"{KS_CALPHA} * sqrt(CAST(n1 + n2 AS DOUBLE) / (n1 * n2))")}
                AS d_crit,
            ks_d > {KS_CALPHA} * sqrt(CAST(n1 + n2 AS DOUBLE) / (n1 * n2))
                AS drifted
-    FROM d CROSS JOIN totals
+    FROM d
     """,
 )
 def stat_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,52 +571,19 @@ def stat_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     'purchase' value distributions: D = max |ECDF₁ − ECDF₂|, with the
     α=0.05 critical value 1.358·√((n₁+n₂)/(n₁·n₂)) and a drift flag.
 
-    Scale shape: values are quantized to integer cents and hash-
-    aggregated FIRST, so the ECDF fold runs over the bounded value
-    DOMAIN (≤ |price grid| rows), not the input rows; and the
-    cumulative counts go through ``global_ordered``'s bucketed prefix
-    machine (operators/prefix.py) rather than an unpartitioned
-    ``Window.orderBy`` — a wide-domain money column (cents grids can
-    reach 10⁷+ distinct points at 100 TB) never funnels through one
-    partition. Cumulative counts are integer (exact, order-free),
-    with doubles appearing only in the final per-gridpoint
-    division."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    ev = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    )
-    grid = ev.groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).select("v_cents", "cum1", "cum2")
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2")
-    )
-    d = (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cum1").cast("double") / F.col("n1")
-                    - F.col("cum2").cast("double") / F.col("n2")
-                )
-            ).alias("ks_d")
+    Scale shape: one aggregate over ``_two_sample_ecdf``.  Cumulative
+    counts are integer (exact, order-free), with doubles appearing
+    only in the final per-gridpoint division."""
+    d = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
+        F.expr(
+            "max(abs(CAST(cum1 AS DOUBLE) / n1 - CAST(cum2 AS DOUBLE) / n2))"
+            " AS ks_d"
         )
     )
     crit = F.lit(float(KS_CALPHA)) * F.sqrt(
         (F.col("n1") + F.col("n2")).cast("double") / (F.col("n1") * F.col("n2"))
     )
-    return d.crossJoin(F.broadcast(totals)).select(
+    return d.select(
         "n1",
         "n2",
         q4(F.col("ks_d")).alias("ks_d"),
@@ -614,34 +695,17 @@ def stat_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MWU_G1 = "click"
-MWU_G2 = "purchase"
-
-
 @register(
     "stat_mann_whitney",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{MWU_G1}', '{MWU_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{MWU_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{MWU_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT c1, c2, c1 + c2 AS t,
-               COALESCE(sum(c1 + c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS before
-        FROM grid
+    WITH cum AS (
+        SELECT n1, n2, c1, c1 + c2 AS t, cum1 + cum2 - c1 - c2 AS before
+        FROM ({_TWO_SAMPLE_ECDF_SQL})
     ), sums AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1,
-               CAST(sum(c2) AS BIGINT) AS n2,
+        SELECT n1, n2,
                CAST(sum(c1 * (2*before + t + 1)) AS BIGINT) AS r1x2,
                CAST(sum(t*t*t - t) AS BIGINT) AS tie3
-        FROM cum
+        FROM cum GROUP BY n1, n2
     ), u AS (
         SELECT n1, n2,
                CAST(r1x2 - n1*(n1+1) AS DOUBLE)/2.0 AS u1,
@@ -662,56 +726,23 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 'purchase' value distributions, with midrank tie handling and
     the tie-corrected normal approximation.
 
-    Scale shape — the same bounded-domain trick as stat_ks_test:
-    values quantize to integer cents and hash-aggregate FIRST, so
-    ranks come from a fold over the value DOMAIN, not the input
-    rows (a naive rank() over 10^11 rows would be a single-partition
-    sort of the whole fact table), and that fold runs through
-    ``global_ordered``'s bucketed prefix machine (operators/
-    prefix.py), never an unpartitioned window — the cents grid can
-    be 10⁷+ points at 100 TB. Midranks stay INTEGER by tracking
-    2x the rank (2·before + t + 1), so the rank-sum R1 is an exact
-    order-free integer; doubles appear only in the final z formula,
-    evaluated once. The tie term Σ(t³−t) accumulates as int64 —
-    at 10^11 rows per value the cube overflows, so the 100 TB variant
-    promotes it to decimal(38,0) (same one-line change as
-    agg_corr_exact's syy accumulator)."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(MWU_G1, MWU_G2)
+    Scale shape: one aggregate over ``_two_sample_ecdf`` — ranks come
+    from a fold over the value DOMAIN, not the input rows (a naive
+    rank() over 10^11 rows would be a single-partition sort of the
+    whole fact table).  A grid point's tie block sits after
+    before = cum1 + cum2 − c1 − c2 smaller values.  Midranks stay
+    INTEGER by tracking 2x the rank (2·before + t + 1), so the
+    rank-sum R1 is an exact order-free integer; doubles appear only in
+    the final z formula, evaluated once. The tie term Σ(t³−t)
+    accumulates as int64 — at 10^11 rows per value the cube
+    overflows, so the 100 TB variant promotes it to decimal(38,0)
+    (same one-line change as agg_corr_exact's syy accumulator)."""
+    cum = _two_sample_ecdf(spark, sf_dir).selectExpr(
+        "n1", "n2", "c1", "c1 + c2 AS t", "cum1 + cum2 - c1 - c2 AS before"
     )
-    ev = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    )
-    grid = ev.groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == MWU_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == MWU_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    # Inclusive running sum from the bucketed prefix machine; the
-    # oracle's "UNBOUNDED PRECEDING AND 1 PRECEDING" exclusive sum is
-    # recovered as cum_t − t.
-    with_t = grid.withColumn("t", (F.col("c1") + F.col("c2")).cast("long"))
-    cum = global_ordered(
-        with_t,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"t": "cum_t"},
-        rank_col=None,
-    ).select(
-        "c1",
-        "c2",
-        "t",
-        (F.col("cum_t") - F.col("t")).alias("before"),
-    )
-    sums = cum.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum(F.col("c1") * (2 * F.col("before") + F.col("t") + 1))
-        .cast("long")
-        .alias("r1x2"),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("long")
-        .alias("tie3"),
+    sums = cum.groupBy("n1", "n2").agg(
+        F.expr("CAST(sum(c1 * (2 * before + t + 1)) AS BIGINT) AS r1x2"),
+        F.expr("CAST(sum(t * t * t - t) AS BIGINT) AS tie3"),
     )
     n1, n2 = F.col("n1"), F.col("n2")
     u1 = (F.col("r1x2") - n1 * (n1 + 1)).cast("double") / F.lit(2.0)
@@ -2246,9 +2277,8 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doubled midranks stay integer: 2·before + t + 1), so the rank
     join is value-keyed against grid metadata and every accumulator
     is an exact integer until the single closed-form H. The prefix
-    counts run through ``global_ordered``'s bucketed machine (like
-    stat_ks_test/stat_mann_whitney) — no unpartitioned window over
-    the cents grid on the Spark side."""
+    counts run through ``global_ordered``'s bucketed machine — no
+    unpartitioned window over the cents grid on the Spark side."""
     e = table(spark, sf_dir, "events")
     ev = e.select(
         "event_type", cents(F.col("value")).alias("v_cents")
@@ -2317,38 +2347,19 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_wasserstein_1d",
-    bench=True,  # the ECDF-grid representative: hash-agg to the
-    # bounded cents grid, ONE _pid-bucketed window wave (running sums
-    # and lead() together), per-bucket metadata carrying the offsets,
-    # the next bucket's first value and n1/n2.
+    bench=True,  # the ECDF-grid representative: one aggregate over
+    # _two_sample_ecdf (one _pid-bucketed window wave, per-bucket
+    # metadata, one broadcast join).
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents,
-               sum(c1) OVER w AS cum1, sum(c2) OVER w AS cum2,
-               lead(v_cents) OVER (ORDER BY v_cents) AS v_next
-        FROM grid
-        WINDOW w AS (ORDER BY v_cents
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), num AS (
-        SELECT CAST(sum(abs(cum1*n2 - cum2*n1) * (v_next - v_cents))
+    WITH num AS (
+        SELECT n1, n2,
+               CAST(sum(abs(cum1*n2 - cum2*n1) * (v_next - v_cents))
                AS BIGINT) AS w1_num
-        FROM cum CROSS JOIN totals WHERE v_next IS NOT NULL
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4("CAST(w1_num AS DOUBLE) / n1 / n2 / 100.0")} AS w1_dist
-    FROM num CROSS JOIN totals
+    FROM num
     """,
 )
 def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2357,116 +2368,21 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     KS, weighs HOW FAR mass moved, not just the worst ECDF gap:
     W1 = ∫|ECDF1 − ECDF2| dv, discretized over the cents grid as
     Σ |cum1·n2 − cum2·n1| · gap / (n1·n2) with gap = next grid point
-    minus this one (the last grid point contributes nothing: both
-    ECDFs are 1 there).
+    minus this one (the last grid point has no successor: its summand
+    is NULL and sum() skips it; both ECDFs are 1 there).
 
-    Scale shape: hash-aggregate to the bounded cents grid FIRST, give
-    each grid point an ordered bucket id from its own value (the
-    prefix machine's value-derived ``_pid``, see operators/prefix.py),
-    then ONE window wave partitioned by ``_pid`` yields both the
-    bucket-local running counts and ``lead(v_cents)`` — never a window
-    over an unpartitioned grid.  n1/n2 come from the same 1-row
-    aggregate as the bucket bounds and ride along in every row.  The
-    per-bucket metadata (≤ one row per bucket, grouped from the same
-    partitioned frame) folds in the exclusive offsets and the next
-    non-empty bucket's first value (the ``lead`` of a bucket's last
-    point), so one broadcast join completes every row: no cached
-    cumulative frame, no rank+1 self-join, no separate totals pass.
-    The summand is an
-    exact BIGINT (|cum1·n2 − cum2·n1| ≤ n1·n2, times the cents gap;
-    the total is bounded by n1·n2·span — within int64 through
+    Scale shape: one aggregate over ``_two_sample_ecdf``.  The summand
+    is an exact BIGINT (|cum1·n2 − cum2·n1| ≤ n1·n2, times the cents
+    gap; the total is bounded by n1·n2·span — within int64 through
     ~1e9×1e9-row groups × 10^7-cent spans split across, which a
     100 TB run stays under because the grid aggregate has already
     collapsed the rows), so the sum is order-free and the only double
     is the final division."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    # (r16: expressions as JVM-parsed SQL strings — the profile showed
-    # ~half this query's cold wall was driver-side plan construction)
-    grid = (
-        e.selectExpr(
-            "event_type",
-            "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
-        )
-        .groupBy("v_cents")
-        .agg(
-            F.expr(f"CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1"),
-            F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
-        )
-    )
-    # ≤ 1024 buckets keeps the metadata fold in ONE `_pid DIV 1024`
-    # window partition (a few hundred rows at most); the grid is
-    # cents-domain-bounded, so more buckets would buy nothing.
-    parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 1024)
-    # One 1-row aggregate gives the bucket bounds AND n1/n2.  It reads
-    # every grid column, so its grid exchange is the same plan as the
-    # bucketed branch's and AQE runs it once (no cache: a cached grid
-    # would stop AQE from reusing the window exchange below, which
-    # both the rows and the metadata read).
-    stats = grid.selectExpr(
-        "min(v_cents) AS _lo",
-        "max(v_cents) AS _hi",
-        "CAST(sum(c1) AS BIGINT) AS n1",
-        "CAST(sum(c2) AS BIGINT) AS n2",
-    )
-    w = "PARTITION BY _pid ORDER BY v_cents"
-    local = grid.crossJoin(F.broadcast(stats)).selectExpr(
-        "v_cents",
-        "c1",
-        "c2",
-        "n1",
-        "n2",
-        f"(v_cents - _lo) DIV ((_hi - _lo + {parts}) DIV {parts}) AS _pid",
-    ).selectExpr(
-        "_pid",
-        "v_cents",
-        "n1",
-        "n2",
-        f"sum(c1) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS _run1",
-        f"sum(c2) OVER ({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        " AS _run2",
-        f"lead(v_cents) OVER ({w}) AS _next",
-    )
-    # per-bucket metadata from the same windowed frame (a bucket's
-    # total is its last running count): the exclusive offsets enter
-    # as ONE exact BIGINT term, _off1·n2 − _off2·n1, and the next
-    # non-empty bucket's first value completes each bucket's last lead.
-    # Reading n1/n2 here as the rows do keeps the columns under both
-    # branches' window exchange the same, so AQE runs it once.
-    wm = "PARTITION BY _pid DIV 1024 ORDER BY _pid"
-    excl = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
-    meta = (
-        local.groupBy("_pid")
-        .agg(
-            F.expr("max(_run1) AS _t1"),
-            F.expr("max(_run2) AS _t2"),
-            F.expr("min(v_cents) AS _first"),
-            F.expr("max(n1) AS _n1"),
-            F.expr("max(n2) AS _n2"),
-        )
-        .selectExpr(
-            "_pid",
-            f"coalesce(sum(_t1) OVER ({wm} {excl}), 0) * _n2"
-            f" - coalesce(sum(_t2) OVER ({wm} {excl}), 0) * _n1 AS _offd",
-            f"lead(_first) OVER ({wm}) AS _next_first",
-        )
-    )
-    # Every row finds its bucket's metadata, so a left join returns
-    # what an inner one would; an inner join would also push an
-    # inferred `_pid IS NOT NULL` below the rows' window exchange,
-    # making it differ from the metadata branch's copy, which AQE then
-    # could not reuse.  The last grid point has no successor: its
-    # summand is NULL and sum() skips it; n1/n2 are constant, so max()
-    # just carries them.
-    num = local.join(F.broadcast(meta), "_pid", "left").agg(
+    num = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
         F.expr(
-            "CAST(sum(abs(_offd + _run1 * n2 - _run2 * n1)"
-            " * (coalesce(_next, _next_first) - v_cents)) AS BIGINT) AS w1_num"
-        ),
-        F.expr("max(n1) AS n1"),
-        F.expr("max(n2) AS n2"),
+            "CAST(sum(abs(cum1 * n2 - cum2 * n1) * (v_next - v_cents))"
+            " AS BIGINT) AS w1_num"
+        )
     )
     return num.select(
         "n1",
@@ -2491,36 +2407,19 @@ _CVM_Q = 1_000_000_000
 @register(
     "stat_cvm_test",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c1) OVER w AS cum1, sum(c2) OVER w AS cum2
-        FROM grid
-        WINDOW w AS (ORDER BY v_cents
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), terms AS (
-        SELECT CAST(sum((c1 + c2) * CAST(floor(
+    WITH terms AS (
+        SELECT n1, n2,
+               CAST(sum((c1 + c2) * CAST(floor(
                    pow(CAST(cum1 AS DOUBLE)/n1 - CAST(cum2 AS DOUBLE)/n2, 2)
                    * {_CVM_Q} + 0.5) AS BIGINT)) AS BIGINT) AS tq
-        FROM cum CROSS JOIN totals
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4(
                f"CAST(tq AS DOUBLE) / {_CVM_Q}"
                " * n1 * n2 / ((n1 + n2) * (n1 + n2)) "
            )} AS cvm_t
-    FROM terms CROSS JOIN totals
+    FROM terms
     """,
 )
 def stat_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2529,51 +2428,25 @@ def stat_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_pooled (ECDF1 − ECDF2)² — KS's max replaced by the integrated
     squared gap, so T sees cumulative small divergences KS ignores.
 
-    Scale shape: identical to stat_ks_test — bounded cents grid via
-    hash aggregate, cumulative counts through the bucketed prefix
-    machine, totals as a broadcast 1-row frame.  Each grid point's
-    squared gap is fixed-point quantized (×1e9, floor) BEFORE the
-    weighted sum, so the aggregate is an exact integer on both
+    Scale shape: one aggregate over ``_two_sample_ecdf``.  Each grid
+    point's squared gap is fixed-point quantized (×1e9, floor) BEFORE
+    the weighted sum, so the aggregate is an exact integer on both
     engines (a raw double sum would be exchange-order-dependent);
     the squared gap itself is computed from the same expression text
     on both sides."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
     gap = (
         F.col("cum1").cast("double") / F.col("n1")
         - F.col("cum2").cast("double") / F.col("n2")
     )
-    terms = (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.sum(
-                (F.col("c1") + F.col("c2"))
-                * F.floor(F.pow(gap, 2) * _CVM_Q + 0.5).cast("long")
-            )
-            .cast("long")
-            .alias("tq")
+    terms = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
+        F.sum(
+            (F.col("c1") + F.col("c2"))
+            * F.floor(F.pow(gap, 2) * _CVM_Q + 0.5).cast("long")
         )
+        .cast("long")
+        .alias("tq")
     )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    return terms.select(
         "n1",
         "n2",
         q4(
@@ -2937,35 +2810,20 @@ _AD_Q = 1_000_000
 @register(
     "stat_anderson_darling",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c1) OVER w AS m1, sum(c1 + c2) OVER w AS b
-        FROM grid
-        WINDOW w AS (ORDER BY v_cents
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2,
-               CAST(sum(c1 + c2) AS BIGINT) AS nn
-        FROM grid
+    WITH cum AS (
+        SELECT n1, n2, n1 + n2 AS nn, c1, c2, cum1 AS m1, cum1 + cum2 AS b
+        FROM ({_TWO_SAMPLE_ECDF_SQL})
     ), terms AS (
-        SELECT CAST(sum(CAST(floor(
+        SELECT n1, n2,
+               CAST(sum(CASE WHEN b < nn THEN CAST(floor(
                    (c1 + c2) * pow(CAST(nn*m1 - n1*b AS DOUBLE), 2)
                    / (CAST(b AS DOUBLE) * (nn - b)) * {_AD_Q} + 0.5)
-               AS BIGINT)) AS BIGINT) AS tq
-        FROM cum CROSS JOIN totals WHERE b < nn
+               AS BIGINT) END) AS BIGINT) AS tq
+        FROM cum GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4(f"CAST(tq AS DOUBLE) / {_AD_Q} / n1 / n2")} AS ad_a2
-    FROM terms CROSS JOIN totals
+    FROM terms
     """,
 )
 def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2978,33 +2836,13 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct pooled values (the Bj = N term is excluded; its
     numerator is identically zero).
 
-    Scale shape: the stat_ks_test template — bounded cents grid,
-    cumulative counts through the bucketed prefix machine, totals
-    broadcast; the per-gridpoint term is fixed-point quantized before
-    the fold so the sum is an exact integer, and N·M1j − n1·Bj is an
-    exact BIGINT promoted once to double."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    grid = grid.withColumn("cb", F.col("c1") + F.col("c2"))
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "m1", "cb": "b"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum("cb").cast("long").alias("nn"),
+    Scale shape: one aggregate over ``_two_sample_ecdf`` with
+    M1j = cum1, Bj = cum1 + cum2 and N = n1 + n2; the per-gridpoint
+    term is fixed-point quantized before the fold so the sum is an
+    exact integer, and N·M1j − n1·Bj is an exact BIGINT promoted once
+    to double."""
+    cum = _two_sample_ecdf(spark, sf_dir).selectExpr(
+        "n1", "n2", "n1 + n2 AS nn", "c1", "c2", "cum1 AS m1", "cum1 + cum2 AS b"
     )
     num = (F.col("nn") * F.col("m1") - F.col("n1") * F.col("b")).cast("double")
     term = F.floor(
@@ -3014,12 +2852,10 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
         * _AD_Q
         + 0.5
     ).cast("long")
-    terms = (
-        cum.crossJoin(F.broadcast(totals))
-        .where(F.col("b") < F.col("nn"))
-        .agg(F.sum(term).cast("long").alias("tq"))
+    terms = cum.groupBy("n1", "n2").agg(
+        F.sum(F.when(F.col("b") < F.col("nn"), term)).cast("long").alias("tq")
     )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    return terms.select(
         "n1",
         "n2",
         q4(
@@ -3168,25 +3004,7 @@ def stat_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stat_qq_table",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents,
-               sum(c1) OVER w AS cum1, sum(c2) OVER w AS cum2
-        FROM grid
-        WINDOW w AS (ORDER BY v_cents
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), ps AS (
+    WITH ps AS (
         SELECT CAST(unnest(generate_series(1, 9)) AS BIGINT) AS dec
     )
     SELECT dec,
@@ -3199,7 +3017,7 @@ def stat_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
                " AS DOUBLE)"
                " / min(CASE WHEN 10*cum2 >= dec*n2 THEN v_cents END)"
            )} AS qq_ratio
-    FROM cum CROSS JOIN totals CROSS JOIN ps
+    FROM ({_TWO_SAMPLE_ECDF_SQL}) CROSS JOIN ps
     GROUP BY dec
     """,
 )
@@ -3212,32 +3030,9 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile-mapping calibration is built from, and the quantile
     companion to the KS/CvM/AD gap statistics.
 
-    Scale shape: the exact quantiles come from the bounded cents
-    grid + bucketed-prefix cumulative counts (the stat_ks_test
-    machinery) crossed with a 9-row broadcast decile frame — never a
-    per-group sort of raw rows and never an approximate
-    percentile: at any SF the post-grid work is |grid|×9."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
+    Scale shape: ``_two_sample_ecdf`` crossed with a 9-row broadcast
+    decile frame — never a per-group sort of raw rows and never an
+    approximate percentile: at any SF the post-grid work is |grid|×9."""
     ps = spark.range(1, 10).select(F.col("id").cast("long").alias("dec"))
     q1 = F.min(
         F.when(10 * F.col("cum1") >= F.col("dec") * F.col("n1"), F.col("v_cents"))
@@ -3246,7 +3041,7 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(10 * F.col("cum2") >= F.col("dec") * F.col("n2"), F.col("v_cents"))
     ).cast("long")
     return (
-        cum.crossJoin(F.broadcast(totals))
+        _two_sample_ecdf(spark, sf_dir)
         .crossJoin(F.broadcast(ps))
         .groupBy("dec")
         .agg(
@@ -6095,36 +5890,18 @@ _ED_Q = 1_000_000_000  # fixed-point quantum for squared-ECDF-gap summands
 @register(
     "stat_energy_distance",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents,
-               sum(c1) OVER w AS cum1, sum(c2) OVER w AS cum2,
-               lead(v_cents) OVER (ORDER BY v_cents) AS v_next
-        FROM grid
-        WINDOW w AS (ORDER BY v_cents
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), num AS (
-        SELECT CAST(sum(CAST(floor(
+    WITH num AS (
+        SELECT n1, n2,
+               CAST(sum(CAST(floor(
                    pow(CAST(cum1 AS DOUBLE)/n1 - CAST(cum2 AS DOUBLE)/n2, 2)
                    * {_ED_Q} + 0.5) AS BIGINT) * (v_next - v_cents))
                AS BIGINT) AS eq
-        FROM cum CROSS JOIN totals WHERE v_next IS NOT NULL
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4(f"2.0 * CAST(eq AS DOUBLE) / {_ED_Q} / 100.0")}
                AS energy_dist
-    FROM num CROSS JOIN totals
+    FROM num
     """,
 )
 def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6134,53 +5911,24 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike KS, is differentiable in the mass moved (the two-sample
     counterpart of the energy statistic behind distance correlation).
 
-    Scale shape: the bounded-cents-grid prefix machine
-    (hash-aggregate to the grid, ONE bucketed prefix pass for both
-    cumulative counts and rank, grid-sized rank+1 self-join for the
-    gap — stat_wasserstein_1d's shape before it moved to one
-    _pid-bucketed window with lead()); the squared ECDF gap is
-    fixed-point quantized (x1e9, floor) per grid point BEFORE the
-    gap-weighted sum, so the aggregate is an exact BIGINT on both
-    engines."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col="rk",
-    ).localCheckpoint(eager=False)
-    nxt = cum.select((F.col("rk") - 1).alias("rk"), F.col("v_cents").alias("v_next"))
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
+    Scale shape: one aggregate over ``_two_sample_ecdf``, whose
+    ``v_next`` gives each grid point's gap (the last point's is NULL
+    and sum() skips it); the squared ECDF gap is fixed-point quantized
+    (x1e9, floor) per grid point BEFORE the gap-weighted sum, so the
+    aggregate is an exact BIGINT on both engines."""
     gap = (
         F.col("cum1").cast("double") / F.col("n1")
         - F.col("cum2").cast("double") / F.col("n2")
     )
-    num = (
-        cum.join(nxt, "rk")
-        .crossJoin(F.broadcast(totals))
-        .agg(
-            F.sum(
-                F.floor(F.pow(gap, 2) * _ED_Q + 0.5).cast("long")
-                * (F.col("v_next") - F.col("v_cents"))
-            )
-            .cast("long")
-            .alias("eq")
+    num = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
+        F.sum(
+            F.floor(F.pow(gap, 2) * _ED_Q + 0.5).cast("long")
+            * (F.col("v_next") - F.col("v_cents"))
         )
+        .cast("long")
+        .alias("eq")
     )
-    return num.crossJoin(F.broadcast(totals)).select(
+    return num.select(
         "n1",
         "n2",
         q4(
@@ -6196,32 +5944,15 @@ _CLIFF_T = (0.147, 0.33, 0.474)
 @register(
     "stat_cliffs_delta",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cum2
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), num AS (
-        SELECT CAST(sum(c1 * (cum2 - c2)) AS BIGINT) AS n_gt,
-               CAST(sum(c1 * (n2 - cum2)) AS BIGINT) AS n_lt
-        FROM cum CROSS JOIN totals
+    WITH num AS (
+        SELECT n1, n2,
+               CAST(sum(c1 * (cum2 - c2)) AS BIGINT) AS n_gt,
+               CAST(sum(c2 * (cum1 - c1)) AS BIGINT) AS n_lt
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     ), d AS (
         SELECT n1, n2, n_gt, n_lt,
                CAST(n_gt - n_lt AS DOUBLE) / n1 / n2 AS delta
-        FROM num CROSS JOIN totals
+        FROM num
     )
     SELECT n1, n2,
            {sql_q4("delta")} AS delta,
@@ -6241,43 +5972,22 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude banding.
 
     Scale shape: never the n1*n2 pair join — on the bounded cents
-    grid, #(x>y) = sum over grid of c1(v) * cum2(v-), so one hash
-    aggregate + ONE bucketed prefix pass + a broadcast totals frame;
-    both dominance counts are exact BIGINTs (bounded by n1*n2 —
-    within int64 through ~3e9 x 3e9 rows)."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c2": "cum2"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
-    num = cum.crossJoin(F.broadcast(totals)).agg(
+    grid, #(x>y) = sum over grid of c1(v) * cum2(v-) and #(x<y) =
+    sum of c2(v) * cum1(v-), so one aggregate over
+    ``_two_sample_ecdf``; both dominance counts are exact BIGINTs
+    (bounded by n1*n2 — within int64 through ~3e9 x 3e9 rows)."""
+    num = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
         F.sum(F.col("c1") * (F.col("cum2") - F.col("c2")))
         .cast("long")
         .alias("n_gt"),
-        F.sum(F.col("c1") * (F.col("n2") - F.col("cum2")))
+        F.sum(F.col("c2") * (F.col("cum1") - F.col("c1")))
         .cast("long")
         .alias("n_lt"),
     )
     delta = (F.col("n_gt") - F.col("n_lt")).cast("double") / F.col("n1") / F.col(
         "n2"
     )
-    return num.crossJoin(F.broadcast(totals)).select(
+    return num.select(
         "n1",
         "n2",
         q4(delta).alias("delta"),
@@ -6305,38 +6015,23 @@ def _sql_ab_t2(k: str) -> str:
 @register(
     "stat_ansari_bradley",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c1 + c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cumn
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2,
-               CAST(sum(c1) + sum(c2) AS BIGINT) AS nn,
-               CAST((sum(c1) + sum(c2) + 1) // 2 AS BIGINT) AS m
-        FROM grid
+    WITH cum AS (
+        SELECT n1, n2, c1, c2, cum1 + cum2 AS cumn, n1 + n2 AS nn,
+               (n1 + n2 + 1) // 2 AS m
+        FROM ({_TWO_SAMPLE_ECDF_SQL})
     ), terms AS (
-        SELECT CAST(sum(CAST(floor(
+        SELECT n1, n2,
+               CAST(sum(CAST(floor(
                    c1 * CAST({_sql_ab_t2("cumn")}
                         - {_sql_ab_t2("(cumn - c1 - c2)")} AS DOUBLE)
                    / (2.0 * (c1 + c2)) * {_AB_Q} + 0.5) AS BIGINT))
                AS BIGINT) AS abq
-        FROM cum CROSS JOIN totals
+        FROM cum GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4(f"CAST(abq AS DOUBLE) / {_AB_Q}")} AS ab_stat,
            {sql_q4(f"CAST(abq AS DOUBLE) / {_AB_Q} / n1")} AS ab_mean
-    FROM terms CROSS JOIN totals
+    FROM terms
     """,
 )
 def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6348,40 +6043,21 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     (larger dispersion), the rank test for scale the way
     Mann-Whitney is the rank test for location.
 
-    Scale shape: no per-observation ranking — on the bounded cents
-    grid, a tie block occupies ranks (cum-c, cum], and 2*sum of
-    scores over any prefix has a CLOSED FORM (quadratic in k, split
-    at the midpoint), so each grid point's score mass is O(1)
-    arithmetic on the prefix counts.  The per-point group-1 share is
-    fixed-point quantized (x1e6) before the sum, making the
-    aggregate an exact BIGINT on both engines."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = (
-        e.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-        )
-        .groupBy("v_cents")
-        .agg(
-            F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-            F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-        )
-        .withColumn("c", F.col("c1") + F.col("c2")).localCheckpoint(eager=False)
-    )
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c": "cumn"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum("c").cast("long").alias("nn"),
-        F.shiftright(F.sum("c").cast("long") + 1, 1).alias("m"),
+    Scale shape: one aggregate over ``_two_sample_ecdf``, no
+    per-observation ranking — a tie block occupies ranks (cum-c, cum]
+    with cum = cum1 + cum2, and 2*sum of scores over any prefix has a
+    CLOSED FORM (quadratic in k, split at the midpoint), so each grid
+    point's score mass is O(1) arithmetic on the prefix counts.  The
+    per-point group-1 share is fixed-point quantized (x1e6) before the
+    sum, making the aggregate an exact BIGINT on both engines."""
+    cum = _two_sample_ecdf(spark, sf_dir).selectExpr(
+        "n1",
+        "n2",
+        "c1",
+        "c2",
+        "cum1 + cum2 AS cumn",
+        "n1 + n2 AS nn",
+        "shiftright(n1 + n2 + 1, 1) AS m",
     )
 
     def t2(k):
@@ -6398,10 +6074,8 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
         * _AB_Q
         + 0.5
     ).cast("long")
-    terms = cum.crossJoin(F.broadcast(totals)).agg(
-        F.sum(tq).cast("long").alias("abq")
-    )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    terms = cum.groupBy("n1", "n2").agg(F.sum(tq).cast("long").alias("abq"))
+    return terms.select(
         "n1",
         "n2",
         q4(F.col("abq").cast("double") / F.lit(_AB_Q)).alias("ab_stat"),
@@ -9470,35 +9144,17 @@ _KUIPER_CRIT = "1.747"  # V* critical value at alpha = 0.05
 @register(
     "stat_kuiper_test",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents,
-               sum(c1) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-               sum(c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), d AS (
-        SELECT CAST(max(cum1 * n2 - cum2 * n1) AS BIGINT) AS dplus_num,
+    WITH d AS (
+        SELECT n1, n2,
+               CAST(max(cum1 * n2 - cum2 * n1) AS BIGINT) AS dplus_num,
                CAST(max(cum2 * n1 - cum1 * n2) AS BIGINT) AS dminus_num
-        FROM cum CROSS JOIN totals
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     ), v AS (
         SELECT n1, n2,
                CAST(greatest(dplus_num, 0) AS DOUBLE) / n1 / n2 AS d_plus,
                CAST(greatest(dminus_num, 0) AS DOUBLE) / n1 / n2 AS d_minus,
                sqrt(CAST(n1 AS DOUBLE) * n2 / (n1 + n2)) AS sqrt_ne
-        FROM d CROSS JOIN totals
+        FROM d
     )
     SELECT n1, n2, {sql_q4("d_plus")} AS d_plus,
            {sql_q4("d_minus")} AS d_minus,
@@ -9524,32 +9180,8 @@ def stat_kuiper_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-sided max clamps at 0 (an everywhere-dominated ECDF has
     D+ = 0, the empty-max convention).
 
-    Scale shape: identical to stat_ks_test — one hash aggregate to
-    the bounded cents grid, ONE bucketed prefix pass
-    (operators/prefix.global_ordered), broadcast totals; no
-    unpartitioned window, no row-level sort."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
-    d = cum.crossJoin(F.broadcast(totals)).agg(
+    Scale shape: one aggregate over ``_two_sample_ecdf``."""
+    d = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
         F.max(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1"))
         .cast("long")
         .alias("dplus_num"),
@@ -9571,7 +9203,7 @@ def stat_kuiper_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n1").cast("double") * F.col("n2") / (F.col("n1") + F.col("n2"))
     )
     vstat = (dp + dm) * (sqrt_ne + 0.155 + 0.24 / sqrt_ne)
-    return d.crossJoin(F.broadcast(totals)).select(
+    return d.select(
         "n1",
         "n2",
         q4(dp).alias("d_plus"),
@@ -9590,34 +9222,20 @@ _CUCCONI_CRIT = "2.9957"
 @register(
     "stat_cucconi",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c1 + c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumn
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2,
-               CAST(sum(c1 + c2) AS BIGINT) AS nn
-        FROM grid
+    WITH cum AS (
+        SELECT n1, n2, n1 + n2 AS nn, c1, c2, cum1 + cum2 AS cumn
+        FROM ({_TWO_SAMPLE_ECDF_SQL})
     ), folds AS (
         -- tie blocks take the mid-rank; 2*mid = 2*prev + cnt + 1 is an
         -- integer, so both squared-rank sums fold as exact HUGEINT/decimal
-        SELECT CAST(sum(c2 * (2*(cumn - c1 - c2) + (c1 + c2) + 1)
+        SELECT n1, n2, nn,
+               CAST(sum(c2 * (2*(cumn - c1 - c2) + (c1 + c2) + 1)
                          * (2*(cumn - c1 - c2) + (c1 + c2) + 1)) AS HUGEINT)
                    AS s1_4,
                CAST(sum(c2 * (2*(nn + 1) - (2*(cumn - c1 - c2) + (c1 + c2) + 1))
                          * (2*(nn + 1) - (2*(cumn - c1 - c2) + (c1 + c2) + 1)))
                    AS HUGEINT) AS s2_4
-        FROM cum CROSS JOIN totals
+        FROM cum GROUP BY n1, n2, nn
     ), uv AS (
         SELECT n1, n2, nn,
                (6.0 * (CAST(s1_4 AS DOUBLE) / 4.0)
@@ -9630,7 +9248,7 @@ _CUCCONI_CRIT = "2.9957"
                       * (2*nn + 1) * (8*nn + 11) / 5.0) AS v,
                2.0 * (CAST(nn AS DOUBLE)*nn - 4)
                  / ((2*nn + 1) * (8.0*nn + 11)) - 1.0 AS rho
-        FROM folds CROSS JOIN totals
+        FROM folds
     )
     SELECT n1, n2, {sql_q4("u")} AS u, {sql_q4("v")} AS v,
            {sql_q4("rho")} AS rho,
@@ -9656,31 +9274,10 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is bounded by 4N³, inside 1e38 to N ~ 2.9e12 rows) and the
     closed form divides once per statistic.
 
-    Scale shape: one hash aggregate to the bounded cents grid, ONE
-    bucketed prefix pass for cumulative counts, broadcast totals —
-    the same census-allowlisted ECDF machine as stat_ks_test."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cn = (F.col("c1") + F.col("c2")).alias("cn")
-    cum = global_ordered(
-        grid.select("v_cents", "c1", "c2", cn),
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"cn": "cumn"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum(F.col("c1") + F.col("c2")).cast("long").alias("nn"),
+    Scale shape: one aggregate over ``_two_sample_ecdf`` with
+    cumn = cum1 + cum2 and N = n1 + n2."""
+    cum = _two_sample_ecdf(spark, sf_dir).selectExpr(
+        "n1", "n2", "n1 + n2 AS nn", "c1", "c2", "cum1 + cum2 AS cumn"
     )
     dec = "decimal(38,0)"
     two_m = (
@@ -9689,7 +9286,7 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
         + 1
     ).cast(dec)
     two_m_contra = (2 * (F.col("nn") + 1)).cast(dec) - two_m
-    folds = cum.crossJoin(F.broadcast(totals)).agg(
+    folds = cum.groupBy("n1", "n2", "nn").agg(
         F.sum(F.col("c2").cast(dec) * two_m * two_m).alias("s1_4"),
         F.sum(F.col("c2").cast(dec) * two_m_contra * two_m_contra).alias(
             "s2_4"
@@ -9714,7 +9311,7 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / denom
     rho = 2.0 * (nn * nn - 4) / ((2 * nn + 1) * (8.0 * nn + 11)) - 1.0
     c_stat = (u * u + v * v - 2 * rho * u * v) / (2 * (1 - rho * rho))
-    return folds.crossJoin(F.broadcast(totals)).select(
+    return folds.select(
         "n1",
         "n2",
         q4(u).alias("u"),
@@ -11774,32 +11371,14 @@ _WATSON_CRIT = "0.187"  # asymptotic 5% point of the U^2 distribution
 @register(
     "stat_watson_u2",
     oracle=f"""
-    WITH ev AS (
-        SELECT event_type,
-               CAST(floor(value*100 + 0.5) AS BIGINT) AS v_cents
-        FROM events WHERE event_type IN ('{KS_G1}', '{KS_G2}')
-    ), grid AS (
-        SELECT v_cents,
-               CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1,
-               CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2
-        FROM ev GROUP BY v_cents
-    ), cum AS (
-        SELECT v_cents, c1, c2,
-               sum(c1) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum1,
-               sum(c2) OVER (ORDER BY v_cents
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum2
-        FROM grid
-    ), totals AS (
-        SELECT CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-        FROM grid
-    ), folds AS (
-        SELECT CAST(sum(CAST((c1 + c2) AS HUGEINT)
+    WITH folds AS (
+        SELECT n1, n2,
+               CAST(sum(CAST((c1 + c2) AS HUGEINT)
                    * (cum1*n2 - cum2*n1) * (cum1*n2 - cum2*n1)) AS HUGEINT)
                    AS std2,
                CAST(sum(CAST((c1 + c2) AS HUGEINT)
                    * (cum1*n2 - cum2*n1)) AS HUGEINT) AS std1
-        FROM cum CROSS JOIN totals
+        FROM ({_TWO_SAMPLE_ECDF_SQL}) GROUP BY n1, n2
     )
     SELECT n1, n2,
            {sql_q4("(CAST(std2 AS DOUBLE) - CAST(std1 AS DOUBLE)"
@@ -11811,7 +11390,7 @@ _WATSON_CRIT = "0.187"  # asymptotic 5% point of the U^2 distribution
                / (CAST(n1 AS DOUBLE) * n2
                   * pow(CAST(n1 + n2 AS DOUBLE), 2)) > {_WATSON_CRIT}
                AS rejected
-    FROM folds CROSS JOIN totals
+    FROM folds
     """,
 )
 def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11830,33 +11409,11 @@ def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulated in decimal(38,0)/HUGEINT (D ~ n1·n2 squares past
     int64 fast); one double expression at the end.
 
-    Scale shape: identical to stat_ks_test — one hash aggregate to
-    the cents grid, ONE bucketed prefix pass, broadcast totals."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    )
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
+    Scale shape: one aggregate over ``_two_sample_ecdf``."""
     dec = "decimal(38,0)"
     dnum = (F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")).cast(dec)
     t = (F.col("c1") + F.col("c2")).cast(dec)
-    folds = cum.crossJoin(F.broadcast(totals)).agg(
+    folds = _two_sample_ecdf(spark, sf_dir).groupBy("n1", "n2").agg(
         F.sum(t * dnum * dnum).alias("std2"),
         F.sum(t * dnum).alias("std1"),
     )
@@ -11865,7 +11422,7 @@ def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("std2").cast("double")
         - F.col("std1").cast("double") * F.col("std1").cast("double") / nn
     ) / (F.col("n1").cast("double") * F.col("n2") * nn * nn)
-    return folds.crossJoin(F.broadcast(totals)).select(
+    return folds.select(
         "n1",
         "n2",
         q4(u2).alias("u2_stat"),

@@ -154,25 +154,19 @@ def get_spark(
     app_name: str = "etl-cnc-spark", *, master: str | None = None
 ) -> SparkSession:
     """Create (or reuse) a tuned local SparkSession on ``master``
-    (default ``local[$SPARK_GRAFT_CPUS]``).  A call that launches the
-    driver JVM starts it from the class-data archive (module docstring)."""
-    cpus = _cpus()
+    (default ``local[$SPARK_GRAFT_CPUS]``).  The builder carries only
+    launch-time settings; the runtime confs come from ``tune()``, the
+    one place that sets them.  A call that launches the driver JVM
+    starts it from the class-data archive (module docstring)."""
     archive = _cds_archive()
     builder = (
-        SparkSession.builder.master(master or f"local[{cpus}]")
+        SparkSession.builder.master(master or f"local[{_cpus()}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(8, cpus // 2)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.compression.codec", "snappy")
     )
     if archive is None:
-        return builder.getOrCreate()
+        return tune(builder.getOrCreate())
     dump = not os.path.exists(archive)
     opts = "-XX:+RecordDynamicDumpInfo" if dump else f"-XX:SharedArchiveFile={archive}"
     os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(archive), "conf")
@@ -184,11 +178,12 @@ def get_spark(
         os.environ.pop("SPARK_CONF_DIR", None)
     if dump:
         _cds_dump(spark, archive)
-    return spark
+    return tune(spark)
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable tuning to an externally-created session.
+    """Apply runtime-settable tuning to a session: ``get_spark``'s own,
+    or an externally-created one.
 
     The driver contract hands operators an arbitrary SparkSession
     (``__spark_entry__.py``); these confs are all runtime-settable and

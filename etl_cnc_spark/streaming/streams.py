@@ -25,6 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import events_ts_is_long, table
@@ -70,21 +71,26 @@ def _read_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     )
 
 
+def _drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` as one availableNow run and wait until it has
+    drained its source; a run still going after 600 s is stopped."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(600):
+        q.stop()
+        raise TimeoutError("streaming query did not drain in 600s")
+    return q
+
+
 def _run_to_parquet(df: DataFrame, output_mode: str = "append") -> str:
     """Execute a streaming DataFrame to a parquet sink; returns path."""
     out = tmpdir(prefix="etlcnc_stream_out_")
     ck = tmpdir(prefix="etlcnc_stream_ck_")
-    q = (
+    _drain(
         df.writeStream.outputMode(output_mode)
         .format("parquet")
         .option("path", out)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming query did not drain in 600s")
     return out
 
 
@@ -244,16 +250,11 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         _per_user_totals, _STATE_OUT, _STATE, "update", "NoTimeout"
     )
     name = "etlcnc_stateful_" + uuid.uuid4().hex[:8]
-    q = (
+    _drain(
         res.writeStream.outputMode("update")
         .format("memory")
         .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("stateful streaming query did not drain in 600s")
     return spark.table(name)
 
 
@@ -323,16 +324,11 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "etlcnc_tws_" + uuid.uuid4().hex[:8]
-    q = (
+    _drain(
         res.writeStream.outputMode("update")
         .format("memory")
         .queryName(name)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("TWS streaming query did not drain in 600s")
     return spark.table(name)
 
 
@@ -357,16 +353,11 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(out)
 
-    q = (
+    _drain(
         _read_stream(spark, src)
         .writeStream.foreachBatch(_sink)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("foreachBatch stream did not drain in 600s")
     sunk = spark.read.parquet(out)
     return sunk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -595,7 +586,7 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(nxt, tgt)
         shutil.rmtree(old, ignore_errors=True)
 
-    q = (
+    _drain(
         spark.readStream.schema(
             "event_id LONG, user_id LONG, event_type STRING, "
             "value DOUBLE, ts TIMESTAMP"
@@ -604,12 +595,7 @@ def stream_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
         .writeStream.foreachBatch(_merge)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("upsert stream did not drain in 600s")
     snap = spark.read.parquet(tgt)
     return snap.groupBy("event_type").agg(
         F.count("*").cast("long").alias("n_users"),
@@ -736,17 +722,12 @@ def stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = tmpdir(prefix="etlcnc_latemetrics_out_")
     ck = tmpdir(prefix="etlcnc_latemetrics_ck_")
-    q = (
+    q = _drain(
         deduped.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out)
         .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(600):
-        q.stop()
-        raise TimeoutError("streaming query did not drain in 600s")
     n_input = 0
     n_dropped = 0
     for p in q.recentProgress:
@@ -806,7 +787,7 @@ def stream_incremental_exactly_once(
     out = tmpdir(prefix="etlcnc_incr_out_")
     ck = tmpdir(prefix="etlcnc_incr_ck_")
 
-    def _drain() -> None:
+    def _run() -> None:
         s = (
             spark.readStream.schema(EVENTS_RAW_SCHEMA)
             .parquet(src)
@@ -819,24 +800,19 @@ def stream_incremental_exactly_once(
                 .alias("v_cents"),
             )
         )
-        q = (
+        _drain(
             s.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
             .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("incremental drain did not finish")
 
     # run 1: only h1 visible
     shutil.move(*staged["h1"])
-    _drain()
+    _run()
     # a new file lands; run 2 with the SAME checkpoint picks up ONLY it
     shutil.move(*staged["h2"])
-    _drain()
+    _run()
     return spark.read.parquet(out)
 
 

@@ -1,8 +1,9 @@
 """Build-time Spark jobs, pinned per key.
 
-A flagship build fires no Spark job, nor do sim_auto's and
-events_hmm_viterbi's.  Building a key only constructs a plan: table
-schemas come from parquet footers read on the driver
+A flagship build fires no Spark job, nor do sim_auto's,
+events_hmm_viterbi's and those of the twelve two-sample tests that
+read ``stats._two_sample_ecdf``.  Building a key only constructs a
+plan: table schemas come from parquet footers read on the driver
 (``catalog.footer_schema``) and every strategy choice comes from
 metadata (sim_auto's candidate count is the footer's row count,
 ``catalog.footer_row_count``), so all jobs run at collect.
@@ -27,7 +28,23 @@ from etl_cnc_spark.utils import checkpoint_round
 
 REGISTRY = load_all()
 FLAGSHIP = [k for k, q in REGISTRY.items() if q.bench]
-KEYS = FLAGSHIP + ["sim_auto", "events_hmm_viterbi"]
+TWO_SAMPLE_ECDF = [
+    "stat_ks_test",
+    "stat_mann_whitney",
+    "stat_wasserstein_1d",
+    "stat_cvm_test",
+    "stat_anderson_darling",
+    "stat_qq_table",
+    "stat_energy_distance",
+    "stat_cliffs_delta",
+    "stat_ansari_bradley",
+    "stat_kuiper_test",
+    "stat_cucconi",
+    "stat_watson_u2",
+]
+KEYS = FLAGSHIP + ["sim_auto", "events_hmm_viterbi"] + [
+    k for k in TWO_SAMPLE_ECDF if k not in FLAGSHIP
+]
 # build jobs at sf0.001: one checkpoint_round per loop round (the
 # three min_label_components callers pay one observed edge checkpoint)
 MAX_BUILD_JOBS = {

@@ -3,12 +3,35 @@ these assert algorithm invariants)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_cnc_spark.operators.graph import SCALE, trade_edges
+from etl_cnc_spark.oracle import duckdb_connect
 from etl_cnc_spark.registry import load_all
 
 REGISTRY = load_all()
+
+
+@pytest.mark.parametrize("key", ["graph_reciprocity", "graph_degree_gini"])
+def test_edge_oracle_fits_2gb_at_sf01(key, sf_dir, tmp_path):
+    """The oracle reads the 4-way edge join once, materialized: with
+    `u <> v` pushed into the join instead, DuckDB runs out of memory
+    at sf0.1 under this limit."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip("no sf0.1 fixture beside the test fixture")
+    con = duckdb_connect(sf01)
+    try:
+        con.execute("SET memory_limit = '2GB'")
+        con.execute(f"SET temp_directory = '{tmp_path}'")
+        con.execute("SET max_temp_directory_size = '2GB'")
+        rows = con.execute(REGISTRY[key].oracle).fetchall()
+    finally:
+        con.close()
+    assert len(rows) == 1 and rows[0][0] > 0, rows
 
 
 def test_pagerank_mass_and_ranks(spark, sf_dir):

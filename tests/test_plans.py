@@ -357,19 +357,27 @@ def test_substring_span_dedup_joins_on_digest(spark, sf_dir):
 
 
 def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
-    """stat_ks_test / stat_mann_whitney cumulative ECDF/rank folds run
-    through the bucketed prefix machine (operators/prefix.py): every
-    windowspecdefinition in their plans is partitioned (by _pid or a
-    real key) — no "WindowExec: No Partition Defined" over the
-    data-proportional cents grid survives (VERDICT r5 #4). events_rfm
-    is covered by the same assertion (its ranks share the machine), and
-    so is stat_wasserstein_1d (running counts and lead() in one
-    _pid-bucketed window), which must also never join on a rank."""
+    """The twelve two-sample tests read one ECDF, ``stats.
+    _two_sample_ecdf``: every windowspecdefinition in their plans is
+    partitioned by _pid — no "WindowExec: No Partition Defined" over
+    the data-proportional cents grid survives (VERDICT r5 #4) — the
+    window exchange is shared through AQE reuse (the metadata groups
+    by _pid, n1, n2 so both branches read the same columns), nothing
+    is cached, and no join is on a rank.  events_rfm's ranks run
+    through the prefix machine and carry the same window pin."""
+    import inspect
     import re
 
-    keys = ("stat_ks_test", "stat_mann_whitney", "events_rfm", "stat_wasserstein_1d")
-    for key in keys:
+    ecdf = [
+        k
+        for k, q in REGISTRY.items()
+        if "_two_sample_ecdf" in inspect.unwrap(q.build).__code__.co_names
+    ]
+    assert len(ecdf) == 12, ecdf
+    for key in ecdf + ["events_rfm"]:
         df = REGISTRY[key].build(spark, sf_dir)
+        if key != "events_rfm":
+            df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():
             if "windowspecdefinition" in line:
@@ -378,10 +386,16 @@ def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
                 # partition columns before the ordering spec — every
                 # spec here must carry the _pid partition column.
                 assert "_pid" in line, (key, line)
-        if key == "stat_wasserstein_1d":
-            joins = [line for line in plan.splitlines() if "Join" in line]
-            assert joins, plan
-            assert not [j for j in joins if re.search(r"\brk#", j)], joins
+        if key == "events_rfm":
+            continue
+        # the rows and the metadata share the _pid window exchange; a
+        # metadata groupBy("_pid") alone would prune n1/n2 from it
+        reused = [line for line in plan.splitlines() if "ReusedExchange" in line]
+        assert [r for r in reused if "hashpartitioning(_pid" in r], (key, plan)
+        assert "InMemoryTableScan" not in plan, (key, plan)
+        joins = [line for line in plan.splitlines() if "Join" in line]
+        assert joins, (key, plan)
+        assert not [j for j in joins if re.search(r"\brk#", j)], (key, joins)
 
 
 def test_hybrid_rrf_fuses_without_full_outer_join(spark, sf_dir):
@@ -772,7 +786,7 @@ def test_prefix_machine_plans_read_no_cache(spark, sf_dir):
     callers in front of it: the executed plans hold no
     InMemoryTableScan, and the branches share their exchanges through
     AQE exchange reuse instead."""
-    for key in ("events_rfm", "sort_zorder", "stat_ks_test"):
+    for key in ("events_rfm", "sort_zorder"):
         df = REGISTRY[key].build(spark, sf_dir)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()

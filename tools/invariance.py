@@ -38,7 +38,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from etl_cnc_spark.oracle import compare  # noqa: E402
 from etl_cnc_spark.registry import load_all  # noqa: E402
-from etl_cnc_spark.session import get_spark, tune  # noqa: E402
+from etl_cnc_spark.session import get_spark  # noqa: E402
 
 AXES = {
     "cpus": {
@@ -80,9 +80,7 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     axis = AXES[args.axis]
-    # tune() runs once per session, on the first table read, and would
-    # reset the axis' shuffle partitions and AQE: run it first
-    spark = tune(get_spark(f"invariance-{args.axis}", master=axis["master"]))
+    spark = get_spark(f"invariance-{args.axis}", master=axis["master"])
     for k, v in axis["conf"].items():
         spark.conf.set(k, v)
     spark.sparkContext.setLogLevel("ERROR")
