@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..operators.prefix import global_ordered
 from ..registry import register, reuse
 from ..utils import q4, spread_scan, sql_q4
 from .dedup import _SQL_CENT_STEP, _SQL_DOT, _SQL_NORM2, _dot64, _norm2, capped_centroids
@@ -3416,8 +3417,6 @@ def ml_f1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     fences), ONE descending bucketed-prefix pass over the bounded bin
     grid for the cumulative TP/PP curves, broadcast totals — no
     per-threshold rescan, no global quantile."""
-    from ..operators.prefix import global_ordered
-
     e = table(spark, sf_dir, "embeddings")
     p = _prob_col()
     bins = e.select(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
+from ..operators.prefix import global_ordered, sql_ntile_from_rank
 from ..registry import register, reuse
 from ..utils import pairwise_set_overlap, q4, sql_pairwise_set_overlap, sql_q4
 
@@ -389,8 +390,6 @@ def text_bigram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition top-k + driver merge), THEN rank the surviving 50
     # rows with the range-partitioned parallel rank helper — the
     # full vocab never meets any global ordering stage.
-    from ..operators.prefix import global_ordered
-
     top = counts.orderBy(F.col("n").desc(), "bg").limit(50).localCheckpoint(eager=False)
     return global_ordered(
         top,
@@ -791,8 +790,6 @@ def pipeline_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel prefix sums, operators/prefix.py) — the corpus-wide
     cumulative sum runs parallel at any corpus size; the oracle
     states the same algebra as a plain SQL window."""
-    from ..operators.prefix import global_ordered
-
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("tokens"),
@@ -959,8 +956,6 @@ def pipeline_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-rank machinery (`global_ordered` + exact ntile-from-rank
     arithmetic) — no single-partition window at any corpus size; the
     oracle keeps the standard ntile formulation."""
-    from ..operators.prefix import global_ordered, sql_ntile_from_rank
-
     d = table(spark, sf_dir, "documents")
     words = F.size(F.split("text", " ")).cast("long")
     scored = d.select(
@@ -2229,8 +2224,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the slope and r²; the intercept divides once at the end).
     The only doubles are the three closed-form output expressions,
     built from identical text on both engines."""
-    from ..operators.prefix import global_ordered
-
     d = table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(F.split("text", " ")).alias("w"))
@@ -4739,8 +4732,6 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window), a 1-row totals broadcast, and a
     5-row grid equi-join on rank = least(K, |V|). At 100 TB the
     vocab table is the only shuffled payload."""
-    from ..operators.prefix import global_ordered
-
     d = table(spark, sf_dir, "documents")
     uni = (
         d.select(F.explode(F.split("text", " ")).alias("w"))

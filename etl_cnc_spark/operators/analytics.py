@@ -24,7 +24,7 @@ from ..utils import (
     sql_q4,
     ts_us,
 )
-from .prefix import global_ordered, sql_ntile_from_rank
+from .prefix import calendar_rank, global_ordered, sql_ntile_from_rank
 
 
 @register(
@@ -8008,7 +8008,6 @@ def orders_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     never an unpartitioned window) on its date-pruned scan; the
     migration matrix is a full outer join of two customer-class
     frames plus a <=16-cell aggregate."""
-    from .prefix import global_ordered
 
     def period_classes(pred, alias):
         o = table(spark, sf_dir, "orders").where(pred)
@@ -9403,17 +9402,16 @@ def events_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, a rank+1 self-join ON THE GRID, two 8-row conditional
     tables with grid-sized marginal joins — all metadata-sized."""
     e = table(spark, sf_dir, "events")
-    # calendar-day grid feeding the two median machines AND the coded
-    # series — BOUNDED, lazy checkpoint (this key replayed the events
-    # scan 108x before r13: trans x coded x daily lineage was
-    # multiplicative)
+    # the ranked calendar-day grid feeds the two median machines AND
+    # the coded series
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count_if(F.col("event_type") == "click").cast("long").alias("x"),
         F.count_if(F.col("event_type") == "purchase").cast("long").alias("y"),
-    ).localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
 
     def _median_of(col: str):
-        grid = daily.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        grid = ranked.groupBy(col).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
         wt = Window.partitionBy()
         cum = grid.select(
@@ -9427,24 +9425,14 @@ def events_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     medx = _median_of("x").select(F.col("med").alias("mx"))
     medy = _median_of("y").select(F.col("med").alias("my"))
-    from ..operators.prefix import global_ordered as _go
-
     coded = (
-        _go(
-            daily,
-            [F.col("day")],
-            bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-            rank_col="t",
-        )
-        .crossJoin(F.broadcast(medx))
+        ranked.crossJoin(F.broadcast(medx))
         .crossJoin(F.broadcast(medy))
         .select(
             "t",
             F.when(F.col("x") > F.col("mx"), 1).otherwise(0).alias("xb"),
             F.when(F.col("y") > F.col("my"), 1).otherwise(0).alias("yb"),
         )
-        # day-grid sized, two consumers (a, b) — bounded checkpoint
-        .localCheckpoint(eager=False)
     )
     a = coded.select(
         F.col("t").alias("ta"), F.col("xb").alias("x"), F.col("yb").alias("y")
@@ -9952,32 +9940,24 @@ def events_reliability_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate?'), β ≈ 1 a homogeneous Poisson process, β > 1 deterioration.
     The growth rate α = 1 - β is the standard report.
 
-    Exactness: the cumulative count comes from the calendar-day
-    bucketed prefix; ln(t) and ln(cum) quantize at 1e-9 so the OLS
+    Exactness: the cumulative count comes from ``calendar_rank``'s
+    running sum over the day grid; ln(t) and ln(cum) quantize at 1e-9 so the OLS
     sufficient sums fold exactly (squares in decimal(38,0)/HUGEINT);
     the slope is one closed-form double.
 
-    Scale shape: one filtered hash aggregate to days, one bounded
-    prefix, one fold."""
+    Scale shape: one filtered hash aggregate to days, one
+    ``calendar_rank`` window, one fold."""
     e = table(spark, sf_dir, "events")
     dec = "decimal(38,0)"
     daily = e.where(F.col("event_type") == "error").groupBy(
         F.to_date("ts").alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("errs")).localCheckpoint(eager=False)
-    from ..operators.prefix import global_ordered as _go
-
-    ranked = _go(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        sums={"errs": "cum"},
-        rank_col="t",
-    )
+    ).agg(F.count(F.lit(1)).cast("long").alias("errs"))
+    ranked = calendar_rank(daily, "day", sums=("errs",))
     lg = ranked.select(
         F.floor(F.log(F.col("t").cast("double")) * _DU_Q + 0.5)
         .cast("long")
         .alias("x"),
-        F.floor(F.log(F.col("cum").cast("double")) * _DU_Q + 0.5)
+        F.floor(F.log(F.col("cum_errs").cast("double")) * _DU_Q + 0.5)
         .cast("long")
         .alias("y"),
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import register, reuse
 from ..utils import checkpoint_round, q4, sql_q4
+from .prefix import global_ordered
 
 SCALE = 100_000_000  # 1e8 fixed-point
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85
@@ -151,8 +152,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # rank via range-partitioned parallel prefix rank — no
     # single-partition window even for the final ordering
-    from .prefix import global_ordered
-
     ranked = global_ordered(
         pr,
         [F.col("pr").desc(), F.col("v")],
@@ -1568,8 +1567,6 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("e_cnt", F.lit(0)).cast("long").alias("e_cnt"),
         )
     )
-    from .prefix import global_ordered
-
     suff = global_ordered(
         grid,
         [F.col("val").desc()],
@@ -1702,8 +1699,6 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
     )
-    from .prefix import global_ordered
-
     ranked = global_ordered(
         deg,
         [F.col("d"), F.col("node")],

@@ -1,9 +1,21 @@
-"""Distributed global ordering primitives — rank / running sums
-WITHOUT a single-partition window.
+"""How a frame gets a total-order rank or running sum — the one place
+that chooses the primitive, by the frame's cardinality.
+
+- **Calendar-bounded grids** (one row per hour or day of the event
+  span: at most 24·|days| rows at any data scale) go through
+  ``calendar_rank``: ONE single-partition window, the oracles' own
+  ``row_number() OVER (ORDER BY h)`` shape, over the grid lazily
+  local-checkpointed (SCALE.md "Calendar-series family").  A window
+  over a few thousand metadata rows is one task; the bucketed machine
+  below would spend a min/max aggregate, a bucket shuffle, a totals
+  fold and a broadcast join to rank the same rows.
+- **Data-proportional frames and value-domain grids** (per-user,
+  per-order, per-score rows; cents and quantity grids) go through
+  ``global_ordered``, the bucketed prefix machine described next.
 
 ``Window.orderBy(...)`` with no ``partitionBy`` collapses the whole
 input onto one task ("WindowExec: No Partition Defined") — correct,
-but a scale killer on unbounded inputs.  This module provides the
+but a scale killer on unbounded inputs.  ``global_ordered`` is the
 classic two-phase prefix computation instead:
 
 1. every row gets a DETERMINISTIC ordered bucket id computed from its
@@ -36,13 +48,16 @@ heavy skew raise ``spark.sql.shuffle.partitions`` (the bucket count)
 or pre-transform the bucket key (e.g. a CDF-ish monotone map);
 balance is a performance knob, never a correctness one.
 
-Caching rule: nothing here is materialized, and no caller caches the
-frame it passes in.  A frame whose consumers sit above one shared
-exchange is not cached: the consumers already share that exchange's
-output (AQE reuses it), and a cache between them would hide it from
-exchange reuse and cost a job of its own.  The bucketed input feeds
+Caching rule: ``global_ordered`` materializes nothing, and no caller
+caches the frame it passes in.  A frame whose consumers sit above one
+shared exchange is not cached: the consumers already share that
+exchange's output (AQE reuses it), and a cache between them would hide
+it from exchange reuse and cost a job of its own.  The bucketed input feeds
 two consumers, the per-bucket window and the per-bucket totals; each
 replays only the caller's lineage above its last exchange.
+``calendar_rank`` lazily local-checkpoints the grid it is given (a
+bounded frame, SCALE.md checkpoint rule) and nothing above it, so its
+callers checkpoint nothing before or after it.
 """
 
 from __future__ import annotations
@@ -50,7 +65,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["global_ordered", "sql_ntile_from_rank"]
+__all__ = ["calendar_rank", "global_ordered", "sql_ntile_from_rank"]
 
 _BUCKET = 1024  # bucket-group width for the hierarchical offset fold
 
@@ -127,6 +142,34 @@ def _exclusive_offsets(
             (F.col(f"_w_{c}") + F.col(f"_b_{c}")).alias(f"_off_{c}")
             for c in cols
         ],
+    )
+
+
+def calendar_rank(
+    grid: DataFrame, order_col: str, sums: tuple[str, ...] = ()
+) -> DataFrame:
+    """``grid`` plus a 1-based BIGINT rank ``t`` ordered by
+    ``order_col`` and, for each column ``c`` in ``sums``, an inclusive
+    running BIGINT sum ``cum_<c>``.
+
+    For calendar-bounded grids only: one row per hour or day of the
+    event span, keyed uniquely by ``order_col`` (a ``GROUP BY`` of the
+    truncated timestamp), so the order is total and the frame is at
+    most 24·|days| rows at any data scale.  That bound is what makes
+    the single-partition window here safe; a data-proportional frame
+    or a value-domain grid goes through ``global_ordered``.
+
+    The grid is lazily local-checkpointed (a bounded frame) and the
+    window runs above it unmaterialized: every consumer of the ranked
+    frame (moment folds, both sides of a lag self-join) sits above the
+    window's one single-partition exchange, which AQE reuses.  Callers
+    checkpoint nothing before or after this call."""
+    w = Window.orderBy(order_col)
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return grid.localCheckpoint(eager=False).select(
+        "*",
+        F.row_number().over(w).cast("long").alias("t"),
+        *[F.sum(c).over(w_run).cast("long").alias(f"cum_{c}") for c in sums],
     )
 
 

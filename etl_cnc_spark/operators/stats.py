@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..operators.prefix import global_ordered
+from ..operators.prefix import calendar_rank, global_ordered
 from ..registry import register, reuse
 from ..utils import cents, q4, sql_q4
 
@@ -3030,10 +3030,10 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile-mapping calibration is built from, and the quantile
     companion to the KS/CvM/AD gap statistics.
 
-    Scale shape: ``_two_sample_ecdf`` crossed with a 9-row broadcast
-    decile frame — never a per-group sort of raw rows and never an
-    approximate percentile: at any SF the post-grid work is |grid|×9."""
-    ps = spark.range(1, 10).select(F.col("id").cast("long").alias("dec"))
+    Scale shape: each ``_two_sample_ecdf`` row fans out to the 9
+    deciles in place (an explode, no joined decile frame) — never a
+    per-group sort of raw rows and never an approximate percentile: at
+    any SF the post-grid work is |grid|×9."""
     q1 = F.min(
         F.when(10 * F.col("cum1") >= F.col("dec") * F.col("n1"), F.col("v_cents"))
     ).cast("long")
@@ -3042,8 +3042,8 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return (
         _two_sample_ecdf(spark, sf_dir)
-        .crossJoin(F.broadcast(ps))
-        .groupBy("dec")
+        .select("*", F.explode(F.sequence(F.lit(1), F.lit(9))).alias("dec"))
+        .groupBy(F.col("dec").cast("long").alias("dec"))
         .agg(
             q1.alias("q1_cents"),
             q2.alias("q2_cents"),
@@ -4388,17 +4388,14 @@ def stat_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; each chunk's R/S and both log coordinates are
     fixed-point quantized to 1e-9 before any cross-chunk sum, so no
     float addition ever depends on row order. Scale shape: the hourly
-    grid is calendar-bounded metadata (~hundreds of rows;
-    census-allowlisted row_number); everything below it is
-    chunk-partitioned windows and hash aggregates."""
+    grid is calendar-bounded metadata (~hundreds of rows, ranked by
+    ``calendar_rank``); everything below it is chunk-partitioned
+    windows and hash aggregates."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.sum(cents(F.col("value"))).cast("long").alias("v"))
-    # calendar-bounded hour grid (census-allowlisted)
-    idx = hourly.select(
-        "v", (F.row_number().over(Window.orderBy("hr")) - 1).alias("i")
-    )
+    idx = calendar_rank(hourly, "hr").select("v", (F.col("t") - 1).alias("i"))
     sizes = spark.createDataFrame(
         [(n,) for n in HURST_SIZES], "n int"
     )
@@ -4580,16 +4577,13 @@ def stat_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Durbin–Levinson line is ONE fixed-order double expression
     written identically in both engines. Scale shape: one
     data-proportional aggregate to the calendar-bounded hourly grid
-    (census-allowlisted row_number), then |hours|×3 join rows and a
+    (ranked by ``calendar_rank``), then |hours|×3 join rows and a
     1-row recursion."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y"))
-    # calendar-bounded hour grid (census-allowlisted)
-    idx = hourly.select(
-        "y", F.row_number().over(Window.orderBy("hr")).alias("t")
-    ).localCheckpoint(eager=False)
+    idx = calendar_rank(hourly, "hr")
     stats = idx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("s1"),
@@ -5826,16 +5820,13 @@ def stat_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the exact integer fold — no order-dependent float sum;
     both engines evaluate sin/cos on identical doubles. Scale
     shape: one fact rollup to the calendar-bounded hourly grid
-    (census-allowlisted row_number), a ×4 period fan-out of grid
+    (ranked by ``calendar_rank``), a ×4 period fan-out of grid
     rows, one hash aggregate."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("hr")
     ).agg(F.sum(cents(F.col("value"))).cast("long").alias("y"))
-    # calendar-bounded hour grid (census-allowlisted)
-    idx = hourly.select(
-        "y", (F.row_number().over(Window.orderBy("hr")) - 1).alias("t")
-    ).localCheckpoint(eager=False)
+    idx = calendar_rank(hourly, "hr").select("y", (F.col("t") - 1).alias("t"))
     m = idx.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("s1"),
@@ -6670,21 +6661,15 @@ def stat_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in the final ratio.
 
     Scale shape: events hash-aggregate to the calendar-bounded hourly
-    grid; ONE prefix pass gives rank and cumulative sum; the lag
-    autocovariances are a 7-offset equi-join on the grid rank — all
-    grid-sized."""
+    grid; ONE ``calendar_rank`` window gives rank and cumulative sum;
+    the lag autocovariances are a 7-offset equi-join on the grid rank
+    — all grid-sized."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        sums={"y": "cum_y"},
-        rank_col="t",
-    ).select("y", "t", "cum_y").localCheckpoint(eager=False)
-    tot = hourly.agg(
+    )
+    ranked = calendar_rank(hourly, "h", sums=("y",))
+    tot = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("sy"),
     )
@@ -6784,13 +6769,8 @@ def stat_adf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(hourly, "h")
     a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"))
     b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
     pairs = a.join(b, F.col("tb") == F.col("ta") - 1).select(
@@ -9768,19 +9748,12 @@ def stat_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on the rank index (grid-sized, never the fact table),
     one 1-row moments frame broadcast to all lags."""
     e = table(spark, sf_dir, "events")
-    # calendar-day grid: bounded, consumed 3x inside global_ordered —
-    # lazy checkpoint (this key replayed the events scan 12x pre-r13)
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count_if(F.col("event_type") == KS_G1).cast("long").alias("x"),
         F.count_if(F.col("event_type") == KS_G2).cast("long").alias("y"),
-    ).localCheckpoint(eager=False)
+    )
     # ranked grid feeds the moments row and BOTH lag-join sides
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("x", "y", "t").localCheckpoint(eager=False)
+    ranked = calendar_rank(daily, "day")
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sx"),
@@ -10001,19 +9974,13 @@ def stat_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fact table collapses to the calendar-bounded
     day grid in one hash aggregate; the lag structure is a banded
     self-join ON THE GRID (|days|·(L+1) pairs — metadata-sized at
-    any SF); the window in global_ordered is the allowlisted
-    day-grid rank."""
+    any SF); the one window is ``calendar_rank``'s day-grid rank."""
     o = table(spark, sf_dir, "orders")
     dec = "decimal(38,0)"
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents(F.col("o_totalprice"))).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("nd"),
         F.sum("t").cast("long").alias("st"),
@@ -10187,19 +10154,14 @@ def stat_white_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no second residual pass.
 
     Scale shape: one hash aggregate to the day grid, a broadcast
-    1-row fit frame, one grid-sized fold; the only window is the
-    allowlisted day-grid rank."""
+    1-row fit frame, one grid-sized fold; the only window is
+    ``calendar_rank``'s day-grid rank."""
     o = table(spark, sf_dir, "orders")
     dec = "decimal(38,0)"
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("nd"),
         F.sum("t").cast("long").alias("st"),
@@ -10407,13 +10369,8 @@ def stat_cointegration_eg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("u"),
         "n",
         "b",
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        resid,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("u", "n", "b", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(resid, "day")
     a_ = ranked.select(
         F.col("u").alias("ua"),
         F.col("t").alias("ta"),
@@ -11280,19 +11237,15 @@ def stat_siegel_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals y - slope·t.
 
     Scale shape: the fact table collapses to the calendar-bounded day
-    grid first, so the pair join is |days|² (metadata-sized); the
-    per-i medians run as PARTITIONED windows over i, and the only
-    global windows are over |days| rows (census-allowlisted)."""
+    grid first (ranked by ``calendar_rank``), so the pair join is
+    |days|² (metadata-sized); the per-i medians run as PARTITIONED
+    windows over i, and the only global windows are over |days| rows
+    (census-allowlisted)."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
     a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ti"))
     b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tj"))
     slopes = a.join(b, F.col("tj") != F.col("ti")).select(
@@ -11500,13 +11453,8 @@ def stat_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = "decimal(38,0)"
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(hourly, "h")
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("y").cast("long").alias("sy"),
@@ -11615,13 +11563,8 @@ def stat_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
     ntot = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = ranked.crossJoin(F.broadcast(ntot)).select(
         F.col("y").alias("ya"), F.col("t").alias("ta"), "n"
@@ -12270,13 +12213,8 @@ def stat_runs_up_down(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    ranked = calendar_rank(daily, "day")
     a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"))
     b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
     diffs = a.join(b, F.col("tb") == F.col("ta") + 1).select(
@@ -12699,26 +12637,23 @@ def stat_pettitt(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWICE the midrank — so every U_t is an exact BIGINT (sgn ties
     contribute zero exactly), and only the final p-value touches
     doubles. Scale shape: one hash aggregate to the calendar-bounded
-    daily grid; every window after that is metadata-sized."""
+    daily grid; ``calendar_rank``'s rank, the midrank windows and the
+    running sum after that are metadata-sized."""
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("x")
-    ).localCheckpoint(eager=False)
-    n_ = daily.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    w_day = Window.orderBy("day")
-    w_rank = Window.orderBy("x")
-    ranked = daily.select(
-        "day",
-        "x",
-        F.row_number().over(w_day).cast("long").alias("t"),
+    )
+    ranked = calendar_rank(daily, "day").select(
+        "t",
         (
-            2 * F.rank().over(w_rank)
+            2 * F.rank().over(Window.orderBy("x"))
             + F.count(F.lit(1)).over(Window.partitionBy("x"))
             - 1
         )
         .cast("long")
         .alias("r2"),
     )
+    n_ = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     w_cum = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

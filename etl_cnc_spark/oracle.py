@@ -89,9 +89,12 @@ class CompareResult:
     mismatches: list[str] = field(default_factory=list)
 
 
-def compare(qdef: QueryDef, spark, sf_dir: str) -> CompareResult:
-    """Run one registered query against its oracle; exact value compare."""
-    sdf = qdef.build(spark, sf_dir)
+def compare(qdef: QueryDef, spark, sf_dir: str, sdf=None) -> CompareResult:
+    """Run one registered query against its oracle; exact value compare.
+    ``sdf``: the query already built from ``qdef`` (default: build it
+    here)."""
+    if sdf is None:
+        sdf = qdef.build(spark, sf_dir)
     spark_pdf = sdf.toPandas()
     if qdef.check == "rows" or qdef.oracle is None:
         return CompareResult(

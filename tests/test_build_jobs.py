@@ -19,8 +19,6 @@ Each key is built under its own job group, and the status tracker
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import functions as F
 
 from etl_cnc_spark.registry import load_all, release_caches
@@ -56,63 +54,37 @@ MAX_BUILD_JOBS = {
 }
 
 
-def _wait_for_listener(spark, group: str) -> None:
-    """The tracker is fed by the listener bus, in order: once a control
-    job run under ``group`` is visible, every earlier job is too."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "control")
-    spark.range(1).collect()
-    deadline = time.time() + 60
-    while not sc.statusTracker().getJobIdsForGroup(group):
-        assert time.time() < deadline, "control job never reached the tracker"
-        time.sleep(0.1)
-
-
-def _build_jobs(spark, sf_dir, keys, tag: str) -> dict[str, list[int]]:
-    """Job ids each key's build fired, one job group per key."""
-    sc = spark.sparkContext
+def _build_jobs(jobs_in, spark, sf_dir, keys, tag: str) -> dict[str, int]:
+    """Jobs each key's build fired, one job group per key."""
+    fired = {}
     try:
         for key in keys:
             # resolve every table afresh, so a schema-inference job
             # cannot hide behind a handle an earlier test memoized
             spark.__dict__.pop("_etlcnc_tables", None)
-            sc.setJobGroup(f"{tag}:{key}", key)
-            REGISTRY[key].build(spark, sf_dir)
-        _wait_for_listener(spark, f"{tag}:control")
+            _, fired[key] = jobs_in(
+                f"{tag}:{key}", lambda: REGISTRY[key].build(spark, sf_dir)
+            )
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
         release_caches(spark)
-    tracker = sc.statusTracker()
-    return {k: list(tracker.getJobIdsForGroup(f"{tag}:{k}")) for k in keys}
+    return fired
 
 
-def test_flagship_builds_fire_no_job(spark, sf_dir):
+def test_flagship_builds_fire_no_job(spark, sf_dir, jobs_in):
     assert len(FLAGSHIP) == 15, FLAGSHIP
-    fired = _build_jobs(spark, sf_dir, KEYS, "build-jobs-pin")
+    fired = _build_jobs(jobs_in, spark, sf_dir, KEYS, "build-jobs-pin")
     assert not {k: v for k, v in fired.items() if v}, fired
 
 
-def test_iterative_build_jobs_bounded(spark, sf_dir):
-    fired = _build_jobs(spark, sf_dir, list(MAX_BUILD_JOBS), "build-jobs-bound")
-    over = {
-        k: len(v) for k, v in fired.items() if len(v) > MAX_BUILD_JOBS[k]
-    }
+def test_iterative_build_jobs_bounded(spark, sf_dir, jobs_in):
+    fired = _build_jobs(
+        jobs_in, spark, sf_dir, list(MAX_BUILD_JOBS), "build-jobs-bound"
+    )
+    over = {k: v for k, v in fired.items() if v > MAX_BUILD_JOBS[k]}
     assert not over, (over, MAX_BUILD_JOBS)
 
 
-def _jobs_in(spark, group: str, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    _wait_for_listener(spark, group + ":control")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_checkpoint_round_observes_in_the_checkpoint_job(spark):
+def test_checkpoint_round_observes_in_the_checkpoint_job(spark, jobs_in):
     """A local round (0) and a reliable round (2): the observed metrics
     equal count()/sum() of the returned frame, the round fires no job
     beyond a bare checkpoint's own, and the reliable round sets a
@@ -130,8 +102,7 @@ def test_checkpoint_round_observes_in_the_checkpoint_job(spark):
         for rnd, bare in ((0, "localCheckpoint"), (2, "checkpoint")):
             # no checkpoint dir: the reliable round must set its own
             getattr(jsc, "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
-            (out, m), jobs = _jobs_in(
-                spark,
+            (out, m), jobs = jobs_in(
                 f"ckpt-round:{rnd}",
                 lambda: checkpoint_round(
                     frame(rnd), rnd, n=F.count(F.lit(1)), total=F.sum("s")
@@ -139,8 +110,7 @@ def test_checkpoint_round_observes_in_the_checkpoint_job(spark):
             )
             if rnd == 2:
                 assert sc.getCheckpointDir() is not None
-            _, bare_jobs = _jobs_in(
-                spark,
+            _, bare_jobs = jobs_in(
                 f"ckpt-bare:{rnd}",
                 lambda: getattr(frame(rnd + 10), bare)(eager=True),
             )

@@ -4,6 +4,9 @@ comparison — stricter than the driver's hash)."""
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from etl_cnc_spark.oracle import compare
@@ -15,12 +18,31 @@ REGISTRY = load_all()
 # subset; everything else runs here.
 ALL_KEYS = sorted(REGISTRY)
 
+# Build-job ratchet: the Spark jobs each key's build fires at sf0.001
+# (lazy localCheckpoints over exchanges, iterative loop rounds, the
+# streaming and sink keys' writes).  A key absent from the budget fires
+# none.  Budgets may only go down: lower an entry (or drop it at 0)
+# when a change lowers the key's count, never raise one.
+BUILD_JOB_BUDGET: dict[str, int] = json.loads(
+    (Path(__file__).with_name("build_job_budget.json")).read_text()
+)
+BUDGET_SF = "sf0.001"
+
 
 @pytest.mark.parametrize("key", ALL_KEYS)
-def test_query_matches_oracle(key, spark, sf_dir):
-    res = compare(REGISTRY[key], spark, sf_dir)
+def test_query_matches_oracle(key, spark, sf_dir, jobs_in):
+    sdf, build_jobs = jobs_in(
+        f"parity-build:{key}", lambda: REGISTRY[key].build(spark, sf_dir)
+    )
+    res = compare(REGISTRY[key], spark, sf_dir, sdf)
     assert res.ok, f"{key}: {res.detail}\n" + "\n".join(res.mismatches)
     assert res.spark_rows > 0, f"{key}: produced no rows"
+    if Path(sf_dir).name == BUDGET_SF:
+        budget = BUILD_JOB_BUDGET.get(key, 0)
+        assert build_jobs <= budget, (
+            f"{key}: its build fired {build_jobs} Spark jobs, over its "
+            f"budget of {budget} (tests/build_job_budget.json)"
+        )
 
 
 def test_every_query_has_check_declared():

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
+
+import pytest
 
 from etl_cnc_spark.registry import load_all
 
@@ -562,6 +565,96 @@ def test_shuffle_hash_hint_is_honored(spark, sf_dir):
     assert "ShuffledHashJoin" in plan, plan
 
 
+# the calendar-series family: an hourly or daily grid ranked by
+# prefix.calendar_rank (column of the grid's time key per key)
+CALENDAR_SERIES = {
+    "stat_kpss": "h",
+    "stat_adf": "h",
+    "stat_yule_walker_ar2": "h",
+    "stat_hurst_rs": "hr",
+    "stat_pacf": "hr",
+    "stat_periodogram": "hr",
+    "stat_ccf": "day",
+    "stat_newey_west": "day",
+    "stat_white_test": "day",
+    "stat_cointegration_eg": "day",
+    "stat_siegel_slopes": "day",
+    "stat_cox_stuart": "day",
+    "stat_runs_up_down": "day",
+    "stat_pettitt": "day",
+    "events_transfer_entropy": "day",
+    "events_reliability_growth": "day",
+}
+
+
+def _rank_windows(final_plan: str) -> list[tuple[str, str]]:
+    """(window spec, first exchange below) of every ``row_number()``
+    window in an executed plan's tree text; expression ids are dropped
+    from the spec, so the same window over a self-join's two sides
+    reads as one."""
+    lines = final_plan.splitlines()
+    found = []
+    for i, line in enumerate(lines):
+        spec = re.search(r"row_number\(\) (windowspecdefinition\(.*?\)\))", line)
+        if "Window [" not in line or not spec:
+            continue
+        depth = line.index("Window [")
+        below = next(
+            b for b in lines[i + 1:] if "Exchange" in b or b.find("+- ") < depth
+        )
+        found.append((re.sub(r"#\d+L?", "", spec.group(1)), below.strip()))
+    return found
+
+
+@pytest.mark.parametrize("key", sorted(CALENDAR_SERIES))
+def test_calendar_series_ranked_by_one_window(key, spark, sf_dir, monkeypatch):
+    """A calendar grid (≤24·|days| rows) is ranked by ONE
+    single-partition window (prefix.calendar_rank), never the bucketed
+    prefix machine.  Read over the executed plans of the key (built and
+    collected) and of every frame it local-checkpoints on the way, as a
+    lazy checkpoint hides the plan below it: no ``_pid`` column, and
+    every ``row_number()`` window ordered by the grid's time column is
+    the same unpartitioned rank over a single-partition exchange (one
+    copy per consumer of the ranked grid)."""
+    plans = []
+    frame = type(spark.range(1))
+    checkpoint = frame.localCheckpoint
+
+    def recorded(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame, "localCheckpoint", recorded)
+    df = REGISTRY[key].build(spark, sf_dir)
+    df.collect()
+    plans.append(df._jdf.queryExecution().executedPlan().toString())
+    finals = [p.split("== Initial Plan ==")[0] for p in plans]
+    assert not [f for f in finals if "_pid" in f], finals
+    col = CALENDAR_SERIES[key]
+    windows = [
+        (spec, exchange)
+        for f in finals
+        for spec, exchange in _rank_windows(f)
+        if re.search(rf"\b{col} ASC", spec)
+    ]
+    specs = {spec for spec, _ in windows}
+    assert specs == {
+        f"windowspecdefinition({col} ASC NULLS FIRST, specifiedwindowframe"
+        "(RowFrame, unboundedpreceding$(), currentrow$())"
+    }, (specs, finals)
+    for _, exchange in windows:
+        assert "Exchange SinglePartition" in exchange, (exchange, finals)
+
+
+def test_qq_table_broadcasts_no_range(spark, sf_dir):
+    """stat_qq_table fans each ECDF row out to its 9 deciles in place
+    (explode), like the other two-sample keys: no broadcast ``Range``
+    frame is crossed with the ECDF."""
+    plan = plan_of("stat_qq_table", spark, sf_dir)
+    assert node_count(plan, "Range") == 0, plan
+
+
 def test_unpartitioned_window_census():
     """Repo-wide policy (VERDICT r6 #5): every ``Window.orderBy(...)``
     WITHOUT a partitionBy is enumerated here with a boundedness
@@ -589,6 +682,9 @@ def test_unpartitioned_window_census():
             "vec list after .limit(LIST_N); fusion unions two bounded "
             "lists",
         # calendar-bounded daily series (~thousands of rows at any SF)
+        ("operators/prefix.py", "calendar_rank"):
+            "the calendar-series rank: one row per hour or day of the "
+            "event span (≤24·|days| rows at any SF)",
         ("operators/stats.py", "stat_runs_test"):
             "one row per day — calendar-bounded",
         ("operators/stats.py", "stat_page_hinkley"):
@@ -651,11 +747,6 @@ def test_unpartitioned_window_census():
         ("operators/analytics.py", "events_kaplan_meier"):
             "cumulative folds over the lifetime-DAYS grid — "
             "calendar-bounded (one row per distinct lifespan day)",
-        ("operators/stats.py", "stat_hurst_rs"):
-            "row_number over the hourly series grid — calendar-bounded "
-            "(~720 rows per 30-day month at any SF)",
-        ("operators/stats.py", "stat_pacf"):
-            "row_number over the hourly series grid — calendar-bounded",
         ("operators/stats.py", "stat_wilcoxon_signed"):
             "cumulative rank fold over the |d| grid of calendar days "
             "(≤|days| rows)",
@@ -685,8 +776,6 @@ def test_unpartitioned_window_census():
         ("llm/text.py", "pipeline_interleave_roundrobin"):
             "source-index rank over the |sources| dimension table "
             "(~20 rows)",
-        ("operators/stats.py", "stat_periodogram"):
-            "row_number over the hourly series grid — calendar-bounded",
         ("operators/analytics.py", "_median_of"):
             "median prefix over the distinct daily-count grid — "
             "calendar-bounded (≤|days| rows; transfer-entropy helper)",
