@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import REGISTRY, register, reuse
-from ..utils import checkpoint_round, q4, sql_q4
+from ..utils import checkpoint_round, q4, spread_scan, sql_q4
 
 HEX_HIGH = ["8", "9", "a", "b", "c", "d", "e", "f"]
 
@@ -190,6 +190,7 @@ _SQL_DOT = (
 )
 
 
+N_QUERIES = 50  # query block of the exact scan: the first 50 vectors
 DEDUP_CENT_MOD = 64  # baseline centroid stride (1 centroid / 64 vectors)
 CENT_BUDGET = 4096  # hard cap on centroid COUNT — C = min(N/64, 4096)
 DEDUP_NPROBE = 4  # multi-probe width for the blocked candidate join
@@ -239,6 +240,56 @@ def capped_centroids(e: DataFrame) -> DataFrame:
         # per consumer (sim_ann_ivfpq re-scanned embeddings 11x
         # before r13)
         .localCheckpoint(eager=False)
+    )
+
+
+def query_pairs(e: DataFrame, sf_dir: str, nq: int = N_QUERIES) -> DataFrame:
+    """Every (query, candidate) pair of the exact cosine scan, scored
+    once: the query block ``vec_id < nq`` of ``e`` is broadcast against
+    all of ``e``, joined on ``qid != cid``.  Columns ``qid, cid,
+    qlabel, clabel, qn2, cn2, dot``; callers form
+    ``cos = dot / sqrt(qn2 * cn2)``, bitwise the oracles' fold.
+
+    Each side's squared norm is folded once per row before the join
+    (N + Q folds, not 2·N·Q) and the dot once per pair.  The candidate
+    side goes through ``spread_scan``: the Q·N·d fold is compute-dense
+    but the embeddings file is byte-small, so its scan plans one split
+    and would run the whole fold on one task; at production scale the
+    file plans enough splits and the spread is a no-op."""
+    q = e.where(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("qlabel"),
+        F.col("embedding").alias("qe"),
+        _norm2(F.col("embedding")).alias("qn2"),
+    )
+    c = spread_scan(e, sf_dir, "embeddings", "vec_id").select(
+        F.col("vec_id").alias("cid"),
+        F.col("label").alias("clabel"),
+        F.col("embedding").alias("ce"),
+        _norm2(F.col("embedding")).alias("cn2"),
+    )
+    return F.broadcast(q).join(c, F.col("qid") != F.col("cid")).select(
+        "qid", "cid", "qlabel", "clabel", "qn2", "cn2",
+        _dot64(F.col("qe"), F.col("ce")).alias("dot"),
+    )
+
+
+def cell_ranks(e: DataFrame) -> DataFrame:
+    """Nearest-centroid rank of every vector of ``e`` over the capped
+    centroid set: ``e``'s columns plus ``cent_id`` and ``cell_rank``
+    (1 = the vector's IVF cell), ordered by squared L2
+    ``n2 + cn2 - 2·dot`` with ``cent_id`` as tie-break — the rule
+    every ``ranked_cells`` oracle CTE spells out.  The centroids are a
+    bounded broadcast, so the pass is map-side N×C folds plus one
+    window keyed on ``vec_id``.  The frame is data-scaled (N×C rows):
+    a caller that reads it twice trims it to ids and ``reuse()``s it."""
+    d2 = F.col("n2") + F.col("cn2") - 2 * _dot64(F.col("embedding"), F.col("ce"))
+    w = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
+    return (
+        e.withColumn("n2", _norm2(F.col("embedding")))
+        .crossJoin(F.broadcast(capped_centroids(e)))
+        .withColumn("cell_rank", F.row_number().over(w))
+        .select(*e.columns, "cent_id", "cell_rank")
     )
 
 
@@ -312,20 +363,9 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime a real dedup threshold lives in; missed borderline pairs
     are the documented cost of de-quadratic candidate generation."""
     e = table(spark, sf_dir, "embeddings")
-    vec = e.select("vec_id", "embedding", _norm2(F.col("embedding")).alias("n2"))
-    cent = capped_centroids(e)
-
-    d2 = F.col("n2") + F.col("cn2") - 2 * _dot64(F.col("embedding"), F.col("ce"))
-    wc = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
     # N x C assignment pass consumed twice (assign + probes) — trim
-    # to ids and persist() per the SCALE.md r13 rule (the similarity
-    # module's _ivf_ranked_cells pattern; kept inline here to avoid a
-    # circular import)
-    ranked_cells = reuse(
-        vec.crossJoin(F.broadcast(cent))
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .select("vec_id", "cent_id", "cell_rank")
-    )
+    # to ids and persist() per the SCALE.md r13 rule
+    ranked_cells = reuse(cell_ranks(e).select("vec_id", "cent_id", "cell_rank"))
     assign = ranked_cells.where(F.col("cell_rank") == 1).select(
         F.col("vec_id").alias("aid"), F.col("cent_id").alias("cell")
     )

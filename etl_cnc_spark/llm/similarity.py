@@ -20,9 +20,18 @@ from ..catalog import table
 from ..operators.prefix import global_ordered
 from ..registry import register, reuse
 from ..utils import q4, spread_scan, sql_q4
-from .dedup import _SQL_CENT_STEP, _SQL_DOT, _SQL_NORM2, _dot64, _norm2, capped_centroids
+from .dedup import (
+    N_QUERIES,
+    _SQL_CENT_STEP,
+    _SQL_DOT,
+    _SQL_NORM2,
+    _dot64,
+    _norm2,
+    capped_centroids,
+    cell_ranks,
+    query_pairs,
+)
 
-N_QUERIES = 50
 TOP_K = 5
 
 
@@ -54,30 +63,11 @@ def sim_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries are always the small side); dot products are JVM-side
     higher-order-function folds — no Python, no UDF. Ranking uses the
     raw double cosine (bitwise identical to the oracle's fold) with
-    cid as tie-break.
-
-    r15: the candidate side goes through ``spread_scan`` — the Q·N·d
-    fold is compute-dense but the embeddings file is byte-small, so
-    the scan planned ONE split and the whole fold ran on one task
-    (704 ms single-task stage at sf0.1, 31 cores idle).  The helper
-    repartitions only while the file would plan fewer splits than the
-    shuffle parallelism, so at production scale it is a no-op."""
-    e = table(spark, sf_dir, "embeddings")
-    # Pre-compute each side's squared norm BEFORE the join: one fold per
-    # row (N+Q folds) instead of two folds per pair (2·N·Q) — the values
-    # are bitwise identical, so oracle hashing is unaffected.
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = spread_scan(e, sf_dir, "embeddings", "vec_id").select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
+    cid as tie-break.  The scored pairs come from ``query_pairs``,
+    whose candidate side is spread over the shuffle parallelism (one
+    fold task at sf0.1 before: a 704 ms single-task stage)."""
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "cid")
     return (
         pairs.select("qid", "cid", cos.alias("cos"))
@@ -87,28 +77,17 @@ def sim_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CENT_MOD = 64  # baseline centroid stride; COUNT capped by capped_centroids()
 NPROBE = 2
 
 
 def _ivf_ranked_cells(e: "DataFrame") -> "DataFrame":
-    """IVF assignment pass, shared by every IVF key: rank all
-    centroids per vector by squared L2 and keep (vec_id, cent_id,
-    cell_rank) only.  The frame is DATA-SCALED (N x C rows) and every
-    caller consumes it TWICE (cell assignment + query probes), so it
-    is persist()ed per the SCALE.md r13 rule — the O(N*C) dot-product
+    """``cell_ranks`` trimmed to (vec_id, cent_id, cell_rank), as every
+    IVF key reads it: TWICE (cell assignment + query probes), so it is
+    persist()ed per the SCALE.md r13 rule — the O(N*C) dot-product
     pass (the dominant ANN cost) runs once, lineage survives, and an
     executor loss recomputes instead of failing the job.  Trimming to
     ids BEFORE the persist keeps the cache free of embedding arrays."""
-    vec = e.select("vec_id", "embedding", _norm2(F.col("embedding")).alias("n2"))
-    cent = capped_centroids(e)
-    d2 = F.col("n2") + F.col("cn2") - 2 * _dot64(F.col("embedding"), F.col("ce"))
-    wc = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
-    return reuse(
-        vec.crossJoin(F.broadcast(cent))
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .select("vec_id", "cent_id", "cell_rank")
-    )
+    return reuse(cell_ranks(e).select("vec_id", "cent_id", "cell_rank"))
 
 
 @register(
@@ -462,30 +441,18 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius (range) similarity search — ALL neighbors with cosine
     ≥ τ, the other half of the similarity API surface from top-k:
     result size is data-dependent (0 or 500 matches), which is what
-    dedup thresholds and recall-oriented retrieval want. Same
-    broadcast-query / fold-dot machinery as `sim_topk_exact`, minus
-    the ranking window — cheaper when τ is selective because nothing
-    needs sorting. The LSH bucket path (`sim_ann_lsh`) serves the
+    dedup thresholds and recall-oriented retrieval want. The scored
+    pairs of ``query_pairs``, minus the ranking window — cheaper when
+    τ is selective because nothing needs sorting (the filter lands in
+    the join condition, so only the survivors' dot is folded twice).
+    The LSH bucket path (`sim_ann_lsh`) serves the
     same query at scale with per-bucket post-filtering."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
-        F.col("qn2") * F.col("cn2")
-    )
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     return (
-        F.broadcast(q)
-        .join(c, F.col("qid") != F.col("cid"))
-        .where(cos >= SIM_TAU)
-        .select("qid", "cid", q4(cos).alias("cosine"))
+        pairs.select("qid", "cid", cos.alias("cos"))
+        .where(F.col("cos") >= SIM_TAU)
+        .select("qid", "cid", q4(F.col("cos")).alias("cosine"))
     )
 
 
@@ -1145,36 +1112,17 @@ def sim_topk_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     MMR re-ranking (results can't all come from one tight cluster,
     which plain top-k over a corpus full of near-dups produces).
 
-    Scale shape: exact scoring is the same broadcast query-block ×
-    corpus pass as ``sim_topk_exact``; the diversity cap is two
-    window ranks (per (query, cell), then per query over ≤C
-    cell-bests) — both bounded, adding no data-sized shuffle beyond
-    the (broadcast) cell-assignment join."""
+    Scale shape: exact scoring is ``query_pairs``' broadcast
+    query-block × corpus pass, and each candidate's cell is its
+    ``cell_ranks`` rank 1; the diversity cap is two window ranks (per
+    (query, cell), then per query over ≤C cell-bests) — both bounded,
+    adding no data-sized shuffle beyond the cell-assignment join."""
     e = table(spark, sf_dir, "embeddings")
-    vec = e.select("vec_id", "embedding", _norm2(F.col("embedding")).alias("n2"))
-    cent = capped_centroids(e)
-    d2 = F.col("n2") + F.col("cn2") - 2 * _dot64(F.col("embedding"), F.col("ce"))
-    wc = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
-    assign = (
-        vec.crossJoin(F.broadcast(cent))
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .where(F.col("cell_rank") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"))
+    assign = cell_ranks(e).where(F.col("cell_rank") == 1).select(
+        F.col("vec_id").alias("cid"), F.col("cent_id").alias("cell")
     )
-    q = e.where(F.col("vec_id") < N_DIVERSE_Q).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce2"),
-        _norm2(F.col("embedding")).alias("cn2b"),
-    ).join(assign.withColumnRenamed("vec_id", "cid"), "cid")
-    cos = _dot64(F.col("qe"), F.col("ce2")) / F.sqrt(
-        F.col("qn2") * F.col("cn2b")
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid")).select(
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
+    pairs = query_pairs(e, sf_dir, N_DIVERSE_Q).join(assign, "cid").select(
         "qid", "cid", "cell", cos.alias("cos")
     )
     wcell = Window.partitionBy("qid", "cell").orderBy(F.col("cos").desc(), "cid")
@@ -1456,25 +1404,12 @@ def sim_mips_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the transform preserves the ranking (ties broken by cid on
     both sides; the emitted dot is recomputed exactly)."""
     e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < MIPS_QUERIES).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.sqrt(_norm2(F.col("embedding"))).alias("qn"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    m = c.agg(F.max(F.sqrt(F.col("cn2"))).alias("m_norm"))
+    m = e.agg(F.max(F.sqrt(_norm2(F.col("embedding")))).alias("m_norm"))
     # augmented candidate norm is exactly M for every candidate:
     # ||(c, sqrt(M^2-||c||^2))|| = M; the extra query coordinate is 0,
     # so the augmented dot equals the raw dot.
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid")).crossJoin(
-        F.broadcast(m)
-    )
-    dot = _dot64(F.col("qe"), F.col("ce"))
-    cos_aug = dot / (F.col("qn") * F.col("m_norm"))
+    pairs = query_pairs(e, sf_dir, MIPS_QUERIES).crossJoin(F.broadcast(m))
+    cos_aug = F.col("dot") / (F.sqrt(F.col("qn2")) * F.col("m_norm"))
     # rank by (cos_aug, dot, cid): cos_aug is the augmented-space
     # score the reduction actually serves, but IEEE division by the
     # per-query constant can COLLAPSE two dots ~1 ulp apart into one
@@ -1486,9 +1421,7 @@ def sim_mips_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cos_aug").desc(), F.col("dot").desc(), "cid"
     )
     return (
-        pairs.select(
-            "qid", "cid", dot.alias("dot"), cos_aug.alias("cos_aug")
-        )
+        pairs.select("qid", "cid", "dot", cos_aug.alias("cos_aug"))
         .withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= MIPS_K)
         .select("qid", "cid", q4(F.col("dot")).alias("dot"), "rn")
@@ -1897,24 +1830,9 @@ def sim_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine — 64·C output rows regardless of corpus size; looping
     this step is the whole trainer (the classic MapReduce k-means,
     public)."""
-    from .dedup import _dot64, capped_centroids
-
     e = table(spark, sf_dir, "embeddings")
-    cent = capped_centroids(e)
-    vec = e.select(
-        "vec_id", "embedding", _norm2(F.col("embedding")).alias("n2")
-    )
-    pairs = vec.crossJoin(F.broadcast(cent))
-    dist = (
-        F.col("n2")
-        + F.col("cn2")
-        - 2 * _dot64(F.col("embedding"), F.col("ce"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(dist, F.col("cent_id"))
-    assign = (
-        pairs.withColumn("cell_rank", F.row_number().over(w))
-        .where(F.col("cell_rank") == 1)
-        .select("vec_id", "embedding", F.col("cent_id").alias("cell"))
+    assign = cell_ranks(e).where(F.col("cell_rank") == 1).select(
+        "vec_id", "embedding", F.col("cent_id").alias("cell")
     )
     dims = assign.select(
         "cell",
@@ -2114,8 +2032,6 @@ def embed_expert_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring is a JVM fold per (vec, expert), and the per-vec
     softmax/rank windows partition by vec_id — one shuffle of
     (vec × C) skinny rows, rollup to C output rows."""
-    from .dedup import _dot64, capped_centroids
-
     e = table(spark, sf_dir, "embeddings")
     cent = capped_centroids(e).select(
         F.col("cent_id").alias("expert_id"), "ce"
@@ -2232,30 +2148,35 @@ def embed_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub vectors dominate every neighbor list (curse of
     dimensionality) and retrieval quality silently degrades.
 
-    Scale shape: the all-pairs scoring reuses sim_topk_exact's
-    fold (at 100 TB swap the exact graph for the IVF candidates —
-    the diagnostics are identical relational rollups over the edge
-    list); in-degree, moment sums for skewness (Σk, Σk², Σk³ exact
-    integers), and the reciprocity self-join on (q, c) pairs are
-    all bounded by N·k edges."""
-    from .dedup import _dot64, _norm2
-
+    Scale shape: the all-pairs scoring has the whole corpus on both
+    sides, so one side is broadcast and the other goes through
+    ``spread_scan`` — the N² fold runs on every core rather than on
+    the one task a byte-small file plans.  The spread side is the
+    query side: its ``vec_id`` partitioning is the ``qid``
+    partitioning the top-k window needs, so the spread's shuffle is
+    the window's too (at 100 TB swap the exact graph for the IVF
+    candidates — the diagnostics are identical relational rollups
+    over the edge list); in-degree, moment sums for skewness (Σk, Σk²,
+    Σk³ exact integers), and the reciprocity self-join on (q, c) pairs
+    are all bounded by N·k edges."""
     e = table(spark, sf_dir, "embeddings")
-    v = e.select(
-        "vec_id", "embedding", _norm2(F.col("embedding")).alias("n2")
-    )
-    a = v.select(
+    q = spread_scan(e, sf_dir, "embeddings", "vec_id").select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
-        F.col("n2").alias("qn2"),
+        _norm2(F.col("embedding")).alias("qn2"),
     )
-    pairs = a.join(v, F.col("qid") != F.col("vec_id"))
-    cos = _dot64(F.col("qe"), F.col("embedding")) / F.sqrt(
-        F.col("qn2") * F.col("n2")
+    c = e.select(
+        F.col("vec_id").alias("cid"),
+        F.col("embedding").alias("ce"),
+        _norm2(F.col("embedding")).alias("cn2"),
+    )
+    pairs = q.join(F.broadcast(c), F.col("qid") != F.col("cid"))
+    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
+        F.col("qn2") * F.col("cn2")
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "cid")
     edges = (
-        pairs.select("qid", F.col("vec_id").alias("cid"), cos.alias("cos"))
+        pairs.select("qid", "cid", cos.alias("cos"))
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= HUB_K)
         .select("qid", "cid").localCheckpoint(eager=False)
@@ -2396,8 +2317,6 @@ def sim_rocchio_feedback(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum (expanded query and corpus components fixed-point
     quantized; the 1-0.75 mix carried as integer weights 4:3), so no
     float-order tie can flip a rank between engines."""
-    from .dedup import _norm2
-
     e = table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < ROC_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
@@ -2759,23 +2678,10 @@ def sim_reciprocal_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings").where(
         F.col("vec_id") < RNN_BLOCK
     )
-    q = e.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
-        F.col("qn2") * F.col("cn2")
-    )
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "cid")
     knn = reuse(
-        F.broadcast(q)
-        .join(c, F.col("qid") != F.col("cid"))
+        query_pairs(e, sf_dir, RNN_BLOCK)
         .select("qid", "cid", cos.alias("cos"))
         .withColumn("rn", F.row_number().over(w).cast("long"))
         # persist, not checkpoint: reuse across both reciprocal sides
@@ -2879,21 +2785,8 @@ def ml_cluster_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     one assignment pass (broadcast centroid block), a (cell, label)
     contingency aggregate, then metadata-sized folds."""
     e = table(spark, sf_dir, "embeddings")
-    cent = capped_centroids(e)  # (cent_id, ce, cn2)
-    v = e.select(
-        "vec_id", "label", "embedding", _norm2(F.col("embedding")).alias("n2")
-    )
-    d2 = (
-        F.col("n2")
-        + F.col("cn2")
-        - 2 * _dot64(F.col("embedding"), F.col("ce"))
-    )
-    w = Window.partitionBy("vec_id").orderBy(d2.asc(), F.col("cent_id"))
-    assign = (
-        v.crossJoin(F.broadcast(cent))
-        .withColumn("cell_rank", F.row_number().over(w))
-        .where(F.col("cell_rank") == 1)
-        .select("vec_id", "label", F.col("cent_id").alias("cell"))
+    assign = cell_ranks(e).where(F.col("cell_rank") == 1).select(
+        "vec_id", "label", F.col("cent_id").alias("cell")
     )
     cm = assign.groupBy("cell", "label").agg(
         F.count(F.lit(1)).cast("long").alias("c")

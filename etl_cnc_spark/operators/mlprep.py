@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import register, reuse
+from ..llm.dedup import N_QUERIES, query_pairs
 from ..llm.text import EN_STOPWORDS
 from ..utils import cents, q4, sql_q4
 from .prefix import global_ordered, sql_ntile_from_rank
@@ -291,7 +292,6 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------- ranking eval: NDCG/MRR/P@k
 
-NDCG_NQ = 50  # query block: first 50 vectors (matches sim_topk_exact)
 NDCG_K = 5
 _NDCG_Q = 10**9
 # 1/log2(rank+1) position weights, fixed-point quantized so both
@@ -328,7 +328,7 @@ _SQL_IDCG = (
                         x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))
                    AS cos
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {NDCG_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), ranked AS (
         SELECT qid, qlabel, rel,
                CAST(row_number() OVER (PARTITION BY qid
@@ -365,27 +365,11 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     are COMPILE-TIME fixed-point constants (rank bounded by k), so
     DCG sums are exact integers on both engines; the ideal DCG is a
     CASE lookup on the corpus relevant-count. The ranking itself
-    reuses the sim_topk_exact shape — broadcast query block, JVM
-    zip_with/aggregate folds, per-query bounded window."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
-        F.col("qn2") * F.col("cn2")
-    )
+    reads ``query_pairs`` (broadcast query block, spread candidates,
+    JVM zip_with/aggregate folds) through a per-query bounded
+    window."""
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     scored = reuse(pairs.select(
         "qid",
         "cid",
@@ -1445,7 +1429,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- kNN label classifier
 
-KNN_NQ = 50  # query block (matches ml_ndcg_eval / sim_topk_exact)
 KNN_K = 5
 
 
@@ -1464,7 +1447,7 @@ KNN_K = 5
                         x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))
                    AS cos
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {KNN_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), ranked AS (
         SELECT qid, true_label, nlabel,
                row_number() OVER (PARTITION BY qid
@@ -1495,34 +1478,21 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     kNN accuracy that beats the priors means the space encodes the
     labels).
 
-    Scale shape: the sim_topk_exact retrieval template — the bounded
-    query block broadcasts against the corpus, the cosine is the
-    shared JVM zip_with/aggregate fold, the per-query candidate
+    Scale shape: ``query_pairs`` — the bounded query block
+    broadcasts against the corpus, the cosine is the shared JVM
+    zip_with/aggregate fold — then the per-query candidate
     window is bounded (top-{KNN_K}), and voting + argmax are
     per-query aggregates over ≤{KNN_K} rows.  Scaling the query side
     shards the query block; the corpus side stays one scan."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < KNN_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("true_label"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("nlabel"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(
-        F.col("qn2") * F.col("cn2")
-    )
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     wq = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("cid"))
     ranked = pairs.select(
-        "qid", "true_label", "nlabel", cos.alias("cos"), "cid"
+        "qid",
+        F.col("qlabel").alias("true_label"),
+        F.col("clabel").alias("nlabel"),
+        cos.alias("cos"),
+        "cid",
     ).withColumn("rn", F.row_number().over(wq))
     votes = (
         ranked.where(F.col("rn") <= KNN_K)
@@ -2374,7 +2344,7 @@ _MAP_W = [0] + [_MAP_L // i for i in range(1, MAP_K + 1)]  # 1-indexed
                         x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))
                    AS cos
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {NDCG_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), corp AS (
         SELECT qid, CAST(sum(rel) AS BIGINT) AS n_rel_corpus
         FROM scored GROUP BY qid
@@ -2417,26 +2387,11 @@ def ml_map_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; the only double is the final division by
     2520 * min(n_rel_corpus, k).
 
-    Scale shape: identical to sim_topk_exact — broadcast query block,
-    JVM fold dot products, per-query bounded windows (rank and the
+    Scale shape: ``query_pairs`` (broadcast query block, JVM fold
+    dot products), then per-query bounded windows (rank and the
     running hit count both live inside the k=10 rows of one qid)."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     scored = reuse(pairs.select(
         "qid",
         "cid",
@@ -2507,7 +2462,7 @@ for _d in range(RBO_D, 0, -1):
                     x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum')
                   AS cn2
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {NDCG_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), r_cos AS (
         SELECT qid, cid,
                CAST(row_number() OVER (PARTITION BY qid
@@ -2555,25 +2510,9 @@ def ml_rank_biased_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rankings (two bounded per-qid windows over the same frame — one
     shuffle on qid); the fusion join touches 10 rows per query per
     side, exactly like sim_hybrid_rrf's bounded fusion."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
     scored = reuse(pairs.select(
-        "qid",
-        "cid",
-        _dot64(F.col("qe"), F.col("ce")).alias("dot"),
-        (F.col("qn2") * F.col("cn2")).alias("nn"),
+        "qid", "cid", "dot", (F.col("qn2") * F.col("cn2")).alias("nn")
     ))
     w1 = Window.partitionBy("qid").orderBy(
         (F.col("dot") / F.sqrt(F.col("nn"))).desc(), "cid"
@@ -2751,7 +2690,7 @@ _MRR_Q = 1_000_000_000
                         x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))
                    * {_MRR_Q} + 0.5) AS BIGINT) AS cq
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {NDCG_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), ranked AS (
         SELECT qid, rel,
                CAST(row_number() OVER (PARTITION BY qid
@@ -2780,27 +2719,12 @@ def ml_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle keeps the window form; values agree because cosine is
     quantized to 1e-9 before ranking on both engines.
 
-    Scale shape: identical to sim_topk_exact — broadcast 50-query
-    block, JVM fold dot products, then two hash aggregates; no window
+    Scale shape: ``query_pairs`` (broadcast 50-query block, JVM
+    fold dot products), then two hash aggregates; no window
     at all on the Spark side, so nothing depends on per-qid candidate
     counts staying small."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     scored = reuse(pairs.select(
         "qid",
         "cid",
@@ -2867,7 +2791,7 @@ _ERR_TQ = 1_000_000_000_000  # per-position term quantization
                         x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)), 'sum'))
                    * 1000000000 + 0.5) AS BIGINT) AS cq
         FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        WHERE a.vec_id < {NDCG_NQ}
+        WHERE a.vec_id < {N_QUERIES}
     ), ranked AS (
         SELECT qid, rel,
                CAST(row_number() OVER (PARTITION BY qid
@@ -2905,25 +2829,10 @@ def ml_err_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT per position, so the per-query fold is order-free; the
     stop-probability product never materializes as a running float.
 
-    Scale shape: the sim_topk_exact scaffold — broadcast 50-query
-    block, JVM cosine fold, per-query bounded top-10 windows."""
-    from ..llm.dedup import _dot64, _norm2
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < NDCG_NQ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        _norm2(F.col("embedding")).alias("qn2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("cid"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        _norm2(F.col("embedding")).alias("cn2"),
-    )
-    pairs = F.broadcast(q).join(c, F.col("qid") != F.col("cid"))
-    cos = _dot64(F.col("qe"), F.col("ce")) / F.sqrt(F.col("qn2") * F.col("cn2"))
+    Scale shape: ``query_pairs`` (broadcast 50-query block, JVM
+    cosine fold), then per-query bounded top-10 windows."""
+    pairs = query_pairs(table(spark, sf_dir, "embeddings"), sf_dir)
+    cos = F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2"))
     scored = pairs.select(
         "qid",
         "cid",

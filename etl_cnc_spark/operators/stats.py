@@ -9752,22 +9752,26 @@ def stat_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(F.col("event_type") == KS_G1).cast("long").alias("x"),
         F.count_if(F.col("event_type") == KS_G2).cast("long").alias("y"),
     )
-    # ranked grid feeds the moments row and BOTH lag-join sides
-    ranked = calendar_rank(daily, "day")
+    # ranked grid feeds the moments row and BOTH lag-join sides.  x and
+    # y ride in one array column, so both sides read the same columns
+    # of the grid: column pruning then leaves them one single-partition
+    # exchange (reused) instead of one exchange per side
+    ranked = calendar_rank(daily.select("day", F.array("x", "y").alias("xy")), "day")
+    x, y = F.col("xy")[0], F.col("xy")[1]
     m = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        F.sum(x).cast("long").alias("sx"),
+        F.sum(y).cast("long").alias("sy"),
+        F.sum(x * x).cast("long").alias("sxx"),
+        F.sum(y * y).cast("long").alias("syy"),
     )
     lags = spark.range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1).select(
         F.col("id").cast("long").alias("lag")
     )
-    a = ranked.select(
-        F.col("x").alias("xa"), F.col("t").alias("ta")
-    ).crossJoin(F.broadcast(lags))
-    b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
+    a = ranked.select(x.alias("xa"), F.col("t").alias("ta")).crossJoin(
+        F.broadcast(lags)
+    )
+    b = ranked.select(y.alias("yb"), F.col("t").alias("tb"))
     ct = (
         a.join(b, F.col("tb") == F.col("ta") + F.col("lag"))
         .groupBy("lag")
@@ -10370,19 +10374,16 @@ def stat_cointegration_eg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "b",
     )
+    # n and b are constants of the grid; taking them from both lag-join
+    # sides keeps the sides' columns equal, so column pruning leaves one
+    # single-partition exchange (reused) instead of one exchange per side
     ranked = calendar_rank(resid, "day")
-    a_ = ranked.select(
-        F.col("u").alias("ua"),
-        F.col("t").alias("ta"),
-        F.col("n").alias("n"),
-        F.col("b").alias("bb"),
-    )
-    b_ = ranked.select(F.col("u").alias("ub"), F.col("t").alias("tb"))
-    pairs = a_.join(b_, F.col("tb") == F.col("ta") - 1).select(
-        (F.col("ua") - F.col("ub")).alias("du"),
-        F.col("ub").alias("ul"),
-        "n",
-        "bb",
+    a_, b_ = ranked.alias("a"), ranked.alias("b")
+    pairs = a_.join(b_, F.col("b.t") == F.col("a.t") - 1).select(
+        (F.col("a.u") - F.col("b.u")).alias("du"),
+        F.col("b.u").alias("ul"),
+        F.greatest("a.n", "b.n").alias("n"),
+        F.greatest("a.b", "b.b").alias("bb"),
     )
     uld = F.col("ul").cast(dec)
     dud = F.col("du").cast(dec)

@@ -14,6 +14,8 @@ from etl_cnc_spark.registry import load_all
 
 REGISTRY = load_all()
 
+from etl_cnc_spark.llm import similarity as _sim  # noqa: E402  (after load_all: registry order)
+
 
 def plan_of(key: str, spark, sf_dir: str) -> str:
     df = REGISTRY[key].build(spark, sf_dir)
@@ -1038,3 +1040,67 @@ def test_q21_has_no_expand(spark, sf_dir):
     assert node_count(plan, "Expand") == 0, plan
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan, plan
+
+
+# key -> the size nq of the query block it scores through query_pairs
+QUERY_PAIRS = {
+    **dict.fromkeys(
+        ("sim_topk_exact", "sim_range_search", "ml_ndcg_eval", "ml_map_at_k",
+         "ml_mrr", "ml_err_at_k", "ml_rank_biased_overlap", "ml_knn_classifier"),
+        _sim.N_QUERIES,
+    ),
+    "sim_topk_diverse": _sim.N_DIVERSE_Q,
+    "sim_mips_transform": _sim.MIPS_QUERIES,
+    "sim_reciprocal_nn": _sim.RNN_BLOCK,
+}
+
+
+def _children(lines: list[str], at: int) -> list[list[str]]:
+    """The subtrees of the direct children of the tree-string node on
+    ``lines[at]``, in plan order."""
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    below = []
+    for line in lines[at + 1:]:
+        if col(line) <= col(lines[at]):
+            break
+        below.append(line)
+    top = min(col(line) for line in below)
+    starts = [i for i, line in enumerate(below) if col(line) == top]
+    return [below[a:b] for a, b in zip(starts, starts[1:] + [len(below)])]
+
+
+@pytest.mark.parametrize("key", sorted(QUERY_PAIRS))
+def test_query_pairs_broadcast_block_spread_candidates(key, spark, sf_dir):
+    """Every exact query-block scan is ``dedup.query_pairs``: in the
+    executed plan (built and collected; a reused frame's cached plan
+    included) each ``qid != cid`` nested-loop join broadcasts the query
+    block ``vec_id < nq`` and reads the candidates through the
+    ``spread_scan`` exchange ``hashpartitioning(vec_id, …)``."""
+    df = REGISTRY[key].build(spark, sf_dir)
+    df.collect()
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    joins = [
+        i for i, line in enumerate(lines)
+        if "BroadcastNestedLoopJoin BuildLeft" in line and "NOT (qid#" in line
+    ]
+    assert joins, "\n".join(lines)
+    block = re.compile(rf"\(vec_id#\d+L? < {QUERY_PAIRS[key]}\)")
+    for at in joins:
+        query, cand = ("\n".join(side) for side in _children(lines, at))
+        assert "BroadcastExchange" in query and block.search(query), query
+        assert "Exchange hashpartitioning(vec_id#" in cand, cand
+        assert "BroadcastExchange" not in cand, cand
+
+
+@pytest.mark.parametrize("key", ["stat_ccf", "stat_cointegration_eg"])
+def test_lag_join_sides_share_one_exchange(key, spark, sf_dir):
+    """Both sides of the lag self-join read the same columns of the
+    ranked calendar grid, so the second side reuses the first side's
+    single-partition exchange instead of shuffling the grid again."""
+    df = REGISTRY[key].build(spark, sf_dir)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("== Initial Plan ==")[0]
+    assert re.search(r"ReusedExchange \[.*\], Exchange SinglePartition", final), final

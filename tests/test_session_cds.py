@@ -84,6 +84,10 @@ def _written(cache) -> list[str]:
     return sorted(os.listdir(d)) if os.path.isdir(d) else []
 
 
+def _archives(cache) -> list[str]:
+    return [os.path.join(cache, "etl_cnc_spark", f) for f in _written(cache) if f.endswith(".jsa")]
+
+
 def _base_archive_size() -> int:
     return os.path.getsize(os.path.join(os.environ["JAVA_HOME"], "lib", "server", "classes.jsa"))
 
@@ -113,13 +117,17 @@ def test_first_session_dumps_and_next_maps(tmp_path, install_allows_cds):
     first = _driver(tmp_path)
     assert first["count"] == 3 and first["dumps"] == 1
     assert "-XX:+RecordDynamicDumpInfo" in first["args"]
-    archives = [f for f in _written(tmp_path) if f.endswith(".jsa")]
+    archives = _archives(tmp_path)
     assert len(archives) == 1, _written(tmp_path)
+    mtime = os.stat(archives[0]).st_mtime_ns
 
-    second = _driver(tmp_path)
-    assert second["count"] == 3 and second["dumps"] == 0
-    assert any(a.startswith("-XX:SharedArchiveFile=") for a in second["args"])
-    assert second["mapped"] > _base_archive_size(), second["mapped"]
+    for _ in range(2):  # a mapped archive is kept as it is
+        run = _driver(tmp_path)
+        assert run["count"] == 3 and run["dumps"] == 0
+        assert any(a.startswith("-XX:SharedArchiveFile=") for a in run["args"])
+        assert run["mapped"] > _base_archive_size(), run["mapped"]
+        assert _archives(tmp_path) == archives
+        assert os.stat(archives[0]).st_mtime_ns == mtime
 
 
 def test_opted_out_install_starts_with_todays_options(tmp_path, install_allows_cds):
@@ -138,6 +146,14 @@ def test_truncated_archive_falls_back(tmp_path, install_allows_cds):
     assert run["count"] == 3 and run["dumps"] == 0
     assert any(a.startswith("-XX:SharedArchiveFile=") for a in run["args"])
     assert run["mapped"] <= _base_archive_size(), run["mapped"]
+    assert _archives(tmp_path) == [], _written(tmp_path)  # the JVM skipped it: gone
+
+    redump = _driver(tmp_path)
+    assert redump["count"] == 3 and redump["dumps"] == 1
+    assert len(_archives(tmp_path)) == 1, _written(tmp_path)
+    fresh = _driver(tmp_path)
+    assert fresh["count"] == 3 and fresh["dumps"] == 0
+    assert fresh["mapped"] > _base_archive_size(), fresh["mapped"]
 
 
 def test_restart_in_one_process_dumps_once(tmp_path, install_allows_cds):
